@@ -471,54 +471,6 @@ object Profile {
           val tExec = (System.nanoTime() - t0) / 1e9
           println(f"PROFILE workload u=$u plan=$tPlan%.3f exec=$tExec%.3f")
         }
-      case "serveprobe" =>
-        // cached-view vs parquet-view serving, interleaved in ONE JVM so
-        // machine drift can't masquerade as a regression: the full public
-        // recommend() flow (catalog hit + view route + semi join + top-10)
-        import org.apache.spark.sql.functions._
-        import graft.recdb.{RecCatalog, Recommender}
-        val c = Tables.ratingCols
-        val r = Tables.ratings(spark, sfDir).cache()
-        val users = r.select(col(c.user)).distinct()
-          .orderBy(col(c.user)).collect().map(_.getLong(0))
-        val base = java.nio.file.Files.createTempDirectory("serveprobe").toString
-        val cat = new RecCatalog(s"$base/catalog")
-        val tag = s"events@$sfDir"
-        Recommender.create(spark, "sp", r, tag, c, "itemCosCF", cat, s"$base/models")
-        Recommender.materializeView(spark, "sp", r, cat, s"$base/views")
-        val rnd = new scala.util.Random(42)
-        def run(n: Int, cached: Boolean): Double = {
-          val t0 = System.nanoTime()
-          (1 to n).foreach { _ =>
-            val u = users(rnd.nextInt(users.length))
-            val uf = r.where(col(c.user) === u).select(col(c.user)).distinct()
-            val df = if (cached)
-              Recommender.recommend(spark, r, tag, c, "itemCosCF", Some(cat), Some(uf))
-            else {
-              val e = cat.get("sp").get
-              val v = spark.read.parquet(e.viewPath.get)
-              v.join(broadcast(uf), Seq(c.user), "semi")
-            }
-            df.orderBy(col("score").desc, col(c.item)).limit(10).count()
-          }
-          n / ((System.nanoTime() - t0) / 1e9)
-        }
-        def runPoint(n: Int): Double = {
-          val t0 = System.nanoTime()
-          (1 to n).foreach { _ =>
-            val u = users(rnd.nextInt(users.length))
-            Recommender.recommendTopK(spark, r, tag, c, "itemCosCF",
-              Some(cat), userId = u, k = 10).count()
-          }
-          n / ((System.nanoTime() - t0) / 1e9)
-        }
-        run(5, cached = true); run(5, cached = false); runPoint(5) // warm all
-        for (_ <- 1 to reps) {
-          val qc = run(20, cached = true)
-          val qp = run(20, cached = false)
-          val pt = runPoint(20)
-          println(f"PROFILE serveprobe point=$pt%.2f q/s semijoin-cached=$qc%.2f q/s semijoin-parquet=$qp%.2f q/s")
-        }
       case s if s.startsWith("knngraph_nlist") =>
         // The kNN-graph IVF cost model, demonstrated: at a FIXED quantizer
         // the within-cell candidate volume grows quadratically with the
@@ -591,31 +543,6 @@ object Profile {
           f"pq5=$tP%.1fs($nP) ivf100=$tI100%.1fs ivf_qps=${100.0 / tI100}%.1f " +
           f"ivf100_pretrained=$tIs%.1fs(${100.0 / tIs}%.1fq/s) " +
           f"pq100_precoded=$tPs%.1fs(${100.0 / tPs}%.1fq/s)")
-      case "recviewstages" =>
-        // stage costs of the full create→materialize→serve cycle that
-        // r_recview_topk (and the bench workload protocol) pays
-        import graft.recdb.{RecCatalog, Recommender}
-        import org.apache.spark.sql.functions._
-        (1 to reps).foreach { _ =>
-          val base = java.nio.file.Files.createTempDirectory("graft_rvs").toString
-          val catalog = new RecCatalog(s"$base/catalog")
-          val r = Tables.ratings(spark, sfDir).cache()
-          r.count()
-          def t(body: => Any): Double = {
-            val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-          }
-          val tCreate = t(Recommender.create(spark, "rv", r, s"events@$sfDir",
-            Tables.ratingCols, "itemCosCF", catalog, s"$base/models"))
-          val tView = t(Recommender.materializeView(spark, "rv", r, catalog,
-            s"$base/views"))
-          val tServe = t {
-            val v = Recommender.recommendFromView(spark, "rv", catalog).get
-            v.where(col("userid") === 1L)
-              .orderBy(col("score").desc, col("itemid")).limit(10).collect()
-          }
-          println(f"PROFILE recviewstages create=$tCreate%.2f " +
-            f"view=$tView%.2f serve=$tServe%.2f")
-        }
       case "denseingest" =>
         // Micro-decomposition of the ANN dense-leg processBatch: embedding
         // compute vs cell assignment vs the cell-partitioned write.

@@ -81,14 +81,10 @@ final class IncrementalMaintainer(
             Recommender.buildSimilarity(events, c, m), m, entry.neighborhood)
           .write.mode("overwrite").parquet(entry.modelPaths.head)
     }
-    // a rebuilt model invalidates any materialized prediction view, and the
-    // CREATE-time corpus stats (they drive the job-free strategy pick) are
-    // re-measured against the grown events store
-    entry.viewPath.foreach { p =>
-      Recommender.deleteViewVersions(p, keepFrom = Long.MaxValue)
-    }
-    // exact total (threshold anchor) + approximate distincts (cost-model
-    // inputs only — same trade as Recommender.create)
+    // the CREATE-time corpus stats (they drive the job-free strategy pick)
+    // are re-measured against the grown events store: exact total
+    // (threshold anchor) + approximate distincts (cost-model inputs only —
+    // same trade as Recommender.create)
     val st = events.agg(
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)),
@@ -103,6 +99,13 @@ final class IncrementalMaintainer(
     catalog.put(entry.copy(updateCounter = 0, eventTotal = st.getLong(0),
       viewPath = None, viewComplete = false, viewTopK = -1L,
       nUsers = st.getLong(1), nItems = st.getLong(2), modelRows = modelRows))
+    // a rebuilt model invalidates any materialized prediction view. Its
+    // files go only after the catalog stops naming them, so point reads
+    // keep serving the pre-rebuild view through the retrain instead of
+    // failing on a missing path
+    entry.viewPath.foreach { p =>
+      Recommender.deleteViewVersions(p, keepFrom = Long.MaxValue)
+    }
   }
 
   /** Attach to a streaming events DataFrame: the R17 hook as a sink. */

@@ -1,6 +1,6 @@
 package graft.recdb
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Properties
 import scala.jdk.CollectionConverters._
 
@@ -150,11 +150,29 @@ final class RecCatalog(dirStr: String) {
     p.setProperty("nItems", e.nItems.toString)
     p.setProperty("modelRows", e.modelRows.toString)
     p.setProperty("neighborhood", e.neighborhood.toString)
-    val out = Files.newOutputStream(file(e.name))
-    try p.store(out, "graft recommender catalog entry") finally out.close()
+    // write, then rename over the entry: a concurrent get never reads a
+    // truncated file (list() skips the .tmp name)
+    val tmp = Files.createTempFile(dir, s".${e.name}.", ".tmp")
+    try {
+      val out = Files.newOutputStream(tmp)
+      try p.store(out, "graft recommender catalog entry") finally out.close()
+      RecCatalog.writes.synchronized {
+        Files.move(tmp, file(e.name), StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally { Files.deleteIfExists(tmp); () }
   }
 
-  def delete(name: String): Boolean = Files.deleteIfExists(file(name))
+  /** Read-modify-write of one entry, atomic against every other entry
+    * write or delete in this JVM — a point read's R18 query-counter bump
+    * must not put back a view pointer that a concurrent materialization or
+    * rebuild just replaced, nor a dropped entry.
+    */
+  def update(name: String)(f: RecEntry => RecEntry): Unit =
+    RecCatalog.writes.synchronized { get(name).foreach(e => put(f(e))) }
+
+  def delete(name: String): Boolean =
+    RecCatalog.writes.synchronized(Files.deleteIfExists(file(name)))
 
   private def propsFile: Path = dir.resolve("_recdbproperties")
 
@@ -186,4 +204,11 @@ final class RecCatalog(dirStr: String) {
     try p.store(out, "graft RecDBProperties (utility.c:903-908)")
     finally out.close()
   }
+}
+
+object RecCatalog {
+  /** Orders entry writes against [[RecCatalog.update]]; JVM-wide, because
+    * several catalog objects may share one directory.
+    */
+  private val writes = new Object
 }

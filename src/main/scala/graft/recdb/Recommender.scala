@@ -131,9 +131,7 @@ object Recommender {
       serveFromView: Boolean = true): DataFrame = {
     val method = RecMethod.parse(methodStr)
     val hit = catalog.flatMap(_.findByTagAndMethod(eventsTag, method))
-    hit.foreach { e => // R18 query-counter bookkeeping
-      catalog.get.put(e.copy(queryCounter = e.queryCounter + 1))
-    }
+    hit.foreach(e => bumpQueryCounter(catalog.get, e.name))
     // serving fast path: a FRESH, COMPLETE materialized view holds exactly
     // the frame this call would compute — serve the filter from it instead
     // of re-planning the scoring DAG per query. Freshness is catalog-driven:
@@ -155,9 +153,18 @@ object Recommender {
     }
   }
 
-  /** Serving cache: the per-query cost of the view fast path is re-decoding
-    * the same parquet bytes, so the view frame is cached per (session, path)
-    * and every query after the first scans Tungsten pages instead of files.
+  /** R18 query-counter bookkeeping (RecScan init, execRecommend.c:831). */
+  private def bumpQueryCounter(catalog: RecCatalog, name: String): Unit =
+    catalog.update(name)(e => e.copy(queryCounter = e.queryCounter + 1))
+
+  /** Serving cache: one entry per (session, view version), holding up to
+    * two serving forms of that version, each built on first use:
+    *
+    *   - `frame`: the view cached as Tungsten pages, so a Spark-path query
+    *     scans memory instead of re-decoding parquet;
+    *   - `resident`: the driver-resident [[ResidentTopK]] index that point
+    *     queries answer from with no Spark job at all.
+    *
     * Safe by construction: [[materializeView]] bakes the view VERSION into
     * the path, so a re-materialization gets a new key and the old entry is
     * explicitly invalidated (unpersist + remove) wherever a view dies —
@@ -170,13 +177,20 @@ object Recommender {
     * must not thrash every hot view. Keyed by the session's stable UUID, not
     * its identity hash (which can alias after a session is GC'd).
     */
-  private[recdb] val ServedViewBound: Int =
-    sys.env.getOrElse("GRAFT_SERVED_VIEW_BOUND", "16").toInt
+  private[recdb] val ServedViewBound: Int = 16
+
+  /** Fields are read and written under the `servedViews` lock. */
+  private final class Served {
+    var frame: DataFrame = _
+    // null until first loaded; None when the view is not resident-servable
+    var resident: Option[ResidentTopK] = _
+    def unpersist(): Unit = if (frame != null) { frame.unpersist(); () }
+  }
 
   private val servedViews =
-    new java.util.LinkedHashMap[String, DataFrame](32, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Served](32, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
+          e: java.util.Map.Entry[String, Served]): Boolean =
         if (size > ServedViewBound) { e.getValue.unpersist(); true } else false
     }
 
@@ -186,21 +200,51 @@ object Recommender {
   private val sessionIds =
     new java.util.WeakHashMap[SparkSession, String]()
 
-  private def sessionKey(spark: SparkSession): String =
+  private def viewKey(spark: SparkSession, path: String): String =
     sessionIds.synchronized {
       sessionIds.computeIfAbsent(spark,
         _ => java.util.UUID.randomUUID().toString)
-    }
+    } + ":" + path
 
-  private[recdb] def servedView(spark: SparkSession, c: EventCols,
-      path: String): DataFrame = servedViews.synchronized {
-    val key = s"${sessionKey(spark)}:$path"
+  // caller holds the servedViews lock
+  private def servedEntry(key: String): Served = {
     val hit = servedViews.get(key)
     if (hit != null) hit
+    else { val s = new Served; servedViews.put(key, s); s }
+  }
+
+  private[recdb] def servedView(spark: SparkSession, c: EventCols,
+      path: String): DataFrame = {
+    val key = viewKey(spark, path)
+    servedViews.synchronized {
+      val s = servedEntry(key)
+      if (s.frame == null)
+        s.frame = spark.read.schema(viewSchema(c)).parquet(path).cache()
+      s.frame
+    }
+  }
+
+  /** The view version's resident index, loaded on first use; None when
+    * the view is not resident-servable (over `cap` rows, or holding a
+    * null). The load — a few Spark jobs, once per version — runs outside
+    * the map's lock; its result is kept only if the entry was not
+    * invalidated or evicted meanwhile, and the racing query still answers
+    * from the version it resolved, as a Spark-path frame would.
+    */
+  private[recdb] def residentTopK(spark: SparkSession, c: EventCols,
+      path: String, cap: Int = ResidentTopK.RowCap): Option[ResidentTopK] = {
+    val key = viewKey(spark, path)
+    val (s, known) = servedViews.synchronized {
+      val s = servedEntry(key); (s, s.resident)
+    }
+    if (known != null) known
     else {
-      val df = spark.read.schema(viewSchema(c)).parquet(path).cache()
-      servedViews.put(key, df)
-      df
+      val loaded = ResidentTopK.load(
+        spark.read.schema(viewSchema(c)).parquet(path), cap)
+      servedViews.synchronized {
+        if (servedViews.get(key) eq s) s.resident = loaded
+      }
+      loaded
     }
   }
 
@@ -221,12 +265,19 @@ object Recommender {
     * session (spec hook for the LRU behavior).
     */
   private[recdb] def servedViewCached(path: String): Boolean =
+    servedEntries(path).nonEmpty
+
+  /** True if `path` has a loaded resident index for any session (spec hook). */
+  private[recdb] def residentLoaded(path: String): Boolean =
+    servedEntries(path).exists(s => s.resident != null && s.resident.isDefined)
+
+  private def servedEntries(path: String): Seq[Served] = {
+    import scala.jdk.CollectionConverters._
     servedViews.synchronized {
-      val it = servedViews.keySet().iterator()
-      var found = false
-      while (it.hasNext && !found) found = it.next().endsWith(s":$path")
-      found
+      servedViews.entrySet().asScala.iterator
+        .filter(_.getKey.endsWith(s":$path")).map(_.getValue).toList
     }
+  }
 
   private def recommendCompute(spark: SparkSession, events: DataFrame,
       c: EventCols, method: RecMethod, hit: Option[RecEntry],
@@ -355,42 +406,56 @@ object Recommender {
   /** Serve predictions from the materialized view if present. */
   def recommendFromView(spark: SparkSession, name: String,
       catalog: RecCatalog): Option[DataFrame] =
-    catalog.get(name).flatMap(_.viewPath).map(spark.read.parquet(_))
+    catalog.get(name).flatMap { e =>
+      e.viewPath.map(spark.read.schema(
+        viewSchema(EventCols(e.userCol, e.itemCol, e.ratingCol))).parquet(_))
+    }
 
   /** The reference's primary query shape (rec_workload.c: single-user top-k
-    * RECOMMEND) as a first-class point query. On a fresh COMPLETE view this
-    * is a pushed `user = ?` filter over the user-clustered (cached) view —
-    * row-group/batch stats prune to one user's rows, no join, one job —
-    * instead of the scoring DAG or a view-wide semi join. Falls back to the
-    * computed path ([[recommend]]) when no complete view exists.
+    * RECOMMEND) as a first-class point query. A view serves it when it is
+    * COMPLETE or a top-k cut at least k deep (the catalog-recorded viewTopK
+    * makes the routing pure; at 100× scale the O(users×k) top-k view is the
+    * only materializable serving artifact). The answer comes from the first
+    * of:
+    *
+    *   1. the view's [[ResidentTopK]] index: at most k rows, already
+    *      ranked, as a local relation — collecting it runs no Spark job;
+    *   2. a view over the resident cap: a pushed `user = ?` filter over the
+    *      user-clustered cached view (batch stats prune to one user's rows);
+    *   3. no view deep enough: the computed path, scoped to the one user.
+    *
+    * Freshness, as for complete-view [[recommend]]: a view serves the
+    * predictions of its last materialization. The R17 rebuild drops it; an
+    * append below the threshold shows after the next [[materializeView]].
+    *
+    * `events` is evaluated only when the query computes: resolving a table
+    * over parquet infers its schema with a Spark job, which a view-served
+    * read must not pay.
     */
-  def recommendTopK(spark: SparkSession, events: DataFrame, eventsTag: String,
+  def recommendTopK(spark: SparkSession, events: => DataFrame, eventsTag: String,
       c: EventCols, methodStr: String, catalog: Option[RecCatalog],
       userId: Long, k: Int = 10): DataFrame = {
+    require(k >= 0, s"k must be >= 0, got $k")
     val method = RecMethod.parse(methodStr)
     val hit = catalog.flatMap(_.findByTagAndMethod(eventsTag, method))
-    hit.foreach { e => // R18 bookkeeping, same as [[recommend]]
-      catalog.get.put(e.copy(queryCounter = e.queryCounter + 1))
-    }
-    // a view serves the point query when it is COMPLETE, or when it is a
-    // top-k cut deep enough for this query (k <= materialized k) — the
-    // catalog-recorded viewTopK makes the routing decision pure. At 100×
-    // scale the top-k view is the only materializable serving artifact
-    // (O(users×k) rows, not O(users×items)), so this branch is the scale
-    // path, not an optimization.
-    val freshView = hit.filter(e => e.viewPath.isDefined &&
-      (e.viewComplete || e.viewTopK >= k))
-    val scores = freshView match {
-      // an equality predicate — not a semi join against a 1-row frame —
-      // is what reaches the parquet row-group / cached-batch stats
-      case Some(e) =>
-        servedView(spark, c, e.viewPath.get).where(col(c.user) === userId)
+    hit.foreach(e => bumpQueryCounter(catalog.get, e.name))
+    def ranked(scores: DataFrame): DataFrame =
+      scores.orderBy(col("score").desc, col(c.item)).limit(k)
+    hit.filter(e => e.viewPath.isDefined &&
+        (e.viewComplete || e.viewTopK >= k)).map(_.viewPath.get) match {
+      case Some(path) => residentTopK(spark, c, path) match {
+        case Some(index) => index.topK(spark, userId, k)
+        case None =>
+          ranked(servedView(spark, c, path).where(col(c.user) === userId))
+      }
       case None =>
-        import spark.implicits._
-        recommendCompute(spark, events, c, method, hit,
-          Some(Seq(userId).toDF(c.user)), None)
+        val ev = events
+        // the one-user scope as the RECOMMEND clause's user-qual builds it
+        val users = ev.select(col(c.user)).where(col(c.user) === userId)
+          .distinct()
+        ranked(recommendCompute(spark, ev, c, method, hit, Some(users),
+          Some(1L)))
     }
-    scores.orderBy(col("score").desc, col(c.item)).limit(k)
   }
 
   /** Persisted model-table schemas — the engine contract for catalog-hit

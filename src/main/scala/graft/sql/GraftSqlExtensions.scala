@@ -36,7 +36,9 @@ import graft.recdb.{EventCols, RecCatalog, Recommender}
   * during analysis. Consequences:
   *   - EXPLAIN of a RECOMMEND query plans but never executes scoring; on the
   *     materialized (catalog-hit) path the strategy pick reads CREATE-time
-  *     stats from the catalog, so EXPLAIN runs ZERO Spark jobs;
+  *     stats from the catalog, so EXPLAIN runs ZERO Spark jobs (the legacy
+  *     `RECOMMEND(k)` form over a view loads the view's resident index at
+  *     the first analysis that reads a view version, once);
   *   - a RECOMMEND keyword inside a string literal cannot trigger the clause
   *     (literals are masked before the clause patterns run);
   *   - no temp views are registered — the splice is a plan substitution.
@@ -771,17 +773,15 @@ object GraftSql {
         require(s.userCol.equalsIgnoreCase(e.userCol),
           s"legacy RECOMMEND qualifier '${s.userCol}' must be the " +
             s"recommender's user column '${e.userCol}'")
-        val events = session.table(e.eventsTag)
-        val c = EventCols(e.userCol, e.itemCol, e.ratingCol)
-        val users = events.select(col(e.userCol))
-          .where(col(e.userCol) === s.userId).distinct()
-        val top = Recommender
-          .recommend(session, events, e.eventsTag, c, e.method.name,
-            Some(cat), Some(users), scoredUsersHint = Some(1L))
-          .orderBy(col("score").desc, col(e.itemCol))
-          .limit(s.k)
+        // the point query: served from the recommender's view (resident
+        // index, zero jobs) when one is deep enough, else computed — the
+        // events table is resolved only then
+        Recommender
+          .recommendTopK(session, session.table(e.eventsTag), e.eventsTag,
+            EventCols(e.userCol, e.itemCol, e.ratingCol), e.method.name,
+            Some(cat), s.userId, s.k)
           .select(col(e.userCol), col(e.itemCol), col("score").as(e.ratingCol))
-        top.queryExecution.analyzed
+          .queryExecution.analyzed
       case s: StateReadSpec =>
         import graft.streaming.{AnnIndexMaintainer, CurateMaintainer,
           SearchIndexMaintainer, ShardMaintainer, SnapshotManifest}

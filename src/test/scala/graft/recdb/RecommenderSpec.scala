@@ -17,6 +17,33 @@ class RecommenderSpec extends SparkSpec {
     (new RecCatalog(s"$base/catalog"), s"$base/models")
   }
 
+  /** Answer rows as (user, item, score), in order. */
+  def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().toSeq.map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+
+  /** Same ranking as a computed answer: the same ids in the same order, and
+    * scores equal up to last-bit drift — a view is materialized by the
+    * all-users scoring strategy, and a one-user compute may pick another
+    * that sums in a different order.
+    */
+  def sameRanking(got: Seq[(Long, Long, Double)],
+      computed: Seq[(Long, Long, Double)]): Unit = {
+    got.map(x => (x._1, x._2)) shouldBe computed.map(x => (x._1, x._2))
+    got.zip(computed).foreach { case (g, w) => g._3 shouldBe w._3 +- 1e-12 }
+  }
+
+  /** True when `df` is answered from a resident index: a bare local scan. */
+  def servedResident(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]
+
+  /** 24 users x 10 items, each user rating 7-8 items with 1-5 stars: every
+    * user gets 10 predictions, enough to rank below a top-8 cut.
+    */
+  def denser = (for {
+    u <- 1L to 24L; i <- 1L to 10L if (u * 7 + i * 3) % 4 != 0
+  } yield (u, i, (1 + (u * i) % 5).toDouble)).toDF("userid", "itemid", "rating")
+
   test("method parsing: case-insensitive, default itemCosCF, invalid errors") {
     RecMethod.parse("ItemCosCF") shouldBe RecMethod.ItemCosCF
     RecMethod.parse("USERPEARCF") shouldBe RecMethod.UserPearCF
@@ -152,9 +179,9 @@ class RecommenderSpec extends SparkSpec {
     served.queryExecution.executedPlan.collectWithSubqueries {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     } shouldBe Nil
-    // identical rows, scores, and order
-    served.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))) shouldBe
-      computed.map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+    // identical rows and order, scores up to strategy drift
+    sameRanking(rows(served),
+      computed.toSeq.map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))))
   }
 
   test("recommendTopK serves from a top-k view when k <= stored k; deeper k falls back") {
@@ -163,7 +190,7 @@ class RecommenderSpec extends SparkSpec {
     Recommender.create(spark, "tk", r, "tbltk", c, "itemcoscf", cat, models)
     val computed3 = Recommender.recommendTopK(spark, r, "tbltk", c, "itemcoscf",
       Some(cat), userId = 2L, k = 3).collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+      .toSeq.map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
     Recommender.materializeView(spark, "tk", r, cat, models + "/views",
       topK = Some(3))
     cat.get("tk").get.viewTopK shouldBe 3L
@@ -177,20 +204,19 @@ class RecommenderSpec extends SparkSpec {
         }
       }.flatten.exists(_.contains(".view.v"))
     }
-    // k at/below the stored cut: served from the view, join-free, identical
+    // k at/below the stored cut: served from the view's resident index,
+    // join-free, identical
     val served = Recommender.recommendTopK(spark, r, "tbltk", c, "itemcoscf",
       Some(cat), userId = 2L, k = 3)
-    viewScanned(served) shouldBe true
+    servedResident(served) shouldBe true
     served.queryExecution.executedPlan.collectWithSubqueries {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     } shouldBe Nil
-    served.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))) shouldBe
-      computed3
+    sameRanking(rows(served), computed3)
     val served2 = Recommender.recommendTopK(spark, r, "tbltk", c, "itemcoscf",
       Some(cat), userId = 2L, k = 2)
-    viewScanned(served2) shouldBe true
-    served2.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))) shouldBe
-      computed3.take(2)
+    servedResident(served2) shouldBe true
+    sameRanking(rows(served2), computed3.take(2))
     // k deeper than the stored cut: a 3-deep view cannot answer top-4 —
     // must fall back to compute (and be right)
     val deep = Recommender.recommendTopK(spark, r, "tbltk", c, "itemcoscf",
@@ -212,6 +238,138 @@ class RecommenderSpec extends SparkSpec {
     val rb = rebuilt.collect()
     rb.length shouldBe 3
     rb.map(_.getLong(0)).distinct.toSeq shouldBe Seq(2L)
+  }
+
+  test("resident index: every user's answer equals the cached-view filter and compute") {
+    import org.apache.spark.sql.functions._
+    val (cat, models) = freshDirs()
+    val r = denser
+    val viewK = 8
+    Recommender.create(spark, "dx", r, "tbldx", c, "itemcoscf", cat, models)
+    val path = Recommender.materializeView(spark, "dx", r, cat,
+      models + "/views", topK = Some(viewK))
+    val view = Recommender.servedView(spark, c, path)
+    def ranked(df: org.apache.spark.sql.DataFrame, k: Int) =
+      df.orderBy(col("score").desc, col("itemid")).limit(k)
+    (1L to 24L).foreach { u =>
+      // compute: the scoring path for this one user, the view bypassed
+      val computed = rows(ranked(Recommender.recommend(spark, r, "tbldx", c,
+        "itemcoscf", Some(cat), Some(Seq(u).toDF("userid")),
+        serveFromView = false), viewK))
+      computed.size shouldBe viewK
+      Seq(1, 5, viewK).foreach { k =>
+        val served = Recommender.recommendTopK(spark, r, "tbldx", c,
+          "itemcoscf", Some(cat), userId = u, k = k)
+        servedResident(served) shouldBe true
+        val got = rows(served)
+        withClue(s"user $u, k $k: ") {
+          got shouldBe rows(ranked(view.where(col("userid") === u), k))
+          sameRanking(got, computed.take(k))
+        }
+      }
+    }
+    // a user absent from the view: empty on every route
+    val absent = Recommender.recommendTopK(spark, r, "tbldx", c, "itemcoscf",
+      Some(cat), userId = 999L, k = 5)
+    servedResident(absent) shouldBe true
+    rows(absent) shouldBe Nil
+    rows(view.where(col("userid") === 999L)) shouldBe Nil
+    rows(Recommender.recommend(spark, r, "tbldx", c, "itemcoscf", Some(cat),
+      Some(Seq(999L).toDF("userid")), serveFromView = false)) shouldBe Nil
+  }
+
+  test("resident path: recommendTopK collects with zero Spark jobs") {
+    val (cat, models) = freshDirs()
+    val r = ratings
+    Recommender.create(spark, "zj", r, "tblzj", c, "itemcoscf", cat, models)
+    // control: without a view the point query computes, with jobs
+    jobsRunBy(Recommender.recommendTopK(spark, r, "tblzj", c, "itemcoscf",
+      Some(cat), userId = 1L, k = 2).collect()) should be > 0
+    Recommender.materializeView(spark, "zj", r, cat, models + "/views",
+      topK = Some(2))
+    // the first read of a view version loads its index
+    Recommender.recommendTopK(spark, r, "tblzj", c, "itemcoscf", Some(cat),
+      userId = 1L, k = 2).collect()
+    jobsRunBy(Recommender.recommendTopK(spark, r, "tblzj", c, "itemcoscf",
+      Some(cat), userId = 2L, k = 2).collect()) shouldBe 0
+  }
+
+  test("resident index is dropped on re-materialization, DROP and R17 rebuild") {
+    val (cat, models) = freshDirs()
+    val r = ratings
+    Recommender.create(spark, "rd", r, "tblrd", c, "itemcoscf", cat, models)
+    def read() = Recommender.recommendTopK(spark, r, "tblrd", c, "itemcoscf",
+      Some(cat), userId = 2L, k = 2)
+    val v1 = Recommender.materializeView(spark, "rd", r, cat,
+      models + "/views", topK = Some(2))
+    val before = read()
+    Recommender.residentLoaded(v1) shouldBe true
+    val expected = rows(before)
+    // re-materialization drops the old version's entry; a frame obtained
+    // before the swap still collects
+    val v2 = Recommender.materializeView(spark, "rd", r, cat,
+      models + "/views", topK = Some(2))
+    Recommender.residentLoaded(v1) shouldBe false
+    rows(before) shouldBe expected
+    rows(read()) shouldBe expected
+    Recommender.residentLoaded(v2) shouldBe true
+    // the R17 rebuild drops it
+    val evPath = Files.createTempDirectory("graft-ev-rd").toString + "/ev"
+    r.write.parquet(evPath)
+    new IncrementalMaintainer(cat, evPath).processBatch("rd", r.limit(5)) shouldBe true
+    Recommender.residentLoaded(v2) shouldBe false
+    servedResident(read()) shouldBe false
+    // DROP drops it
+    val v3 = Recommender.materializeView(spark, "rd", r, cat,
+      models + "/views", topK = Some(2))
+    servedResident(read()) shouldBe true
+    Recommender.residentLoaded(v3) shouldBe true
+    Recommender.drop("rd", cat) shouldBe true
+    Recommender.residentLoaded(v3) shouldBe false
+  }
+
+  test("a view over the resident cap is served by the cached-view filter") {
+    val (cat, models) = freshDirs()
+    val r = ratings
+    Recommender.create(spark, "oc", r, "tbloc", c, "itemcoscf", cat, models)
+    val computed = rows(Recommender.recommendTopK(spark, r, "tbloc", c,
+      "itemcoscf", Some(cat), userId = 2L, k = 3))
+    val path = Recommender.materializeView(spark, "oc", r, cat,
+      models + "/views") // complete: 16 rows
+    val view = spark.read.parquet(path)
+    ResidentTopK.load(view, cap = 16).isDefined shouldBe true
+    ResidentTopK.load(view, cap = 15) shouldBe None
+    // the first read of this version meets a cap below its 16 rows
+    Recommender.residentTopK(spark, c, path, cap = 15) shouldBe None
+    val served = Recommender.recommendTopK(spark, r, "tbloc", c, "itemcoscf",
+      Some(cat), userId = 2L, k = 3)
+    servedResident(served) shouldBe false
+    served.queryExecution.executedPlan.collectWithSubqueries {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }.nonEmpty shouldBe true
+    sameRanking(rows(served), computed)
+  }
+
+  test("catalog: a query-counter bump never tears or reverts a concurrent entry write") {
+    val (cat, models) = freshDirs()
+    val e = Recommender.create(spark, "cc", ratings, "tblcc", c, "itemcoscf",
+      cat, models)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    // a point reader's R18 bumps, as fast as they go
+    val reader = new Thread(() =>
+      try while (!stop.get()) cat.update("cc")(x =>
+        x.copy(queryCounter = x.queryCounter + 1))
+      catch { case t: Throwable => errors.add(t); () })
+    reader.start()
+    try (1L to 200L).foreach { v =>
+      // a writer's commit (as materializeView's) is never undone by a bump
+      cat.put(cat.get("cc").get.copy(viewVersion = v))
+      cat.get("cc").get.viewVersion shouldBe v
+    } finally { stop.set(true); reader.join() }
+    errors.isEmpty shouldBe true
+    cat.list().map(_.name) shouldBe Seq("cc") // no temp file shows as an entry
+    cat.get("cc").get.modelPaths shouldBe e.modelPaths
   }
 
   test("servedViews is a true LRU: one cold entry evicted, hot entries stay cached") {

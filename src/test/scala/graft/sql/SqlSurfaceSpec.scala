@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.SparkSpec
-import graft.recdb.{EventCols, MicroFixtureSpec, Scoring, Similarity}
+import graft.recdb.{EventCols, MicroFixtureSpec, Recommender, Scoring, Similarity}
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -96,21 +96,55 @@ class SqlSurfaceSpec extends SparkSpec with BeforeAndAfterAll {
     ext.sql("""CREATE RECOMMENDER rec_legacy ON ml_ratings USERS FROM userid
               |ITEMS FROM itemid EVENTS FROM rating USING itemCosCF""".stripMargin)
       .collect()
-    // the reference's rec_workload.c query shape, verbatim
-    val out = ext.sql("SELECT itemid FROM rec_legacy RECOMMEND(3) userid = 2")
-      .collect().map(_.getLong(0))
-    out.length shouldBe 3
-    // equivalent modern-clause top-3 for the same user
-    val expected = ext.sql(
-      """SELECT itemid FROM ml_ratings RECOMMEND itemid TO userid ON rating
-        |USING itemCosCF WHERE userid = 2
-        |ORDER BY rating DESC, itemid LIMIT 3""".stripMargin)
-      .collect().map(_.getLong(0))
-    out.sorted shouldBe expected.sorted
-    // unknown recommender name fails like the reference
-    an[Exception] should be thrownBy
-      ext.sql("SELECT itemid FROM nope_rec RECOMMEND(3) userid = 2").collect()
-    ext.sql("DROP RECOMMENDER rec_legacy").collect()
+    try {
+      // the reference's rec_workload.c query shape, verbatim
+      def legacy() =
+        ext.sql("SELECT itemid, rating FROM rec_legacy RECOMMEND(3) userid = 2")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+      val out = pairs(legacy())
+      out.length shouldBe 3
+      // equivalent modern-clause top-3 for the same user: same ids, scores
+      // and order
+      val expected = pairs(ext.sql(
+        """SELECT itemid, rating FROM ml_ratings RECOMMEND itemid TO userid
+          |ON rating USING itemCosCF WHERE userid = 2
+          |ORDER BY rating DESC, itemid LIMIT 3""".stripMargin))
+      out shouldBe expected
+      // with a top-3 view the form is served from the view's resident
+      // index: the same ids in the same order, scores up to the last-bit
+      // drift between the view's all-users scoring strategy and the
+      // one-user one
+      Recommender.materializeView(ext, "rec_legacy", ext.table("ml_ratings"),
+        GraftSql.catalog(ext), GraftSql.modelsDir(ext) + "/views", Some(3))
+      val served = legacy()
+      served.queryExecution.executedPlan
+        .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec] shouldBe true
+      val got = pairs(served)
+      got.map(_._1) shouldBe expected.map(_._1)
+      got.zip(expected).foreach { case (g, e) => g._2 shouldBe e._2 +- 1e-12 }
+      // unknown recommender name fails like the reference
+      an[Exception] should be thrownBy
+        ext.sql("SELECT itemid FROM nope_rec RECOMMEND(3) userid = 2").collect()
+    } finally ext.sql("DROP RECOMMENDER rec_legacy").collect()
+  }
+
+  test("legacy RECOMMEND(k) over a top-k view collects with zero Spark jobs") {
+    fixture(ext)
+    ext.sql("""CREATE RECOMMENDER rec_resident ON ml_ratings USERS FROM userid
+              |ITEMS FROM itemid EVENTS FROM rating USING itemCosCF""".stripMargin)
+      .collect()
+    try {
+      Recommender.materializeView(ext, "rec_resident", ext.table("ml_ratings"),
+        GraftSql.catalog(ext), GraftSql.modelsDir(ext) + "/views", Some(3))
+      def read(u: Int) =
+        ext.sql(s"SELECT itemid, rating FROM rec_resident RECOMMEND(3) userid = $u")
+          .collect()
+      read(1) // the first read of the view version loads its index
+      var got = Array.empty[org.apache.spark.sql.Row]
+      jobsRunBy { got = read(2) } shouldBe 0
+      got.length shouldBe 3
+    } finally ext.sql("DROP RECOMMENDER rec_resident").collect()
   }
 
   test("user-qual pre-filter: mixed WHERE prunes users yet keeps full filter") {
