@@ -206,40 +206,49 @@ object Recommender {
         _ => java.util.UUID.randomUUID().toString)
     } + ":" + path
 
-  // caller holds the servedViews lock
-  private def servedEntry(key: String): Served = {
+  // caller holds the servedViews lock. Null once the version's files are
+  // gone: [[deleteViewVersions]] deletes before it invalidates, so an entry
+  // made after its invalidation would outlive it
+  private def servedEntry(key: String, path: String): Served = {
     val hit = servedViews.get(key)
-    if (hit != null) hit
+    if (hit != null || !new java.io.File(path).exists()) hit
     else { val s = new Served; servedViews.put(key, s); s }
   }
 
   private[recdb] def servedView(spark: SparkSession, c: EventCols,
       path: String): DataFrame = {
     val key = viewKey(spark, path)
+    def read = spark.read.schema(viewSchema(c)).parquet(path)
     servedViews.synchronized {
-      val s = servedEntry(key)
-      if (s.frame == null)
-        s.frame = spark.read.schema(viewSchema(c)).parquet(path).cache()
-      s.frame
+      val s = servedEntry(key, path)
+      if (s == null) read // fails: the version was deleted
+      else {
+        if (s.frame == null) s.frame = read.cache()
+        s.frame
+      }
     }
   }
 
   /** The view version's resident index, loaded on first use; None when
     * the view is not resident-servable (over `cap` rows, or holding a
-    * null). The load — a few Spark jobs, once per version — runs outside
+    * null) or its files are gone. `rowBound` (-1 = unknown) is an estimate
+    * of the view's rows: above `cap`, the view is over the cap without a
+    * load. The load — a few Spark jobs, once per version — runs outside
     * the map's lock; its result is kept only if the entry was not
     * invalidated or evicted meanwhile, and the racing query still answers
     * from the version it resolved, as a Spark-path frame would.
     */
   private[recdb] def residentTopK(spark: SparkSession, c: EventCols,
-      path: String, cap: Int = ResidentTopK.RowCap): Option[ResidentTopK] = {
+      path: String, rowBound: Long = -1L,
+      cap: Int = ResidentTopK.RowCap): Option[ResidentTopK] = {
     val key = viewKey(spark, path)
     val (s, known) = servedViews.synchronized {
-      val s = servedEntry(key); (s, s.resident)
+      val s = servedEntry(key, path)
+      (s, if (s == null) None else s.resident)
     }
     if (known != null) known
     else {
-      val loaded = ResidentTopK.load(
+      val loaded = if (rowBound > cap) None else ResidentTopK.load(
         spark.read.schema(viewSchema(c)).parquet(path), cap)
       servedViews.synchronized {
         if (servedViews.get(key) eq s) s.resident = loaded
@@ -387,6 +396,9 @@ object Recommender {
   /** Delete sibling versions of `currentPath` older than `keepFrom`
     * (`.../name.view.vN.parquet` layout); pass `keepFrom = Long.MaxValue`
     * to reap every version including the current one (DROP / R17 rebuild).
+    * Files go before the served-view entry: a reader that resolved the
+    * path earlier then either made its entry first, and the invalidation
+    * drops it, or finds the files gone and makes none.
     */
   private[recdb] def deleteViewVersions(currentPath: String,
       keepFrom: Long): Unit = {
@@ -397,7 +409,7 @@ object Recommender {
     Option(if (dir == null) null else dir.listFiles()).foreach(_.foreach { s =>
       s.getName match {
         case pat(v) if v.toLong < keepFrom =>
-          invalidateServedView(s.getPath); deleteDir(s.getPath)
+          deleteDir(s.getPath); invalidateServedView(s.getPath)
         case _ => ()
       }
     })
@@ -442,12 +454,17 @@ object Recommender {
     def ranked(scores: DataFrame): DataFrame =
       scores.orderBy(col("score").desc, col(c.item)).limit(k)
     hit.filter(e => e.viewPath.isDefined &&
-        (e.viewComplete || e.viewTopK >= k)).map(_.viewPath.get) match {
-      case Some(path) => residentTopK(spark, c, path) match {
-        case Some(index) => index.topK(spark, userId, k)
-        case None =>
-          ranked(servedView(spark, c, path).where(col(c.user) === userId))
-      }
+        (e.viewComplete || e.viewTopK >= k)) match {
+      case Some(e) =>
+        val path = e.viewPath.get
+        // the catalog's (approximate) corpus stats bound the view's rows
+        val bound = if (e.nUsers < 0 || e.nItems < 0) -1L
+          else e.nUsers * (if (e.viewComplete) e.nItems else e.viewTopK)
+        residentTopK(spark, c, path, bound) match {
+          case Some(index) => index.topK(spark, userId, k)
+          case None =>
+            ranked(servedView(spark, c, path).where(col(c.user) === userId))
+        }
       case None =>
         val ev = events
         // the one-user scope as the RECOMMEND clause's user-qual builds it

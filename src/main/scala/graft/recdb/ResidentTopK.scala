@@ -1,13 +1,14 @@
 package graft.recdb
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** One view version held in driver arrays for job-free point reads. User
   * keys ascend; user `users(i)`'s rows are `offsets(i) until offsets(i+1)`
   * of `items`/`scores`, ranked by score descending, then item ascending —
-  * the order [[Recommender.recommendTopK]]'s Spark paths sort by. About 20
-  * bytes per view row.
+  * the order [[Recommender.recommendTopK]]'s Spark paths sort by. 16 bytes
+  * per view row plus 12 per user.
   */
 final class ResidentTopK private (schema: StructType, users: Array[Long],
     offsets: Array[Int], items: Array[Long], scores: Array[Double]) {
@@ -28,43 +29,50 @@ final class ResidentTopK private (schema: StructType, users: Array[Long],
 
 object ResidentTopK {
 
-  /** Largest view kept resident: the index may use 1/32 of the driver's
-    * max heap, budgeting 256 bytes per row for the collected rows it is
-    * packed from (~390k rows on a 3 GB heap).
+  /** Largest view kept resident: one row per 4 KiB of the driver's max
+    * heap (786k rows on a 3 GB heap). Measured loading a 780k-row view
+    * (local[4], 4-core host, 3 GB heap): the index keeps 16.5 bytes per
+    * row, and the live heap after GC peaked 332 bytes per row above its
+    * baseline during the load — mostly the sort, whose tasks share the
+    * driver's heap in local mode. So a load at the cap peaks near 1/12 of
+    * the heap, and all [[Recommender.ServedViewBound]] entries at the cap
+    * keep under 1/15 of it.
     */
   val RowCap: Int =
-    math.min(Int.MaxValue - 1L, Runtime.getRuntime.maxMemory / 8192).toInt
+    math.min(Int.MaxValue - 1L, Runtime.getRuntime.maxMemory / 4096).toInt
 
   /** Index `view` — (user, item, score), the layout
-    * [[Recommender.materializeView]] writes. None when it holds more than
-    * `cap` rows (the collect stops at cap + 1) or a null, which the
-    * Spark-path sort would place by its own null ordering.
+    * [[Recommender.materializeView]] writes. Spark sorts it, and its rows
+    * stream to the driver one partition at a time straight into the
+    * arrays, so no collected copy of the view is ever held. None when it
+    * holds more than `cap` rows (the stream stops at row cap + 1) or a
+    * null, which the Spark-path sort would place by its own null ordering.
     */
   def load(view: DataFrame, cap: Int): Option[ResidentTopK] = {
-    val rows = view.limit(cap + 1).collect()
-    if (rows.length > cap || rows.exists(_.anyNull)) None
-    else {
-      // SQL double order (SQLOrderingUtil.compareDoubles): NaN above every
-      // number and equal to itself, -0.0 equal to 0.0
-      def desc(a: Double, b: Double): Int =
-        if (a == b) 0 else java.lang.Double.compare(b, a)
-      java.util.Arrays.sort(rows, (a: Row, b: Row) => {
-        val byUser = java.lang.Long.compare(a.getLong(0), b.getLong(0))
-        val byScore = desc(a.getDouble(2), b.getDouble(2))
-        if (byUser != 0) byUser
-        else if (byScore != 0) byScore
-        else java.lang.Long.compare(a.getLong(1), b.getLong(1))
-      })
-      val users = Array.newBuilder[Long]
-      val offsets = Array.newBuilder[Int]
-      rows.indices.foreach { i =>
-        if (i == 0 || rows(i).getLong(0) != rows(i - 1).getLong(0)) {
-          users += rows(i).getLong(0); offsets += i
+    val Array(u, i, s) = view.columns
+    val it = view.orderBy(col(u), col(s).desc, col(i)).toLocalIterator()
+    val users = Array.newBuilder[Long]
+    val offsets = Array.newBuilder[Int]
+    val items = Array.newBuilder[Long]
+    val scores = Array.newBuilder[Double]
+    var n = 0
+    var last = 0L
+    var fits = true
+    while (fits && it.hasNext) {
+      val r = it.next()
+      if (n == cap || r.anyNull) fits = false
+      else {
+        if (n == 0 || r.getLong(0) != last) {
+          last = r.getLong(0); users += last; offsets += n
         }
+        items += r.getLong(1); scores += r.getDouble(2); n += 1
       }
-      offsets += rows.length
+    }
+    if (!fits) None
+    else {
+      offsets += n
       Some(new ResidentTopK(view.schema, users.result(), offsets.result(),
-        rows.map(_.getLong(1)), rows.map(_.getDouble(2))))
+        items.result(), scores.result()))
     }
   }
 }

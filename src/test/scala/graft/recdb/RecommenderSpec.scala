@@ -32,6 +32,17 @@ class RecommenderSpec extends SparkSpec {
     got.zip(computed).foreach { case (g, w) => g._3 shouldBe w._3 +- 1e-12 }
   }
 
+  /** The user's top-k as [[Recommender.materializeView]] scores a view:
+    * every user at once, the view bypassed — so bit-equal to a view's rows.
+    */
+  def viewStrategyTopK(r: org.apache.spark.sql.DataFrame, tag: String,
+      cat: RecCatalog, userId: Long, k: Int): Seq[(Long, Long, Double)] = {
+    import org.apache.spark.sql.functions.col
+    rows(Recommender.recommend(spark, r, tag, c, "itemcoscf", Some(cat),
+        serveFromView = false).where(col("userid") === userId)
+      .orderBy(col("score").desc, col("itemid")).limit(k))
+  }
+
   /** True when `df` is answered from a resident index: a bare local scan. */
   def servedResident(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.executedPlan
@@ -163,25 +174,42 @@ class RecommenderSpec extends SparkSpec {
   }
 
   test("recommendTopK point query: join-free pushed filter on the view, parity with compute") {
+    import org.apache.spark.sql.functions._
     val (cat, models) = freshDirs()
     val r = ratings
     Recommender.create(spark, "pq", r, "tblpq", c, "itemcoscf", cat, models)
     // no view yet: the fallback computes, and is already the right top-k
-    val computed = Recommender.recommendTopK(spark, r, "tblpq", c, "itemcoscf",
-      Some(cat), userId = 2L, k = 3).collect()
-    computed.map(_.getLong(0)).distinct.toSeq shouldBe Seq(2L)
+    val computed = rows(Recommender.recommendTopK(spark, r, "tblpq", c,
+      "itemcoscf", Some(cat), userId = 2L, k = 3))
+    computed.map(_._1).distinct shouldBe Seq(2L)
     computed.length shouldBe 3
-    Recommender.materializeView(spark, "pq", r, cat, models + "/views")
+    val path = Recommender.materializeView(spark, "pq", r, cat,
+      models + "/views") // complete: 16 rows
+    val view = spark.read.parquet(path)
+    ResidentTopK.load(view, cap = 16).isDefined shouldBe true
+    ResidentTopK.load(view, cap = 15) shouldBe None
+    // a row bound over the cap decides it without a load
+    jobsRunBy(Recommender.residentTopK(spark, c, path, rowBound = 16,
+      cap = 15) shouldBe None) shouldBe 0
+    Recommender.residentLoaded(path) shouldBe false
     val served = Recommender.recommendTopK(spark, r, "tblpq", c, "itemcoscf",
       Some(cat), userId = 2L, k = 3)
-    // plan proof: a filter, not a join — the point query must never build
-    // a broadcast exchange
-    served.queryExecution.executedPlan.collectWithSubqueries {
+    servedResident(served) shouldBe false
+    // plan proof: over the cap, a `user = ?` filter pushed into the cached
+    // view scan, not a join — the point query must never build a broadcast
+    // exchange
+    val plan = served.queryExecution.executedPlan
+    plan.collectWithSubqueries {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     } shouldBe Nil
-    // identical rows and order, scores up to strategy drift
-    sameRanking(rows(served),
-      computed.toSeq.map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))))
+    plan.collectWithSubqueries {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+        if s.predicates.exists(_.references.exists(_.name == "userid")) => s
+    }.nonEmpty shouldBe true
+    // identical rows, scores and order to the view's own scoring; the
+    // one-user compute ranks the same, scores up to strategy drift
+    rows(served) shouldBe viewStrategyTopK(r, "tblpq", cat, 2L, 3)
+    sameRanking(rows(served), computed)
   }
 
   test("recommendTopK serves from a top-k view when k <= stored k; deeper k falls back") {
@@ -212,10 +240,13 @@ class RecommenderSpec extends SparkSpec {
     served.queryExecution.executedPlan.collectWithSubqueries {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     } shouldBe Nil
+    val expected3 = viewStrategyTopK(r, "tbltk", cat, 2L, 3)
+    rows(served) shouldBe expected3
     sameRanking(rows(served), computed3)
     val served2 = Recommender.recommendTopK(spark, r, "tbltk", c, "itemcoscf",
       Some(cat), userId = 2L, k = 2)
     servedResident(served2) shouldBe true
+    rows(served2) shouldBe expected3.take(2)
     sameRanking(rows(served2), computed3.take(2))
     // k deeper than the stored cut: a 3-deep view cannot answer top-4 —
     // must fall back to compute (and be right)
@@ -251,8 +282,12 @@ class RecommenderSpec extends SparkSpec {
     val view = Recommender.servedView(spark, c, path)
     def ranked(df: org.apache.spark.sql.DataFrame, k: Int) =
       df.orderBy(col("score").desc, col("itemid")).limit(k)
+    // compute as the view was scored: every user at once, the view bypassed
+    val all = Recommender.recommend(spark, r, "tbldx", c, "itemcoscf",
+      Some(cat), serveFromView = false).cache()
     (1L to 24L).foreach { u =>
-      // compute: the scoring path for this one user, the view bypassed
+      val scored = rows(ranked(all.where(col("userid") === u), viewK))
+      // compute for this one user alone
       val computed = rows(ranked(Recommender.recommend(spark, r, "tbldx", c,
         "itemcoscf", Some(cat), Some(Seq(u).toDF("userid")),
         serveFromView = false), viewK))
@@ -264,10 +299,12 @@ class RecommenderSpec extends SparkSpec {
         val got = rows(served)
         withClue(s"user $u, k $k: ") {
           got shouldBe rows(ranked(view.where(col("userid") === u), k))
+          got shouldBe scored.take(k)
           sameRanking(got, computed.take(k))
         }
       }
     }
+    all.unpersist()
     // a user absent from the view: empty on every route
     val absent = Recommender.recommendTopK(spark, r, "tbldx", c, "itemcoscf",
       Some(cat), userId = 999L, k = 5)
@@ -326,28 +363,10 @@ class RecommenderSpec extends SparkSpec {
     Recommender.residentLoaded(v3) shouldBe true
     Recommender.drop("rd", cat) shouldBe true
     Recommender.residentLoaded(v3) shouldBe false
-  }
-
-  test("a view over the resident cap is served by the cached-view filter") {
-    val (cat, models) = freshDirs()
-    val r = ratings
-    Recommender.create(spark, "oc", r, "tbloc", c, "itemcoscf", cat, models)
-    val computed = rows(Recommender.recommendTopK(spark, r, "tbloc", c,
-      "itemcoscf", Some(cat), userId = 2L, k = 3))
-    val path = Recommender.materializeView(spark, "oc", r, cat,
-      models + "/views") // complete: 16 rows
-    val view = spark.read.parquet(path)
-    ResidentTopK.load(view, cap = 16).isDefined shouldBe true
-    ResidentTopK.load(view, cap = 15) shouldBe None
-    // the first read of this version meets a cap below its 16 rows
-    Recommender.residentTopK(spark, c, path, cap = 15) shouldBe None
-    val served = Recommender.recommendTopK(spark, r, "tbloc", c, "itemcoscf",
-      Some(cat), userId = 2L, k = 3)
-    servedResident(served) shouldBe false
-    served.queryExecution.executedPlan.collectWithSubqueries {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-    }.nonEmpty shouldBe true
-    sameRanking(rows(served), computed)
+    // a reader that resolved v3 before the DROP makes no entry for it
+    Recommender.residentTopK(spark, c, v3) shouldBe None
+    an[Exception] should be thrownBy Recommender.servedView(spark, c, v3)
+    Recommender.servedViewCached(v3) shouldBe false
   }
 
   test("catalog: a query-counter bump never tears or reverts a concurrent entry write") {

@@ -112,15 +112,20 @@ class SqlSurfaceSpec extends SparkSpec with BeforeAndAfterAll {
           |ORDER BY rating DESC, itemid LIMIT 3""".stripMargin))
       out shouldBe expected
       // with a top-3 view the form is served from the view's resident
-      // index: the same ids in the same order, scores up to the last-bit
-      // drift between the view's all-users scoring strategy and the
-      // one-user one
+      // index: exactly the view's ranked rows for the user; against the
+      // one-user compute, the same ids in the same order, scores up to the
+      // last-bit drift between the view's all-users scoring strategy and
+      // the one-user one
       Recommender.materializeView(ext, "rec_legacy", ext.table("ml_ratings"),
         GraftSql.catalog(ext), GraftSql.modelsDir(ext) + "/views", Some(3))
       val served = legacy()
       served.queryExecution.executedPlan
         .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec] shouldBe true
       val got = pairs(served)
+      import org.apache.spark.sql.functions.col
+      got shouldBe pairs(Recommender.recommendFromView(ext, "rec_legacy",
+          GraftSql.catalog(ext)).get.where(col("userid") === 2)
+        .orderBy(col("score").desc, col("itemid")).select("itemid", "score"))
       got.map(_._1) shouldBe expected.map(_._1)
       got.zip(expected).foreach { case (g, e) => g._2 shouldBe e._2 +- 1e-12 }
       // unknown recommender name fails like the reference
