@@ -93,6 +93,12 @@ object Exec {
     r
   }
 
+  /** Most bodies one [[inParallel]] call runs at once. A few overlapping
+    * Spark actions fill the executors' idle gaps; more only queue in the
+    * scheduler, while each holds a thread of its own, and calls can nest.
+    */
+  val MaxParallel = 8
+
   /** Run independent Spark actions concurrently (optimization guide §2.6:
     * the scheduler happily overlaps jobs; actions are only sequential
     * because driver code calls them sequentially). For state construction
@@ -100,27 +106,38 @@ object Exec {
     * separate states), ordering is irrelevant to the bytes produced — each
     * dir is byte-identical either way — so the only effect is wall clock:
     * one step's task tail no longer leaves the executors idle while the
-    * next independent step waits. All bodies are awaited (even on
-    * failure) before the first error is rethrown, so no caller ever
-    * observes a write still in flight.
+    * next independent step waits. At most [[MaxParallel]] bodies run at
+    * once. All bodies are awaited (even on failure) before the first error
+    * is rethrown, so no caller ever observes a write still in flight. An
+    * interrupted caller cancels the bodies, waits for the running ones to
+    * stop, then rethrows the InterruptedException with its interrupt flag
+    * set again.
     */
   def inParallel(bodies: (() => Unit)*): Unit = {
+    import java.util.concurrent._
     if (bodies.sizeIs <= 1) { bodies.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
-    try {
-      val errs = bodies
-        .map(b => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = b()
-        }))
-        .flatMap { f =>
-          try { f.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Option(e.getCause).orElse(Some(e))
-          }
+    val pool = Executors.newFixedThreadPool(math.min(bodies.size, MaxParallel))
+    val futures = bodies.map(b => pool.submit(new Callable[Unit] {
+      def call(): Unit = b()
+    }))
+    pool.shutdown()
+    val errs =
+      try futures.flatMap { f =>
+        try { f.get(); None }
+        catch {
+          case e: ExecutionException => Option(e.getCause).orElse(Some(e))
         }
-      errs.headOption.foreach(e => throw e)
-    } finally pool.shutdown()
+      }
+      catch {
+        case e: InterruptedException =>
+          futures.foreach(_.cancel(true))
+          while (!pool.isTerminated)
+            try pool.awaitTermination(1, TimeUnit.SECONDS)
+            catch { case _: InterruptedException => () }
+          Thread.currentThread().interrupt()
+          throw e
+      }
+    errs.headOption.foreach(e => throw e)
   }
 
   /** Recursive local-path delete (model/state/sink swap dirs). */

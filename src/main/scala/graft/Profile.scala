@@ -626,54 +626,56 @@ object Profile {
           }
         }
         spark.sparkContext.addSparkListener(listener)
-        def tt(label: String)(body: => Unit): Unit = {
-          (1 to reps).foreach { i =>
-            jobs.set(0); tasks.set(0); taskTimeMs.set(0)
-            val t0 = System.nanoTime(); body
-            val wall = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(300)
-            println(f"PROFILE di2:$label rep$i wall=$wall%.2f " +
-              f"jobs=${jobs.get} tasks=${tasks.get} " +
-              f"taskSum=${taskTimeMs.get / 1000.0}%.2f")
+        try {
+          def tt(label: String)(body: => Unit): Unit = {
+            (1 to reps).foreach { i =>
+              jobs.set(0); tasks.set(0); taskTimeMs.set(0)
+              val t0 = System.nanoTime(); body
+              val wall = (System.nanoTime() - t0) / 1e9
+              Thread.sleep(300)
+              println(f"PROFILE di2:$label rep$i wall=$wall%.2f " +
+                f"jobs=${jobs.get} tasks=${tasks.get} " +
+                f"taskSum=${taskTimeMs.get / 1000.0}%.2f")
+            }
           }
-        }
-        def fresh(body: String => Unit): Unit = {
-          graft.Exec.deletePath(base); body(s"$base/part")
-        }
-        tt("part_base")(fresh { p =>
-          assigned.repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        tt("part_sorted")(fresh { p =>
-          assigned.repartition(col("cell")).sortWithinPartitions("cell")
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        val hc = spark.sparkContext.hadoopConfiguration
-        tt("part_v2")(fresh { p =>
-          hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          try assigned.repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p)
-          finally hc.set(
-            "mapreduce.fileoutputcommitter.algorithm.version", "1") })
-        tt("part_8tasks")(fresh { p =>
-          assigned.repartition(8, col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        tt("part_noplanned")(fresh { p =>
-          spark.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
-          try assigned.repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p)
-          finally spark.conf.set(
-            "spark.sql.optimizer.plannedWrite.enabled", "true") })
-        tt("flat_base")(fresh { p =>
-          assigned.repartition(col("cell"))
-            .write.mode("overwrite").parquet(p) })
-        tt("part_32tasks")(fresh { p =>
-          assigned.repartition(32, col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        tt("part_nlist")(fresh { p =>
-          assigned.repartition(cents.length, col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        tt("part_64tasks")(fresh { p =>
-          assigned.repartition(64, col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          def fresh(body: String => Unit): Unit = {
+            graft.Exec.deletePath(base); body(s"$base/part")
+          }
+          tt("part_base")(fresh { p =>
+            assigned.repartition(col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          tt("part_sorted")(fresh { p =>
+            assigned.repartition(col("cell")).sortWithinPartitions("cell")
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          val hc = spark.sparkContext.hadoopConfiguration
+          tt("part_v2")(fresh { p =>
+            hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+            try assigned.repartition(col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p)
+            finally hc.set(
+              "mapreduce.fileoutputcommitter.algorithm.version", "1") })
+          tt("part_8tasks")(fresh { p =>
+            assigned.repartition(8, col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          tt("part_noplanned")(fresh { p =>
+            spark.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
+            try assigned.repartition(col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p)
+            finally spark.conf.set(
+              "spark.sql.optimizer.plannedWrite.enabled", "true") })
+          tt("flat_base")(fresh { p =>
+            assigned.repartition(col("cell"))
+              .write.mode("overwrite").parquet(p) })
+          tt("part_32tasks")(fresh { p =>
+            assigned.repartition(32, col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          tt("part_nlist")(fresh { p =>
+            assigned.repartition(cents.length, col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+          tt("part_64tasks")(fresh { p =>
+            assigned.repartition(64, col("cell"))
+              .write.mode("overwrite").partitionBy("cell").parquet(p) })
+        } finally spark.sparkContext.removeSparkListener(listener)
       case "hybridfreshstages" =>
         // Stage decomposition of s_hybrid_fresh (round-15 slowest gate):
         // two-leg ingest vs serve vs fold, per wave.

@@ -65,40 +65,12 @@ final class IncrementalMaintainer(
     * eventTotal re-recorded (recathon.c:1174-1180).
     */
   private def rebuild(entry: RecEntry): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val events = spark.read.parquet(eventsPath)
-    val c = EventCols(entry.userCol, entry.itemCol, entry.ratingCol)
-    entry.method match {
-      case RecMethod.SVD =>
-        val (uf, itf) = FunkSVD.train(events, c)
-        // write via temp + swap-free overwrite: paths are per-recommender
-        uf.write.mode("overwrite").parquet(entry.modelPaths.head)
-        itf.write.mode("overwrite").parquet(entry.modelPaths(1))
-      case m =>
-        // re-apply the CREATE-time NBRHOOD bound: a rebuild must not
-        // silently widen a sparsified model back to all pairs
-        Recommender.applyNeighborhood(
-            Recommender.buildSimilarity(events, c, m), m, entry.neighborhood)
-          .write.mode("overwrite").parquet(entry.modelPaths.head)
-    }
-    // the CREATE-time corpus stats (they drive the job-free strategy pick)
-    // are re-measured against the grown events store: exact total
-    // (threshold anchor) + approximate distincts (cost-model inputs only —
-    // same trade as Recommender.create)
-    val st = events.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.approx_count_distinct(
-        org.apache.spark.sql.functions.col(entry.userCol)),
-      org.apache.spark.sql.functions.approx_count_distinct(
-        org.apache.spark.sql.functions.col(entry.itemCol))).head()
-    val modelRows = entry.method match {
-      case RecMethod.SVD => 0L
-      case _ => spark.read.parquet(entry.modelPaths.head).count()
-    }
-    catalog.put(entry.copy(updateCounter = 0, eventTotal = st.getLong(0),
-      viewPath = None, viewComplete = false, viewTopK = -1L,
-      nUsers = st.getLong(1), nItems = st.getLong(2), modelRows = modelRows))
+    // CREATE's own train-and-persist path over the grown events store: the
+    // NBRHOOD bound is re-applied (a rebuild must not silently widen a
+    // sparsified model back to all pairs) and the corpus stats re-measured
+    val events = org.apache.spark.sql.SparkSession.active.read.parquet(eventsPath)
+    catalog.put(Recommender.train(events, entry.copy(updateCounter = 0,
+      viewPath = None, viewComplete = false, viewTopK = -1L)))
     // a rebuilt model invalidates any materialized prediction view. Its
     // files go only after the catalog stops naming them, so point reads
     // keep serving the pre-rebuild view through the retrain instead of

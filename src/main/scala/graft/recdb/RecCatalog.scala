@@ -150,16 +150,22 @@ final class RecCatalog(dirStr: String) {
     p.setProperty("nItems", e.nItems.toString)
     p.setProperty("modelRows", e.modelRows.toString)
     p.setProperty("neighborhood", e.neighborhood.toString)
-    // write, then rename over the entry: a concurrent get never reads a
-    // truncated file (list() skips the .tmp name)
-    val tmp = Files.createTempFile(dir, s".${e.name}.", ".tmp")
+    RecCatalog.writes.synchronized {
+      publish(file(e.name), p, "graft recommender catalog entry")
+    }
+  }
+
+  /** Write `p` to a temp file, then rename it over `target`: a concurrent
+    * reader sees the old file or the new one, never a truncated one (list()
+    * skips the .tmp name). Callers hold [[RecCatalog.writes]].
+    */
+  private def publish(target: Path, p: Properties, comment: String): Unit = {
+    val tmp = Files.createTempFile(dir, s".${target.getFileName}.", ".tmp")
     try {
       val out = Files.newOutputStream(tmp)
-      try p.store(out, "graft recommender catalog entry") finally out.close()
-      RecCatalog.writes.synchronized {
-        Files.move(tmp, file(e.name), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
+      try p.store(out, comment) finally out.close()
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
     } finally { Files.deleteIfExists(tmp); () }
   }
 
@@ -178,37 +184,41 @@ final class RecCatalog(dirStr: String) {
 
   /** Live read of the RecDBProperties row — auto-created with the
     * reference's defaults when absent, mirroring the CREATE-if-missing in
-    * utility.c:901-908.
+    * utility.c:901-908. The create re-checks under the write lock, so it
+    * never overwrites a concurrent [[setProperties]].
     */
-  def properties: RecDbProperties =
-    if (!Files.exists(propsFile)) {
-      val d = RecDbProperties()
-      setProperties(d)
-      d
-    } else {
-      val p = new Properties()
-      val in = Files.newInputStream(propsFile)
-      try p.load(in) finally in.close()
-      RecDbProperties(
-        updateThreshold = p.getProperty("update_threshold", "0.5").toDouble,
-        tailLength = p.getProperty("tail_length", "0").toInt,
-        verboseQueries = p.getProperty("verbose_queries", "true").toBoolean)
+  def properties: RecDbProperties = {
+    if (!Files.exists(propsFile)) RecCatalog.writes.synchronized {
+      if (!Files.exists(propsFile)) writeProperties(RecDbProperties())
     }
+    val p = new Properties()
+    val in = Files.newInputStream(propsFile)
+    try p.load(in) finally in.close()
+    RecDbProperties(
+      updateThreshold = p.getProperty("update_threshold", "0.5").toDouble,
+      tailLength = p.getProperty("tail_length", "0").toInt,
+      verboseQueries = p.getProperty("verbose_queries", "true").toBoolean)
+  }
 
-  def setProperties(v: RecDbProperties): Unit = {
+  /** Replace the properties row atomically: [[IncrementalMaintainer]]
+    * re-reads it on every batch, and must never read a half-written file.
+    */
+  def setProperties(v: RecDbProperties): Unit =
+    RecCatalog.writes.synchronized(writeProperties(v))
+
+  private def writeProperties(v: RecDbProperties): Unit = {
     val p = new Properties()
     p.setProperty("update_threshold", v.updateThreshold.toString)
     p.setProperty("tail_length", v.tailLength.toString)
     p.setProperty("verbose_queries", v.verboseQueries.toString)
-    val out = Files.newOutputStream(propsFile)
-    try p.store(out, "graft RecDBProperties (utility.c:903-908)")
-    finally out.close()
+    publish(propsFile, p, "graft RecDBProperties (utility.c:903-908)")
   }
 }
 
 object RecCatalog {
-  /** Orders entry writes against [[RecCatalog.update]]; JVM-wide, because
-    * several catalog objects may share one directory.
+  /** Orders entry and properties writes against [[RecCatalog.update]]
+    * and the properties auto-create; JVM-wide, because several catalog
+    * objects may share one directory.
     */
   private val writes = new Object
 }

@@ -43,42 +43,69 @@ object Recommender {
       s"recommender '$name' already exists (recathon.c:836)")
     require(catalog.findByTagAndMethod(eventsTag, method).isEmpty,
       s"a recommender on ($eventsTag, ${method.name}) already exists (recathon.c:844)")
-    // corpus stats captured once here (one aggregation job) make every later
-    // catalog-hit scoring strategy pick pure — no stats jobs at query time.
-    // eventTotal is EXACT (it anchors the R17 rebuild threshold,
-    // recathon.c:1089); the distinct counts only feed the strategy cost
-    // model and its bounds, where HLL's ~2% error is immaterial — so they
-    // use approx_count_distinct and skip the distinct-expand shuffle.
-    val statRow = events.agg(count(lit(1)),
-      approx_count_distinct(col(c.user)), approx_count_distinct(col(c.item))).head()
-    val (eventTotal, nUsers, nItems) =
-      (statRow.getLong(0), statRow.getLong(1), statRow.getLong(2))
     val paths = method match {
-      case RecMethod.SVD =>
-        val (uf, itf) = FunkSVD.train(events, c)
-        val up = s"$modelsDir/$name.userModel.parquet"
-        val ip = s"$modelsDir/$name.itemModel.parquet"
-        uf.write.mode("overwrite").parquet(up)
-        itf.write.mode("overwrite").parquet(ip)
-        Seq(up, ip)
-      case m =>
-        val model = applyNeighborhood(buildSimilarity(events, c, m), m,
-          neighborhood.toLong)
-        val p = s"$modelsDir/$name.model.parquet"
-        model.write.mode("overwrite").parquet(p)
-        Seq(p)
+      case RecMethod.SVD => Seq(s"$modelsDir/$name.userModel.parquet",
+        s"$modelsDir/$name.itemModel.parquet")
+      case _ => Seq(s"$modelsDir/$name.model.parquet")
     }
-    // model row count read back from the written parquet footers (metadata
-    // scan, no recompute of the model)
-    val modelRows = method match {
-      case RecMethod.SVD => 0L
-      case _ => spark.read.parquet(paths.head).count()
-    }
-    val entry = RecEntry(name, eventsTag, c.user, c.item, c.rating, method,
-      paths, eventTotal, nUsers = nUsers, nItems = nItems,
-      modelRows = modelRows, neighborhood = neighborhood.toLong)
+    val entry = train(events, RecEntry(name, eventsTag, c.user, c.item,
+      c.rating, method, paths, eventTotal = 0L,
+      neighborhood = neighborhood.toLong))
     catalog.put(entry)
     entry
+  }
+
+  /** Train `e`'s model on `events` and overwrite its model files — the one
+    * train-and-persist path of CREATE and the R17 rebuild. Returns `e` with
+    * the stats that make every later catalog-hit strategy pick pure: one
+    * aggregation measures eventTotal (EXACT: it anchors the R17 rebuild
+    * threshold, recathon.c:1089), the co-rating key count and the model
+    * build's own strategy inputs; the other entity count is an HLL
+    * estimate, which only feeds cost models and their bounds. The model's
+    * row count comes from the written files' footers, not from a re-read.
+    */
+  private[recdb] def train(events: DataFrame, e: RecEntry): RecEntry = {
+    val c = EventCols(e.userCol, e.itemCol, e.ratingCol)
+    // SVD has no co-rating key; its stats take the item models' orientation
+    val userBased = RecMethod.isUserBased(e.method)
+    val st = if (userBased) Similarity.corpusStats(events, c.item, c.user)
+      else Similarity.corpusStats(events, c.user, c.item)
+    val modelRows = e.method match {
+      case RecMethod.SVD =>
+        val (uf, itf) = FunkSVD.train(events, c)
+        uf.write.mode("overwrite").parquet(e.modelPaths.head)
+        itf.write.mode("overwrite").parquet(e.modelPaths(1))
+        0L
+      case m =>
+        applyNeighborhood(Similarity.model(m, events, c, stats = Some(st)), m,
+            e.neighborhood)
+          .write.mode("overwrite").parquet(e.modelPaths.head)
+        parquetRows(events.sparkSession, e.modelPaths.head)
+    }
+    e.copy(eventTotal = st.events,
+      nUsers = if (userBased) st.entities else st.keys,
+      nItems = if (userBased) st.keys else st.entities, modelRows = modelRows)
+  }
+
+  /** Rows in the parquet files of `dir`, summed from their footers in this
+    * JVM: no Spark job. (`Dataset.observe` would count them on the
+    * write itself, but on Spark 4.1 an Observation leaves the session
+    * unserializable — its observation manager is not a transient field —
+    * and any plan that ships the session in a task closure then fails.)
+    */
+  private def parquetRows(spark: SparkSession, dir: String): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path).iterator
+      .filter(f => f.getPath.getName.endsWith(".parquet") &&
+        !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   /** NBRHOOD bound (recathon.c:48; 0 = unbounded, the reference's shipped
@@ -329,7 +356,7 @@ object Recommender {
           case None =>
             val restrict = users.filter(_ => RecMethod.isUserBased(m))
               .map(_.select(col(c.user)))
-            buildSimilarity(events, c, m, restrict).cache()
+            Similarity.model(m, events, c, restrictTo = restrict).cache()
         }
         // catalog-hit entries carry corpus stats from CREATE time, making the
         // strategy pick pure (no jobs at plan-construction/EXPLAIN time)
@@ -359,6 +386,13 @@ object Recommender {
     // view it is about to replace
     val scores = recommend(spark, events, e.eventsTag, c, e.method.name,
       Some(catalog), serveFromView = false)
+    // cluster by user on write: every user's rows land in one partition,
+    // contiguous — parquet row-group min/max stats then prune a
+    // `user = ?` point query to one file (and the in-memory cache's batch
+    // stats do the same), which is what makes [[recommendTopK]] O(k)-ish
+    // instead of a view-wide scan per query. A top-k cut is clustered by
+    // its window's user shuffle already, and its rows leave the window
+    // sorted as the write asks, so only a complete view shuffles and sorts.
     val out = topK match {
       case Some(k) =>
         import org.apache.spark.sql.expressions.Window
@@ -366,18 +400,12 @@ object Recommender {
           .orderBy(col("score").desc, col(c.item))
         scores.withColumn("__rk", row_number().over(w))
           .where(col("__rk") <= k).drop("__rk")
-      case None => scores
+      case None => scores.repartition(
+        math.max(1, spark.sparkContext.defaultParallelism / 2), col(c.user))
     }
     val ver = e.viewVersion + 1
     val path = s"$viewsDir/$name.view.v$ver.parquet"
-    // cluster by user on write: every user's rows land in one partition,
-    // contiguous — parquet row-group min/max stats then prune a
-    // `user = ?` point query to one file (and the in-memory cache's batch
-    // stats do the same), which is what makes [[recommendTopK]] O(k)-ish
-    // instead of a view-wide scan per query
-    out.repartition(
-        math.max(1, spark.sparkContext.defaultParallelism / 2), col(c.user))
-      .sortWithinPartitions(col(c.user), col("score").desc)
+    out.sortWithinPartitions(col(c.user), col("score").desc, col(c.item))
       .write.mode("overwrite").parquet(path)
     // the previous materialization is dead the moment the catalog points at
     // the new one — but an in-flight reader that obtained its DataFrame
@@ -497,15 +525,5 @@ object Recommender {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField(c.user, LongType), StructField(c.item, LongType),
       StructField("score", DoubleType)))
-  }
-
-  private[recdb] def buildSimilarity(events: DataFrame, c: EventCols,
-      m: RecMethod, restrictTo: Option[DataFrame] = None): DataFrame = m match {
-    case RecMethod.ItemCosCF => Similarity.itemCosine(events, c, restrictTo = restrictTo)
-    case RecMethod.ItemPearCF => Similarity.itemPearson(events, c, restrictTo = restrictTo)
-    case RecMethod.UserCosCF => Similarity.userCosine(events, c, restrictTo = restrictTo)
-    case RecMethod.UserPearCF => Similarity.userPearson(events, c, restrictTo = restrictTo)
-    case RecMethod.SVD =>
-      throw new IllegalStateException("SVD handled separately")
   }
 }

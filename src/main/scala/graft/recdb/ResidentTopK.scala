@@ -31,10 +31,12 @@ object ResidentTopK {
 
   /** Largest view kept resident: one row per 4 KiB of the driver's max
     * heap (786k rows on a 3 GB heap). Measured loading a 780k-row view
-    * (local[4], 4-core host, 3 GB heap): the index keeps 16.5 bytes per
-    * row, and the live heap after GC peaked 332 bytes per row above its
-    * baseline during the load — mostly the sort, whose tasks share the
-    * driver's heap in local mode. So a load at the cap peaks near 1/12 of
+    * (local[4], 4-core host, 3 GB heap, 4 loads): the index keeps 16.6-16.9
+    * bytes per row, and the live heap after GC peaked 421-459 bytes per row
+    * above its baseline during the load — mostly the one sort task's
+    * buffers and its partition's serialized result, which share the
+    * JVM's heap in local mode (a global sort, range-partitioned over
+    * four tasks, peaked 334-358). So a load at the cap peaks near 1/9 of
     * the heap, and all [[Recommender.ServedViewBound]] entries at the cap
     * keep under 1/15 of it.
     */
@@ -42,15 +44,17 @@ object ResidentTopK {
     math.min(Int.MaxValue - 1L, Runtime.getRuntime.maxMemory / 4096).toInt
 
   /** Index `view` — (user, item, score), the layout
-    * [[Recommender.materializeView]] writes. Spark sorts it, and its rows
-    * stream to the driver one partition at a time straight into the
-    * arrays, so no collected copy of the view is ever held. None when it
-    * holds more than `cap` rows (the stream stops at row cap + 1) or a
-    * null, which the Spark-path sort would place by its own null ordering.
+    * [[Recommender.materializeView]] writes. Spark sorts it in one task
+    * (one job; a global sort would sample ranges and shuffle first), and
+    * its rows stream straight into the arrays, so no collected copy of the
+    * view is ever held. None when it holds more than `cap` rows (the stream
+    * stops at row cap + 1) or a null, which the Spark-path sort would place
+    * by its own null ordering.
     */
   def load(view: DataFrame, cap: Int): Option[ResidentTopK] = {
     val Array(u, i, s) = view.columns
-    val it = view.orderBy(col(u), col(s).desc, col(i)).toLocalIterator()
+    val it = view.coalesce(1).sortWithinPartitions(col(u), col(s).desc, col(i))
+      .toLocalIterator()
     val users = Array.newBuilder[Long]
     val offsets = Array.newBuilder[Int]
     val items = Array.newBuilder[Long]

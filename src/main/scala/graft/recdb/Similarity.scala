@@ -162,23 +162,80 @@ object Similarity {
 
   def itemCosine(ratings: DataFrame, c: EventCols = EventCols(),
       strategy: String = "auto", restrictTo: Option[DataFrame] = None): DataFrame =
-    build(ratings, joinKey = c.user, pairKey = c.item, c.rating,
-      "item1", "item2", pearsonMode = false, strategy, restrictTo)
+    model(RecMethod.ItemCosCF, ratings, c, strategy, restrictTo)
 
   def userCosine(ratings: DataFrame, c: EventCols = EventCols(),
       strategy: String = "auto", restrictTo: Option[DataFrame] = None): DataFrame =
-    build(ratings, joinKey = c.item, pairKey = c.user, c.rating,
-      "user1", "user2", pearsonMode = false, strategy, restrictTo)
+    model(RecMethod.UserCosCF, ratings, c, strategy, restrictTo)
 
   def itemPearson(ratings: DataFrame, c: EventCols = EventCols(),
       strategy: String = "auto", restrictTo: Option[DataFrame] = None): DataFrame =
-    build(ratings, joinKey = c.user, pairKey = c.item, c.rating,
-      "item1", "item2", pearsonMode = true, strategy, restrictTo)
+    model(RecMethod.ItemPearCF, ratings, c, strategy, restrictTo)
 
   def userPearson(ratings: DataFrame, c: EventCols = EventCols(),
       strategy: String = "auto", restrictTo: Option[DataFrame] = None): DataFrame =
-    build(ratings, joinKey = c.item, pairKey = c.user, c.rating,
-      "user1", "user2", pearsonMode = true, strategy, restrictTo)
+    model(RecMethod.UserPearCF, ratings, c, strategy, restrictTo)
+
+  /** The CF model of method `m` (not SVD). Item models pair items over the
+    * co-rating key user; user models pair users over items. `stats`, when
+    * the caller measured them with [[corpusStats]] on `ratings`, make the
+    * 'auto' strategy pick pure.
+    */
+  private[recdb] def model(m: RecMethod, ratings: DataFrame, c: EventCols,
+      strategy: String = "auto", restrictTo: Option[DataFrame] = None,
+      stats: Option[CorpusStats] = None): DataFrame = {
+    require(m != RecMethod.SVD, "SVD trains factors, not a similarity model")
+    val pearsonMode = m == RecMethod.ItemPearCF || m == RecMethod.UserPearCF
+    if (RecMethod.isUserBased(m))
+      build(ratings, joinKey = c.item, pairKey = c.user, c.rating,
+        "user1", "user2", pearsonMode, strategy, restrictTo, stats)
+    else
+      build(ratings, joinKey = c.user, pairKey = c.item, c.rating,
+        "item1", "item2", pearsonMode, strategy, restrictTo, stats)
+  }
+
+  /** A corpus measured from its co-rating key's side: `events`, the sparse
+    * join's fan-out Σm² (m = events per key), `keys` (distinct co-rating
+    * keys, exact: the dense vector width) and `entities` (distinct pair
+    * keys, approximate).
+    */
+  private[recdb] final case class CorpusStats(events: Long, fanout: Long, keys: Long,
+      entities: Long)
+
+  /** [[CorpusStats]] in one aggregation: group by the co-rating key, then
+    * fold the groups. `entities` is the estimate of a union of per-key HLL
+    * sketches — it feeds only the strategy's cost model and bounds, whose
+    * margins dwarf the sketch's ~2 % error. (coalesce: an empty frame folds
+    * zero groups to NULL.)
+    */
+  private[recdb] def corpusStats(r: DataFrame, joinKey: String,
+      pairKey: String): CorpusStats = {
+    import org.apache.spark.sql.types._
+    val pk = r.schema(pairKey).dataType match {
+      case IntegerType | LongType | StringType | BinaryType => col(pairKey)
+      case _ => col(pairKey).cast(StringType) // hll_sketch_agg's input types
+    }
+    val row = r.groupBy(col(joinKey))
+      .agg(count(lit(1)).as("m"), hll_sketch_agg(pk).as("h"))
+      .agg(coalesce(sum(col("m")), lit(0L)),
+        coalesce(sum(col("m") * col("m")), lit(0L)), count(lit(1)),
+        coalesce(hll_sketch_estimate(hll_union_agg(col("h"))), lit(0L)))
+      .head()
+    CorpusStats(row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
+  }
+
+  /** The 'auto' pick: dense when the vector width and entity count are
+    * bounded, the vectors fit the pair join's broadcast, and the dense
+    * pair-loop cells undercut the join rows × their relative cost.
+    */
+  private def denseWins(st: CorpusStats): Boolean = {
+    val (dims, entities) = (st.keys, st.entities)
+    dims <= DenseDimLimit && entities <= DenseEntityLimit &&
+      // the pair join broadcasts one side of the vecs frame
+      // (entities × dims cells) — cap it like the scoring sweep does
+      entities * dims <= DenseVecCells &&
+      entities * entities * dims / 2 < DenseJoinCostRatio * st.fanout
+  }
 
   /** Physical strategy dispatch. "join" = sparse co-rating self-join (the
     * unbounded-scale path: cost tracks actual co-ratings, one shuffle on the
@@ -189,47 +246,38 @@ object Similarity {
     * co-rated dot (for Pearson the vectors hold mean-CENTERED values, so
     * zero-fill still equals the co-rated centered dot). "auto" picks dense
     * when both the dimension and the entity count are bounded (the regime
-    * after hashing/bucketing items at 100 TB), sparse otherwise.
+    * after hashing/bucketing items at 100 TB), sparse otherwise — from the
+    * caller's `stats` without a job, else from one memoized [[corpusStats]]
+    * aggregation.
     */
   private def build(r: DataFrame, joinKey: String, pairKey: String,
       rating: String, out1: String, out2: String, pearsonMode: Boolean,
-      strategy: String, restrictTo: Option[DataFrame] = None): DataFrame = {
+      strategy: String, restrictTo: Option[DataFrame],
+      stats: Option[CorpusStats]): DataFrame = {
     // A restricted build (only pairs touching `restrictTo` keys — the exact
     // model slice a point query consumes) always takes the sparse join: the
     // dense path's whole design is enumerating ALL n²/2 candidate pairs,
     // which is precisely the work the restriction exists to avoid.
-    if (restrictTo.isDefined)
-      return (
-        if (pearsonMode) pearson(r, joinKey, pairKey, rating, out1, out2, restrictTo)
-        else cosine(r, joinKey, pairKey, rating, out1, out2, restrictTo))
+    def sparse(restrict: Option[DataFrame]): DataFrame =
+      if (pearsonMode) pearson(r, joinKey, pairKey, rating, out1, out2, restrict)
+      else cosine(r, joinKey, pairKey, rating, out1, out2, restrict)
+    if (restrictTo.isDefined) return sparse(restrictTo)
     val dense = strategy match {
       case "dense" => true
       case "join" => false
-      case "auto" =>
-        val key = (r.queryExecution.analyzed.canonicalized,
-          s"model|$joinKey|$pairKey")
-        memoized(key) {
-          // one stats job: sparse-join fan-out + the vector dimension
-          // (coalesce: sum over ZERO groups is NULL — empty events frame)
-          val row = r.groupBy(col(joinKey)).agg(count(lit(1)).as("m"))
-            .agg(coalesce(sum(col("m") * col("m")), lit(0L)).as("fanout"),
-              count(lit(1)).as("d")).head()
-          val fanout = row.getLong(0)
-          val dims = row.getLong(1)
-          val entities = r.select(col(pairKey)).distinct().count()
-          dims <= DenseDimLimit && entities <= DenseEntityLimit &&
-            // the pair join broadcasts one side of the vecs frame
-            // (entities × dims cells) — cap it like the scoring sweep does
-            entities * dims <= DenseVecCells &&
-            // cost model: dense pair-loop cells vs join rows × relative cost
-            entities * entities * dims / 2 < DenseJoinCostRatio * fanout
-        }
+      case "auto" => stats match {
+        case Some(st) => denseWins(st)
+        case None =>
+          memoized((r.queryExecution.analyzed.canonicalized,
+              s"model|$joinKey|$pairKey")) {
+            denseWins(corpusStats(r, joinKey, pairKey))
+          }
+      }
       case other => throw new IllegalArgumentException(
         s"unknown strategy '$other' (auto|join|dense)")
     }
     if (dense) densePairs(r, joinKey, pairKey, rating, out1, out2, pearsonMode)
-    else if (pearsonMode) pearson(r, joinKey, pairKey, rating, out1, out2)
-    else cosine(r, joinKey, pairKey, rating, out1, out2)
+    else sparse(None)
   }
 
   /** Dense slot index over a bounded dimension, built on the driver: the
@@ -274,17 +322,15 @@ object Similarity {
           .select(col(pairKey).as("p"), col(joinKey).as("jk"),
             (col(rating) - col("mean")).cast("double").as("rv"))
       }
-    // materialized: the pair join references vecs from BOTH branches, and
-    // alias-divergent branches defeat exchange reuse — without materialization
-    // the whole scan → index join → vector aggregation pipeline executes
-    // twice. The frame is bounded (≤ DenseEntityLimit rows × dims doubles),
-    // so persisting it once in executor storage is the cheap side of the
-    // trade at any scale where the dense path is valid.
-    val vecs = graft.Exec.materialize(
-      base.join(broadcast(idx), col("jk") === col("k"))
-        .groupBy("p")
-        .agg(VectorFns.denseVecAgg(col("ki"), col("rv"), dims).as("vec"))
-        .withColumn("nrm", sqrt(VectorFns.dotNative(col("vec"), col("vec")))))
+    // not persisted: the pair join reads vecs from both branches, and the
+    // branches' vector-aggregation exchanges are the same canonical plan,
+    // so Spark's exchange reuse runs the scan → index join → aggregation
+    // once and the second branch reads its shuffle output. No cache entry,
+    // and no count job, outlives the build.
+    val vecs = base.join(broadcast(idx), col("jk") === col("k"))
+      .groupBy("p")
+      .agg(VectorFns.denseVecAgg(col("ki"), col("rv"), dims).as("vec"))
+      .withColumn("nrm", sqrt(VectorFns.dotNative(col("vec"), col("vec"))))
     val a = vecs.select(col("p").as("p1"), col("vec").as("v1"), col("nrm").as("n1"))
     val bb = vecs.select(col("p").as("p2"), col("vec").as("v2"), col("nrm").as("n2"))
     val dot = VectorFns.dotNative(col("v1"), col("v2"))

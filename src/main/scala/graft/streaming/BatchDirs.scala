@@ -13,18 +13,6 @@ import org.apache.spark.sql.types.StructType
   */
 private[streaming] object BatchDirs {
 
-  /** Cap the file count of a per-batch STATE write. A micro-batch's
-    * persisted statistic (digest partials, window digests, rep sidecars,
-    * word frequencies) is small relative to the batch, but an uncoalesced
-    * write emits one part-file per task — up to 32 per dir per stage at
-    * local[32] — and on a metadata-slow FS the file churn (create +
-    * footer read + eventual recursive delete) dominates the actual work
-    * (round 14: s_dedup_exact 1.1 s builder vs 13.6 s driver). This is
-    * the coalesce discipline [[AnnIndexMaintainer]]'s sidecars already
-    * apply, behind a conf so a real cluster ingesting large micro-batches
-    * can widen it: `spark.graft.stream.statePartitions` (default 1;
-    * ≤ 0 disables the coalesce entirely).
-    */
   /** Cluster rows by the partition-layout column with an EXPLICIT partition
     * count before a dynamic-partition write. A bare `repartition(col)`
     * leaves the count to AQE, which coalesces a small batch's shuffle to
@@ -40,6 +28,18 @@ private[streaming] object BatchDirs {
       math.max(1, df.sparkSession.sparkContext.defaultParallelism),
       org.apache.spark.sql.functions.col(c))
 
+  /** Cap the file count of a per-batch STATE write. A micro-batch's
+    * persisted statistic (digest partials, window digests, rep sidecars,
+    * word frequencies) is small relative to the batch, but an uncoalesced
+    * write emits one part-file per task — up to 32 per dir per stage at
+    * local[32] — and on a metadata-slow FS the file churn (create +
+    * footer read + eventual recursive delete) dominates the actual work
+    * (round 14: s_dedup_exact 1.1 s on one host, 13.6 s on another). This is
+    * the coalesce discipline [[AnnIndexMaintainer]]'s sidecars already
+    * apply, behind a conf so a real cluster ingesting large micro-batches
+    * can widen it: `spark.graft.stream.statePartitions` (default 1;
+    * ≤ 0 disables the coalesce entirely).
+    */
   def stateParts(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf
       .getOption("spark.graft.stream.statePartitions")

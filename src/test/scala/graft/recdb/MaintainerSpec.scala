@@ -81,4 +81,40 @@ class MaintainerSpec extends SparkSpec {
     val d3 = Seq((9L, 1L, 1.0)).toDF("userid", "itemid", "rating")
     fixed.processBatch("p1", d3, batchId = 2L) shouldBe false
   }
+
+  test("RecDBProperties: the auto-create never overwrites a set; a live " +
+      "reader never sees a torn write") {
+    import java.util.concurrent.{CountDownLatch, Executors}
+    val catalog = new RecCatalog(
+      Files.createTempDirectory("graft-props-race").toString + "/catalog")
+    val set = RecDbProperties(0.25, 3, false)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      // first reads race a set on a fresh catalog
+      val go = new CountDownLatch(1)
+      val racers = (1 to 4).map(i => pool.submit(new Runnable {
+        def run(): Unit = {
+          go.await()
+          if (i == 1) catalog.setProperties(set) else catalog.properties
+          ()
+        }
+      }))
+      go.countDown()
+      racers.foreach(_.get())
+      catalog.properties shouldBe set
+      // a writer alternates two rows while this thread reads them live
+      val (a, b) = (RecDbProperties(0.9, 1, true), RecDbProperties(0.7, 2, false))
+      val stop = new java.util.concurrent.atomic.AtomicBoolean
+      val writer = pool.submit(new Runnable {
+        def run(): Unit = {
+          var i = 0
+          while (!stop.get) { catalog.setProperties(if (i % 2 == 0) a else b); i += 1 }
+        }
+      })
+      val seen = try (1 to 2000).map(_ => catalog.properties).toSet
+        finally stop.set(true)
+      writer.get()
+      seen.diff(Set(set, a, b)) shouldBe empty
+    } finally pool.shutdownNow()
+  }
 }

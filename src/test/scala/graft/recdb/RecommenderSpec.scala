@@ -458,6 +458,96 @@ class RecommenderSpec extends SparkSpec {
       Similarity.userCosine(ratings, c).count()
   }
 
+  /** `df` written as parquet and read back: events as a table serves them. */
+  def parquetEvents(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val p = Files.createTempDirectory("graft-ev-p").toString + "/ev"
+    df.write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  test("job budget: CREATE, a top-k materialization and the first resident load") {
+    val (cat, models) = freshDirs()
+    // the denser fixture takes the dense build and dense scoring, as the
+    // serving benchmark's corpus does
+    val r = parquetEvents(denser)
+    jobsRunBy(Recommender.create(spark, "jb", r, "tbljb", c, "itemcoscf",
+      cat, models)) should be <= 12
+    jobsRunBy(Recommender.materializeView(spark, "jb", r, cat,
+      models + "/views", topK = Some(3))) should be <= 9
+    jobsRunBy(Recommender.recommendTopK(spark, r, "tbljb", c, "itemcoscf",
+      Some(cat), userId = 1L, k = 2).collect()) shouldBe 1
+  }
+
+  test("dense build: both sides of the pair join share one vector aggregation") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val r = parquetEvents(denser)
+    Seq(Similarity.itemCosine(r, c, "dense"),
+        Similarity.userPearson(r, c, "dense")).foreach { m =>
+      m.collect()
+      val all = nodes(m.queryExecution.executedPlan)
+      all.count {
+        case x: ShuffleExchangeExec => x.toString.contains("graft_dense_vec_agg")
+        case _ => false
+      } shouldBe 1
+      all.exists(_.isInstanceOf[ReusedExchangeExec]) shouldBe true
+    }
+  }
+
+  test("CREATE of a dense-built model leaves no cached frame behind") {
+    val (cat, models) = freshDirs()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Recommender.create(spark, "nc", denser, "tblnc", c, "itemcoscf", cat, models)
+    Recommender.create(spark, "ncp", denser, "tblnc", c, "userpearcf", cat, models)
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before) shouldBe empty
+  }
+
+  test("catalog modelRows is the persisted model's row count, every CF method") {
+    val (cat, models) = freshDirs()
+    val single = Seq((1L, 1L, 5.0)).toDF("userid", "itemid", "rating")
+    for {
+      (fx, r) <- Seq("denser" -> denser, "micro" -> ratings, "single" -> single)
+      m <- Seq("itemcoscf", "itempearcf", "usercoscf", "userpearcf")
+      nbr <- Seq(0, 2)
+    } {
+      val e = Recommender.create(spark, s"mr_${fx}_${m}_$nbr", r,
+        s"tbl_$fx$nbr", c, m, cat, models, neighborhood = nbr)
+      withClue(s"$fx $m nbr=$nbr: ") {
+        e.modelRows shouldBe spark.read.parquet(e.modelPaths.head).count()
+        cat.get(e.name).get.modelRows shouldBe e.modelRows
+      }
+    }
+  }
+
+  test("R17 rebuild records what a fresh CREATE on the same events records") {
+    import org.apache.spark.sql.functions.col
+    Seq("itemcoscf", "userpearcf", "svd").foreach { m =>
+      val (cat, models) = freshDirs()
+      val evPath = Files.createTempDirectory("graft-ev-rb").toString + "/ev"
+      denser.where(col("userid") <= 8).write.parquet(evPath)
+      Recommender.create(spark, "rb", spark.read.parquet(evPath), "tblrb", c,
+        m, cat, models, neighborhood = 3)
+      new IncrementalMaintainer(cat, evPath).processBatch("rb",
+        denser.where(col("userid") > 8)) shouldBe true
+      val rebuilt = cat.get("rb").get
+      val (cat2, models2) = freshDirs()
+      val fresh = Recommender.create(spark, "rb", spark.read.parquet(evPath),
+        "tblrb", c, m, cat2, models2, neighborhood = 3)
+      withClue(s"$m: ") {
+        rebuilt.copy(modelPaths = Nil) shouldBe fresh.copy(modelPaths = Nil)
+        rebuilt.eventTotal shouldBe denser.count()
+        if (m != "svd") spark.read.parquet(rebuilt.modelPaths.head).collect()
+          .toSet shouldBe spark.read.parquet(fresh.modelPaths.head).collect().toSet
+      }
+    }
+  }
+
   test("svd: rank-50 factors, all-pairs scores, reconstructs known ratings sanely") {
     val (cat, models) = freshDirs()
     val e = Recommender.create(spark, "s1", ratings, "tbl", c, "SVD", cat, models)

@@ -557,4 +557,49 @@ class StreamingSpec extends SparkSpec {
     // ever observes a write still in flight
     done.get() shouldBe 2
   }
+
+  test("inParallel: an interrupted caller drains every body, then " +
+      "rethrows with its interrupt flag set") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val (spun, woken) = (new AtomicInteger, new AtomicInteger)
+    @volatile var seen: Option[(Boolean, Int, Int)] = None
+    val caller = new Thread(() =>
+      try graft.Exec.inParallel(
+        () => { // ignores interrupts, like a body blocked in a write
+          started.countDown()
+          val t0 = System.nanoTime()
+          while (System.nanoTime() - t0 < 300000000L) {}
+          spun.incrementAndGet(); ()
+        },
+        () => {
+          started.countDown()
+          try Thread.sleep(60000)
+          catch { case _: InterruptedException => woken.incrementAndGet(); () }
+        })
+      catch {
+        case _: InterruptedException => seen =
+          Some((Thread.currentThread().isInterrupted, spun.get, woken.get))
+      })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(30000)
+    // the uninterruptible body had finished and the sleeping one had been
+    // cancelled before the caller saw the exception
+    seen shouldBe Some((true, 1, 1))
+  }
+
+  test("inParallel: runs at most MaxParallel bodies at once") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val (running, peak, done) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    graft.Exec.inParallel((1 to 3 * graft.Exec.MaxParallel).map { _ => () =>
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(50)
+      running.decrementAndGet(); done.incrementAndGet(); ()
+    }: _*)
+    done.get() shouldBe 3 * graft.Exec.MaxParallel
+    peak.get() should be <= graft.Exec.MaxParallel
+  }
 }
