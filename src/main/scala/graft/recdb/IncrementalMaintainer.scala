@@ -39,6 +39,10 @@ final class IncrementalMaintainer(
     * at-least-once foreachBatch contract idempotent: a replayed batch (driver
     * restart between append and checkpoint commit) is skipped instead of
     * double-appending events and double-counting the update counter.
+    *
+    * Each catalog write is a [[RecCatalog.update]] of this batch's own
+    * fields: point reads bump the entry's query counter, and a
+    * materialization may publish a view, while the batch works.
     */
   def processBatch(name: String, batch: DataFrame,
       batchId: Long = Long.MinValue): Boolean = {
@@ -48,15 +52,15 @@ final class IncrementalMaintainer(
     def stamped(e: RecEntry): RecEntry =
       if (batchId == Long.MinValue) e else e.copy(lastBatchId = batchId)
     val n = batch.count()
-    if (n == 0) { catalog.put(stamped(entry)); return false }
+    if (n == 0) { catalog.update(name)(stamped); return false }
     batch.write.mode("append").parquet(eventsPath)
-    val counter = entry.updateCounter + n
     // recathon.c:1089: counter >= update_threshold × eventtotal → full rebuild
-    if (counter >= updateThreshold * entry.eventTotal) {
-      rebuild(stamped(entry))
+    if (entry.updateCounter + n >= updateThreshold * entry.eventTotal) {
+      rebuild(name, entry, stamped)
       true
     } else {
-      catalog.put(stamped(entry).copy(updateCounter = counter))
+      catalog.update(name)(e =>
+        stamped(e).copy(updateCounter = e.updateCounter + n))
       false
     }
   }
@@ -64,20 +68,26 @@ final class IncrementalMaintainer(
   /** Full retrain over the current events store; counters reset and
     * eventTotal re-recorded (recathon.c:1174-1180).
     */
-  private def rebuild(entry: RecEntry): Unit = {
+  private def rebuild(name: String, entry: RecEntry,
+      stamped: RecEntry => RecEntry): Unit = {
     // CREATE's own train-and-persist path over the grown events store: the
     // NBRHOOD bound is re-applied (a rebuild must not silently widen a
     // sparsified model back to all pairs) and the corpus stats re-measured
     val events = org.apache.spark.sql.SparkSession.active.read.parquet(eventsPath)
-    catalog.put(Recommender.train(events, entry.copy(updateCounter = 0,
-      viewPath = None, viewComplete = false, viewTopK = -1L)))
-    // a rebuilt model invalidates any materialized prediction view. Its
-    // files go only after the catalog stops naming them, so point reads
+    val t = Recommender.train(events, entry)
+    // a rebuilt model invalidates any materialized prediction view — the
+    // one the catalog names when the retrain commits
+    var stale: Option[String] = None
+    catalog.update(name) { e =>
+      stale = e.viewPath
+      stamped(e).copy(eventTotal = t.eventTotal, nUsers = t.nUsers,
+        nItems = t.nItems, modelRows = t.modelRows, updateCounter = 0,
+        viewPath = None, viewComplete = false, viewTopK = -1L)
+    }
+    // its files go only after the catalog stops naming them, so point reads
     // keep serving the pre-rebuild view through the retrain instead of
     // failing on a missing path
-    entry.viewPath.foreach { p =>
-      Recommender.deleteViewVersions(p, keepFrom = Long.MaxValue)
-    }
+    stale.foreach(Recommender.deleteViewVersions(_, keepFrom = Long.MaxValue))
   }
 
   /** Attach to a streaming events DataFrame: the R17 hook as a sink. */

@@ -172,10 +172,13 @@ final class RecCatalog(dirStr: String) {
   /** Read-modify-write of one entry, atomic against every other entry
     * write or delete in this JVM — a point read's R18 query-counter bump
     * must not put back a view pointer that a concurrent materialization or
-    * rebuild just replaced, nor a dropped entry.
+    * rebuild just replaced, nor a dropped entry. Returns the entry written,
+    * None when there is no entry `name`; when `f` throws, nothing is.
     */
-  def update(name: String)(f: RecEntry => RecEntry): Unit =
-    RecCatalog.writes.synchronized { get(name).foreach(e => put(f(e))) }
+  def update(name: String)(f: RecEntry => RecEntry): Option[RecEntry] =
+    RecCatalog.writes.synchronized {
+      get(name).map { e => val n = f(e); put(n); n }
+    }
 
   def delete(name: String): Boolean =
     RecCatalog.writes.synchronized(Files.deleteIfExists(file(name)))

@@ -1,7 +1,11 @@
 package graft.recdb
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DatasetShim
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** The user-facing API mirroring RecDB's SQL surface (SURVEY.md §2.1):
   *
@@ -180,9 +184,17 @@ object Recommender {
     }
   }
 
-  /** R18 query-counter bookkeeping (RecScan init, execRecommend.c:831). */
-  private def bumpQueryCounter(catalog: RecCatalog, name: String): Unit =
-    catalog.update(name)(e => e.copy(queryCounter = e.queryCounter + 1))
+  /** R18 query-counter bookkeeping (RecScan init, execRecommend.c:831):
+    * one catalog read-modify-write of entry `name`, which `check` vets
+    * first — when it throws, nothing is written. Returns the entry as
+    * bumped, None when there is no entry `name`.
+    */
+  private[graft] def bumpQueryCounter(catalog: RecCatalog, name: String,
+      check: RecEntry => Unit = _ => ()): Option[RecEntry] =
+    catalog.update(name) { e =>
+      check(e)
+      e.copy(queryCounter = e.queryCounter + 1)
+    }
 
   /** Serving cache: one entry per (session, view version), holding up to
     * two serving forms of that version, each built on first use:
@@ -415,7 +427,8 @@ object Recommender {
     // reaped here.
     e.viewPath.filter(_ != path).foreach(invalidateServedView)
     deleteViewVersions(path, keepFrom = ver - 1)
-    catalog.put(catalog.get(name).get.copy(viewPath = Some(path),
+    // only the view fields: point reads bump the entry meanwhile
+    catalog.update(name)(_.copy(viewPath = Some(path),
       viewComplete = topK.isEmpty,
       viewTopK = topK.map(_.toLong).getOrElse(-1L), viewVersion = ver))
     path
@@ -458,8 +471,9 @@ object Recommender {
     * only materializable serving artifact). The answer comes from the first
     * of:
     *
-    *   1. the view's [[ResidentTopK]] index: at most k rows, already
-    *      ranked, as a local relation — collecting it runs no Spark job;
+    *   1. the view's [[ResidentTopK]] index ([[residentRead]]): at most k
+    *      rows, already ranked, as a local relation — collecting it runs no
+    *      Spark job;
     *   2. a view over the resident cap: a pushed `user = ?` filter over the
     *      user-clustered cached view (batch stats prune to one user's rows);
     *   3. no view deep enough: the computed path, scoped to the one user.
@@ -477,22 +491,56 @@ object Recommender {
       userId: Long, k: Int = 10): DataFrame = {
     require(k >= 0, s"k must be >= 0, got $k")
     val method = RecMethod.parse(methodStr)
-    val hit = catalog.flatMap(_.findByTagAndMethod(eventsTag, method))
-    hit.foreach(e => bumpQueryCounter(catalog.get, e.name))
+    val hit = catalog.flatMap(cat => cat.findByTagAndMethod(eventsTag, method)
+      .map(e => bumpQueryCounter(cat, e.name).getOrElse(e)))
+    hit.flatMap(residentRead(spark, _, userId, k,
+        pointOutput(c.user, c.item, "score")))
+      .map(DatasetShim.ofRows(spark, _))
+      .getOrElse(topKPlan(spark, events, c, method, hit, userId, k))
+  }
+
+  /** A view of `e` deep enough for a top-k point query. */
+  private def viewServes(e: RecEntry, k: Int): Boolean =
+    e.viewPath.isDefined && (e.viewComplete || e.viewTopK >= k)
+
+  /** Attributes of a point read's (user, item, score) rows, under the given
+    * names and typed as the view's columns.
+    */
+  private[graft] def pointOutput(user: String, item: String,
+      score: String): Seq[Attribute] =
+    Seq(AttributeReference(user, LongType)(), AttributeReference(item, LongType)(),
+      AttributeReference(score, DoubleType)())
+
+  /** The resident point read, shared by [[recommendTopK]] and the legacy
+    * SQL `RECOMMEND(k)` form: `userId`'s top-k from `e`'s view index, as a
+    * local relation over `output` ([[pointOutput]]). `e` is the entry its
+    * caller's R18 bump wrote. None when no view of `e` is deep enough or
+    * the view is over the resident cap; [[topKPlan]] answers those.
+    */
+  private[graft] def residentRead(spark: SparkSession, e: RecEntry,
+      userId: Long, k: Int, output: Seq[Attribute]): Option[LocalRelation] =
+    if (!viewServes(e, k)) None
+    else {
+      // the catalog's (approximate) corpus stats bound the view's rows
+      val bound = if (e.nUsers < 0 || e.nItems < 0) -1L
+        else e.nUsers * (if (e.viewComplete) e.nItems else e.viewTopK)
+      residentTopK(spark, EventCols(e.userCol, e.itemCol, e.ratingCol),
+        e.viewPath.get, bound).map(_.topK(output, userId, k))
+    }
+
+  /** A point read [[residentRead]] does not answer, as a Spark plan over
+    * (user, item, score): a view of `hit` deep enough (so over the resident
+    * cap) serves a `user = ?` filter over its cached frame; otherwise the
+    * query computes, scoped to the one user.
+    */
+  private[graft] def topKPlan(spark: SparkSession, events: => DataFrame,
+      c: EventCols, method: RecMethod, hit: Option[RecEntry], userId: Long,
+      k: Int): DataFrame = {
     def ranked(scores: DataFrame): DataFrame =
       scores.orderBy(col("score").desc, col(c.item)).limit(k)
-    hit.filter(e => e.viewPath.isDefined &&
-        (e.viewComplete || e.viewTopK >= k)) match {
+    hit.filter(viewServes(_, k)) match {
       case Some(e) =>
-        val path = e.viewPath.get
-        // the catalog's (approximate) corpus stats bound the view's rows
-        val bound = if (e.nUsers < 0 || e.nItems < 0) -1L
-          else e.nUsers * (if (e.viewComplete) e.nItems else e.viewTopK)
-        residentTopK(spark, c, path, bound) match {
-          case Some(index) => index.topK(spark, userId, k)
-          case None =>
-            ranked(servedView(spark, c, path).where(col(c.user) === userId))
-        }
+        ranked(servedView(spark, c, e.viewPath.get).where(col(c.user) === userId))
       case None =>
         val ev = events
         // the one-user scope as the RECOMMEND clause's user-qual builds it

@@ -1,8 +1,10 @@
 package graft.recdb
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 /** One view version held in driver arrays for job-free point reads. User
   * keys ascend; user `users(i)`'s rows are `offsets(i) until offsets(i+1)`
@@ -10,20 +12,20 @@ import org.apache.spark.sql.types.StructType
   * the order [[Recommender.recommendTopK]]'s Spark paths sort by. 16 bytes
   * per view row plus 12 per user.
   */
-final class ResidentTopK private (schema: StructType, users: Array[Long],
-    offsets: Array[Int], items: Array[Long], scores: Array[Double]) {
+final class ResidentTopK private (users: Array[Long], offsets: Array[Int],
+    items: Array[Long], scores: Array[Double]) {
 
-  /** The user's top-k as a local relation of at most k rows, already in
-    * order: Catalyst plans a LocalTableScan, so collecting runs no job.
-    * A user absent from the view gets the empty relation.
+  /** The user's top-k as a local relation of at most k (user, item, score)
+    * rows over `output`, already in order: the rows are built straight from
+    * the arrays, and Catalyst plans a LocalTableScan, so collecting runs no
+    * job. A user absent from the view gets the empty relation.
     */
-  def topK(spark: SparkSession, user: Long, k: Int): DataFrame = {
+  def topK(output: Seq[Attribute], user: Long, k: Int): LocalRelation = {
     val u = java.util.Arrays.binarySearch(users, user)
     val from = if (u < 0) 0 else offsets(u)
     val n = if (u < 0) 0 else math.min(k, offsets(u + 1) - from)
-    val out = new java.util.ArrayList[Row](n)
-    (from until from + n).foreach(j => out.add(Row(user, items(j), scores(j))))
-    spark.createDataFrame(out, schema)
+    LocalRelation(output,
+      (from until from + n).map(j => InternalRow(user, items(j), scores(j))))
   }
 }
 
@@ -75,8 +77,8 @@ object ResidentTopK {
     if (!fits) None
     else {
       offsets += n
-      Some(new ResidentTopK(view.schema, users.result(), offsets.result(),
-        items.result(), scores.result()))
+      Some(new ResidentTopK(users.result(), offsets.result(), items.result(),
+        scores.result()))
     }
   }
 }

@@ -53,7 +53,7 @@ object DeferredAction {
 }
 
 final case class DeferredActionExec(output: Seq[Attribute], label: String,
-    thunk: () => Seq[Row]) extends LeafExecNode {
+    @transient thunk: () => Seq[Row]) extends LeafExecNode {
   // once per executed plan: collect() after execute() (or the gate
   // harness's count-then-write) must observe the SAME action run, not
   // re-fire a second (empty-by-idempotence) one mid-statement.
@@ -61,7 +61,10 @@ final case class DeferredActionExec(output: Seq[Attribute], label: String,
   // an exchange fed by this leaf (ORDER BY / GROUP BY / JOIN over the
   // RETURNING set) serializes with UnsafeRowSerializer, which
   // ClassCastExceptions on the converter's GenericInternalRow output.
-  private lazy val result: Array[InternalRow] = {
+  // Thunk and rows are driver-only: a parent's task closure may serialize
+  // this node, and the thunk holds the SparkSession, which an Observation
+  // makes unserializable.
+  @transient private lazy val result: Array[InternalRow] = {
     val conv = CatalystTypeConverters.createToCatalystConverter(schema)
     val proj = UnsafeProjection.create(output, output)
     thunk().map(r =>

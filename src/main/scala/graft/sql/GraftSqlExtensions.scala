@@ -314,10 +314,15 @@ object GraftSql {
     else vecRows(session.table(q), s"query view '$q'")
   }
 
-  private[sql] def registerSpec(spec: RecSpec): String = {
-    val name = "graft_rec_" + Integer.toHexString(spec.hashCode()).toLowerCase
-    specs.put(name, spec)
-    name
+  /** The spec's placeholder name: its hash, probed on to the next free
+    * (or same-spec) slot, so two specs with equal hashes never share one.
+    */
+  private[sql] def registerSpec(spec: RecSpec): String = specs.synchronized {
+    def name(h: Int) = "graft_rec_" + Integer.toHexString(h)
+    var h = spec.hashCode()
+    while (Option(specs.get(name(h))).exists(_ != spec)) h += 1
+    specs.put(name(h), spec)
+    name(h)
   }
 
   private[sql] def lookupSpec(name: String): Option[RecSpec] =
@@ -767,21 +772,26 @@ object GraftSql {
             others.map(o => lit(0).cast(events.schema(o).dataType).as(o)).toSeq: _*)
         full.queryExecution.analyzed
       case s: LegacyRecSpec =>
-        val cat = catalog(session)
-        val e = cat.get(s.recName).getOrElse(throw new IllegalArgumentException(
-          s"recommender ${s.recName} does not exist (utility.c:968)"))
-        require(s.userCol.equalsIgnoreCase(e.userCol),
-          s"legacy RECOMMEND qualifier '${s.userCol}' must be the " +
-            s"recommender's user column '${e.userCol}'")
-        // the point query: served from the recommender's view (resident
-        // index, zero jobs) when one is deep enough, else computed — the
-        // events table is resolved only then
-        Recommender
-          .recommendTopK(session, session.table(e.eventsTag), e.eventsTag,
-            EventCols(e.userCol, e.itemCol, e.ratingCol), e.method.name,
-            Some(cat), s.userId, s.k)
-          .select(col(e.userCol), col(e.itemCol), col("score").as(e.ratingCol))
-          .queryExecution.analyzed
+        // resolve and R18-bump the named entry in one catalog write; a
+        // wrong qualifier fails the statement before anything is written
+        val e = Recommender.bumpQueryCounter(catalog(session), s.recName,
+            e => require(s.userCol.equalsIgnoreCase(e.userCol),
+              s"legacy RECOMMEND qualifier '${s.userCol}' must be the " +
+                s"recommender's user column '${e.userCol}'"))
+          .getOrElse(throw new IllegalArgumentException(
+            s"recommender ${s.recName} does not exist (utility.c:968)"))
+        // the point query, as Recommender.recommendTopK answers it: the
+        // resident index's rows, already named as the recommender's clause
+        // columns, spliced in as they are (zero jobs, nothing to analyze);
+        // else a Spark plan — the events table is resolved only to compute
+        val c = EventCols(e.userCol, e.itemCol, e.ratingCol)
+        Recommender.residentRead(session, e, s.userId, s.k,
+            Recommender.pointOutput(e.userCol, e.itemCol, e.ratingCol))
+          .getOrElse(Recommender
+            .topKPlan(session, session.table(e.eventsTag), c, e.method,
+              Some(e), s.userId, s.k)
+            .select(col(e.userCol), col(e.itemCol), col("score").as(e.ratingCol))
+            .queryExecution.analyzed)
       case s: StateReadSpec =>
         import graft.streaming.{AnnIndexMaintainer, CurateMaintainer,
           SearchIndexMaintainer, ShardMaintainer, SnapshotManifest}

@@ -117,4 +117,95 @@ class MaintainerSpec extends SparkSpec {
       seen.diff(Set(set, a, b)) shouldBe empty
     } finally pool.shutdownNow()
   }
+
+  /** `rows` as a batch whose first evaluation runs `during` once, in a
+    * task of this JVM: between the maintainer's catalog read and its write.
+    */
+  def batchRunning(rows: Seq[(Long, Long, Double)])(during: => Unit) = {
+    import org.apache.spark.sql.functions.{col, udf}
+    MaintainerSpec.during.set(() => during)
+    val fire = udf { (_: Long) => MaintainerSpec.fire(); true }
+    rows.toDF("userid", "itemid", "rating").coalesce(1)
+      .where(fire(col("userid")))
+  }
+
+  /** A point read's R18 bump. */
+  def bump(catalog: RecCatalog, name: String): Unit = {
+    catalog.update(name)(e => e.copy(queryCounter = e.queryCounter + 1)); ()
+  }
+
+  def maintained(name: String): (RecCatalog, String, String) = {
+    val base = Files.createTempDirectory("graft-rmw").toString
+    val catalog = new RecCatalog(s"$base/catalog")
+    val eventsPath = s"$base/events.parquet"
+    new MicroFixtureSpec {}.fixture.toDF("userid", "itemid", "rating")
+      .write.parquet(eventsPath) // 10 events
+    Recommender.create(spark, name, spark.read.parquet(eventsPath), "tbl", c,
+      "itemcoscf", catalog, s"$base/models")
+    (catalog, eventsPath, base)
+  }
+
+  test("a below-threshold batch keeps the bumps and the view published " +
+      "while it ran") {
+    val (catalog, eventsPath, base) = maintained("rw")
+    val view = s"$base/views/rw.view.v1.parquet"
+    val batch = batchRunning(Seq((5L, 1L, 4.0), (5L, 2L, 2.0), (5L, 3L, 5.0))) {
+      (1 to 3).foreach(_ => bump(catalog, "rw"))
+      // as materializeView publishes a view
+      catalog.update("rw")(_.copy(viewPath = Some(view), viewTopK = 3L,
+        viewVersion = 1L))
+    }
+    new IncrementalMaintainer(catalog, eventsPath)
+      .processBatch("rw", batch, batchId = 0L) shouldBe false
+    val e = catalog.get("rw").get
+    e.updateCounter shouldBe 3L
+    e.lastBatchId shouldBe 0L
+    e.queryCounter shouldBe 3L
+    e.viewPath shouldBe Some(view)
+    e.viewTopK shouldBe 3L
+    e.viewVersion shouldBe 1L
+  }
+
+  test("a rebuilding batch keeps the bumps made while it ran and the " +
+      "version of a view it drops") {
+    val (catalog, eventsPath, base) = maintained("rb")
+    val batch = batchRunning(Seq((5L, 1L, 4.0), (5L, 2L, 2.0), (5L, 3L, 5.0),
+        (5L, 4L, 1.0), (6L, 1L, 3.0))) {
+      (1 to 2).foreach(_ => bump(catalog, "rb"))
+      catalog.update("rb")(_.copy(
+        viewPath = Some(s"$base/views/rb.view.v1.parquet"), viewTopK = 3L,
+        viewVersion = 1L))
+    }
+    new IncrementalMaintainer(catalog, eventsPath)
+      .processBatch("rb", batch, batchId = 0L) shouldBe true
+    val e = catalog.get("rb").get
+    e.eventTotal shouldBe 15L
+    e.updateCounter shouldBe 0L
+    e.lastBatchId shouldBe 0L
+    e.queryCounter shouldBe 2L
+    e.viewPath shouldBe None
+    e.viewTopK shouldBe -1L
+    e.viewVersion shouldBe 1L
+  }
+
+  test("a materialization keeps the bumps made while it ran") {
+    val (catalog, eventsPath, base) = maintained("mv")
+    val events = spark.read.parquet(eventsPath)
+    val during = batchRunning(events.as[(Long, Long, Double)].collect().toSeq) {
+      (1 to 2).foreach(_ => bump(catalog, "mv"))
+    }
+    Recommender.materializeView(spark, "mv", during, catalog,
+      s"$base/views", Some(3))
+    val e = catalog.get("mv").get
+    e.queryCounter shouldBe 3L // the scoring's own bump, then these two
+    e.viewVersion shouldBe 1L
+    e.viewTopK shouldBe 3L
+  }
+}
+
+object MaintainerSpec {
+  /** The side effect [[MaintainerSpec.batchRunning]]'s batch runs once. */
+  val during = new java.util.concurrent.atomic.AtomicReference[() => Unit]
+
+  def fire(): Unit = Option(during.getAndSet(null)).foreach(_())
 }

@@ -331,6 +331,41 @@ class RecommenderSpec extends SparkSpec {
       Some(cat), userId = 2L, k = 2).collect()) shouldBe 0
   }
 
+  test("resident point read: a bare local relation of the view's rows, " +
+      "zero jobs and one R18 bump per read") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val (cat, models) = freshDirs()
+    val r = denser
+    Recommender.create(spark, "pr", r, "tblpr", c, "itemcoscf", cat, models)
+    val path = Recommender.materializeView(spark, "pr", r, cat,
+      models + "/views", topK = Some(8))
+    // the view's rows per user, ranked score desc, then item
+    val ranked = rows(spark.read.parquet(path)).groupBy(_._1)
+      .map { case (u, rs) => u -> rs.sortBy(x => (-x._3, x._2)) }
+    def read(u: Long, k: Int) = Recommender.recommendTopK(spark, r, "tblpr", c,
+      "itemcoscf", Some(cat), userId = u, k = k)
+    def counter = cat.get("pr").get.queryCounter
+    read(1L, 8).collect() // the first read of the view version loads its index
+    ((1L to 24L) :+ 999L).foreach { u =>
+      Seq(1, 5, 8).foreach { k =>
+        withClue(s"user $u, k $k: ") {
+          val before = counter
+          var df: org.apache.spark.sql.DataFrame = null
+          var got = Seq.empty[(Long, Long, Double)]
+          jobsRunBy { df = read(u, k); got = rows(df) } shouldBe 0
+          counter shouldBe before + 1
+          got shouldBe ranked.getOrElse(u, Nil).take(k)
+          if (u <= 24L) got.length shouldBe k
+          df.schema shouldBe StructType(Seq(StructField("userid", LongType),
+            StructField("itemid", LongType), StructField("score", DoubleType)))
+          df.queryExecution.analyzed shouldBe a[LocalRelation]
+          df.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+        }
+      }
+    }
+  }
+
   test("resident index is dropped on re-materialization, DROP and R17 rebuild") {
     val (cat, models) = freshDirs()
     val r = ratings

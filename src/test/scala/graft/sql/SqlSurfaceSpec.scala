@@ -135,21 +135,90 @@ class SqlSurfaceSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("legacy RECOMMEND(k) over a top-k view collects with zero Spark jobs") {
-    fixture(ext)
-    ext.sql("""CREATE RECOMMENDER rec_resident ON ml_ratings USERS FROM userid
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val sq = ext
+    import sq.implicits._
+    // 24 users x 10 items, each user rating 7-8 of them: every user has 10
+    // predictions, so a top-8 view cuts each one's ranking
+    (for { u <- 1L to 24L; i <- 1L to 10L if (u * 7 + i * 3) % 4 != 0 }
+      yield (u, i, (1 + (u * i) % 5).toDouble))
+      .toDF("userid", "itemid", "rating").createOrReplaceTempView("ml_denser")
+    ext.sql("""CREATE RECOMMENDER rec_resident ON ml_denser USERS FROM userid
               |ITEMS FROM itemid EVENTS FROM rating USING itemCosCF""".stripMargin)
       .collect()
     try {
-      Recommender.materializeView(ext, "rec_resident", ext.table("ml_ratings"),
-        GraftSql.catalog(ext), GraftSql.modelsDir(ext) + "/views", Some(3))
-      def read(u: Int) =
-        ext.sql(s"SELECT itemid, rating FROM rec_resident RECOMMEND(3) userid = $u")
-          .collect()
-      read(1) // the first read of the view version loads its index
-      var got = Array.empty[org.apache.spark.sql.Row]
-      jobsRunBy { got = read(2) } shouldBe 0
-      got.length shouldBe 3
+      val cat = GraftSql.catalog(ext)
+      Recommender.materializeView(ext, "rec_resident", ext.table("ml_denser"),
+        cat, GraftSql.modelsDir(ext) + "/views", Some(8))
+      // the view's rows per user, ranked score desc, then item
+      val ranked = Recommender.recommendFromView(ext, "rec_resident", cat).get
+        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).map { case (u, rs) =>
+          u -> rs.sortBy(x => (-x._3, x._2)).map(x => (x._2, x._3))
+        }
+      def read(u: Long, k: Int) =
+        ext.sql(s"SELECT itemid, rating FROM rec_resident RECOMMEND($k) userid = $u")
+      def counter = cat.get("rec_resident").get.queryCounter
+      read(1, 8).collect() // the first read of the view version loads its index
+      ((1L to 24L) :+ 999L).foreach { u =>
+        Seq(1, 5, 8).foreach { k =>
+          withClue(s"user $u, k $k: ") {
+            val before = counter
+            var df: org.apache.spark.sql.DataFrame = null
+            var got = Seq.empty[(Long, Double)]
+            jobsRunBy {
+              df = read(u, k)
+              got = df.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+            } shouldBe 0
+            counter shouldBe before + 1
+            got shouldBe ranked.getOrElse(u, Nil).take(k)
+            if (u <= 24L) got.length shouldBe k
+            df.schema shouldBe StructType(Seq(StructField("itemid", LongType),
+              StructField("rating", DoubleType)))
+            // the index's rows spliced in as they are: the statement's own
+            // projection over one local relation, folded into it by the
+            // optimizer
+            df.queryExecution.analyzed match {
+              case Project(_, _: LocalRelation) => ()
+              case other => fail(s"not a Project over a LocalRelation:\n$other")
+            }
+            df.queryExecution.optimizedPlan shouldBe a[LocalRelation]
+          }
+        }
+      }
+      // SELECT * shows the recommender's three clause columns
+      ext.sql("SELECT * FROM rec_resident RECOMMEND(2) userid = 3").schema shouldBe
+        StructType(Seq(StructField("userid", LongType),
+          StructField("itemid", LongType), StructField("rating", DoubleType)))
     } finally ext.sql("DROP RECOMMENDER rec_resident").collect()
+  }
+
+  test("placeholder registry: two specs with equal hashes keep their own " +
+      "placeholders") {
+    import GraftSql.LegacyRecSpec
+    // a Long hashes as its low word XOR its high word, so user ids past
+    // 2^32 repeat the hashes of small ones: the first such id whose spec
+    // hashes as user 1's does
+    val a = LegacyRecSpec("rec", 10, "userid", 1L)
+    val u = Iterator.iterate(1L << 32)(_ + 1)
+      .find(x => LegacyRecSpec("rec", 10, "userid", x).hashCode == a.hashCode)
+      .get
+    val b = LegacyRecSpec("rec", 10, "userid", u)
+    a.hashCode shouldBe b.hashCode
+    val na = GraftSql.registerSpec(a)
+    val nb = GraftSql.registerSpec(b)
+    na should not be nb
+    GraftSql.lookupSpec(na) shouldBe Some(a)
+    GraftSql.lookupSpec(nb) shouldBe Some(b)
+    // re-issuing a statement reuses its slot
+    GraftSql.registerSpec(b) shouldBe nb
+    GraftSql.registerSpec(a) shouldBe na
+    // and each rewritten statement names its own spec
+    def placeholder(user: Long) = GraftSql.rewriteLegacyRecommend(ext,
+      s"SELECT itemid FROM rec RECOMMEND(10) userid = $user").get._2
+    GraftSql.lookupSpec(placeholder(1L)) shouldBe Some(a)
+    GraftSql.lookupSpec(placeholder(u)) shouldBe Some(b)
   }
 
   test("user-qual pre-filter: mixed WHERE prunes users yet keeps full filter") {
@@ -918,6 +987,23 @@ class SqlSurfaceSpec extends SparkSpec with BeforeAndAfterAll {
          |FROM GRAFT_SWEEP('$root', '', 'dry') GROUP BY family"""
         .stripMargin).collect().map(r => (r.getString(0), r.getLong(1)))
     grouped.toSeq shouldBe Seq(("superseded", 2L))
+  }
+
+  test("action relations survive an exchange in a session that has run " +
+      "an Observation: the deferred-action exec node keeps the session " +
+      "out of its serialized form") {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    // a fresh session of the same extensions: the observation stays in it
+    val s = ext.newSession()
+    s.range(3).observe(Observation("o"), count(lit(1))).collect()
+    val root = Files.createTempDirectory("sqlsweepobs").toString
+    new java.io.File(s"$root/old_a").mkdirs()
+    new java.io.File(s"$root/old_b").mkdirs()
+    graft.streaming.Retention.markSuperseded(s"$root/old_a", s"$root/new")
+    graft.streaming.Retention.markSuperseded(s"$root/old_b", s"$root/new")
+    s.sql(s"SELECT * FROM GRAFT_SWEEP('$root', '', 'dry') ORDER BY state_dir")
+      .collect().map(_.getString(1)).toSeq shouldBe Seq("old_a", "old_b")
   }
 
   test("GRAFT_PACK argument hardening: numeric pin names are rejected " +
