@@ -125,11 +125,10 @@ object Bench {
         .mkString("{", ",", "}")
       if (!servingOnly) { // don't clobber the committed artifact from a
         // workloads-only attribution run
-        // tmp-write + atomic rename: emit() now fires up to ~8 times per
-        // run, and a SIGKILL inside a truncate-in-place write would leave
+        // committed, not truncated in place: emit() fires up to ~8 times
+        // per run, and a SIGKILL inside an in-place write would leave
         // exactly the unparsable partial this artifact exists to prevent
-        val tmp = java.nio.file.Paths.get("BENCH_FULL.json.tmp")
-        java.nio.file.Files.writeString(tmp,
+        StateCommit.writeFile("BENCH_FULL.json", (
           s"""{"metric":"total","value":$total,"unit":"sec","stage":"$stage",""" +
             s""""protocol":"${if (warmDir.isEmpty) s"cold1+warm${nPasses - 1},min"
               else s"warm@$warmDir,min$nPasses"}",""" +
@@ -138,11 +137,7 @@ object Bench {
             // without re-parsing stdout
             s""""n_queries":${results.size},"n_failed":$nFailed,""" +
             s""""queries":$fullQs,$workloads,"workloads_reps":$reps,""" +
-            s""""sf":"$sfDir"}""" + "\n")
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get("BENCH_FULL.json"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            s""""sf":"$sfDir"}""" + "\n").getBytes("UTF-8"))
       }
       val recQs = results.filter(_._1.startsWith("r_"))
         .map { case (k, v) => s"\"$k\":${f3(v)}" }.mkString("{", ",", "}")

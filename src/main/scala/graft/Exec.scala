@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -57,24 +58,27 @@ object Exec {
   /** Recursive local-path copy (overwrites `dst`) — snapshot a maintained
     * state dir so a destructive operation (compaction, executor runs) can
     * act on a private copy while shared read-only consumers keep their
-    * original. Local-FS rendering of a cheap table-format CLONE.
+    * original. Local-FS rendering of a cheap table-format CLONE. A `src`
+    * that is a [[StateCommit]] link copies what it serves; links inside
+    * it are copied as links (their targets are relative siblings, copied
+    * too).
     */
   def copyPath(src: String, dst: String): Unit = {
     deletePath(dst)
-    val sp = java.nio.file.Paths.get(src)
-    val dp = java.nio.file.Paths.get(dst)
-    if (!java.nio.file.Files.exists(sp)) return
-    val it = java.nio.file.Files.walk(sp)
+    if (!Files.exists(Paths.get(src))) return
+    val sp = Paths.get(src).toRealPath()
+    val dp = Paths.get(dst)
+    val it = Files.walk(sp)
     try it.forEach { p =>
       val t = dp.resolve(sp.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) {
-        java.nio.file.Files.createDirectories(t); ()
-      } else {
-        java.nio.file.Files.createDirectories(t.getParent)
-        java.nio.file.Files.copy(p, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        ()
+      if (Files.isSymbolicLink(p))
+        Files.createSymbolicLink(t, Files.readSymbolicLink(p))
+      else if (Files.isDirectory(p)) Files.createDirectories(t)
+      else {
+        Files.createDirectories(t.getParent)
+        Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
       }
+      ()
     } finally it.close()
   }
 
@@ -140,13 +144,7 @@ object Exec {
     errs.headOption.foreach(e => throw e)
   }
 
-  /** Recursive local-path delete (model/state/sink swap dirs). */
-  def deletePath(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    val f = new java.io.File(path)
-    if (f.exists()) rm(f)
-  }
+  /** Recursive local-path delete: [[StateCommit.delete]] (links are not
+    * followed; a committed name goes with its versions and temps). */
+  def deletePath(path: String): Unit = StateCommit.delete(path)
 }

@@ -43,14 +43,11 @@ object Verify {
       case c => c.toString
     } + "\""
     def writeJson(path: String, entries: Iterable[(String, String)]): Unit = {
-      // atomic tmp+rename: these files are rewritten mid-loop now, and a
-      // kill inside a truncate-in-place write must not leave a partial
-      val tmp = Paths.get(path + ".tmp")
-      Files.writeString(tmp, entries
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-      Files.move(tmp, Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // committed, not truncated in place: these files are rewritten
+      // mid-loop, and a kill inside the write must not leave a partial
+      StateCommit.writeFile(path, entries
+        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     // oracle_sql.json FIRST (before the SparkSession even exists).
     // Late-bound artifact paths: some oracles read parquet the gate itself

@@ -1,6 +1,6 @@
 package graft.recdb
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -18,10 +18,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   - events store: `eventsDir/batch=<v>/` — one overwrite-idempotent
   *     partition dir per applied batch (replays rewrite the same dir, never
   *     double-append);
-  *   - state: `stateDir/v<v>/<frame>.parquet`, committed by an ATOMIC_MOVE
-  *     of the `_LATEST` pointer AFTER state + events + model are all
-  *     written. A crash mid-batch leaves `_LATEST` at the previous version;
-  *     the foreachBatch replay overwrites the orphaned dirs and re-commits.
+  *   - state: `stateDir/v<v>/<frame>.parquet`, committed by a
+  *     [[graft.StateCommit.writeFile]] of the `_LATEST` pointer AFTER
+  *     state + events + model are all written. A crash mid-batch leaves
+  *     `_LATEST` at the previous version; the foreachBatch replay
+  *     overwrites the orphaned dirs and re-commits;
+  *   - model: `modelPath`, a [[graft.StateCommit.writeDir]] swap per
+  *     batch, so a reader sees one whole model.
   *
   * Supports the four similarity methods (cosine + Pearson, item + user
   * based); SVD factors are not sum-mergeable — use the full-rebuild
@@ -49,16 +52,9 @@ final class DeltaSimilarityMaintainer(
 
   private def commit(v: Long): Unit = {
     Files.createDirectories(Paths.get(stateDir))
-    val tmp = Paths.get(stateDir, s"_LATEST.tmp$v")
-    Files.write(tmp, v.toString.getBytes)
-    Files.move(tmp, latestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.StateCommit.writeFile(latestPath.toString, v.toString.getBytes)
     // keep the previous version for post-crash replay reads, gc older
-    val keep = Set(s"v$v", s"v${v - 1}")
-    Option(Paths.get(stateDir).toFile.listFiles()).foreach(_.foreach { f =>
-      if (f.getName.startsWith("v") && !keep(f.getName))
-        graft.Exec.deletePath(f.getPath)
-    })
+    graft.StateCommit.reap(stateDir, "v(\\d+)".r)(n => n == v || n == v - 1)
   }
 
   private def frameNames: Seq[String] =
@@ -93,7 +89,8 @@ final class DeltaSimilarityMaintainer(
   }
 
   private def writeModel(spark: SparkSession, v: Long): Unit =
-    modelAt(spark, v).write.mode("overwrite").parquet(modelPath)
+    graft.StateCommit.writeDir(modelPath)(
+      modelAt(spark, v).write.mode("overwrite").parquet(_))
 
   /** Initialize from a base events snapshot (version 0). */
   def init(base: DataFrame): Unit = {

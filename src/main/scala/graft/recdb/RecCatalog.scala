@@ -1,6 +1,6 @@
 package graft.recdb
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Properties
 import scala.jdk.CollectionConverters._
 
@@ -155,18 +155,14 @@ final class RecCatalog(dirStr: String) {
     }
   }
 
-  /** Write `p` to a temp file, then rename it over `target`: a concurrent
-    * reader sees the old file or the new one, never a truncated one (list()
-    * skips the .tmp name). Callers hold [[RecCatalog.writes]].
+  /** Commit `p` as `target` ([[graft.StateCommit.writeFile]]): a
+    * concurrent reader sees the old file or the new one, never a truncated
+    * one (list() skips the temp name). Callers hold [[RecCatalog.writes]].
     */
   private def publish(target: Path, p: Properties, comment: String): Unit = {
-    val tmp = Files.createTempFile(dir, s".${target.getFileName}.", ".tmp")
-    try {
-      val out = Files.newOutputStream(tmp)
-      try p.store(out, comment) finally out.close()
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } finally { Files.deleteIfExists(tmp); () }
+    val out = new java.io.ByteArrayOutputStream(1024)
+    p.store(out, comment)
+    graft.StateCommit.writeFile(target.toString, out.toByteArray)
   }
 
   /** Read-modify-write of one entry, atomic against every other entry

@@ -59,16 +59,18 @@ object Recommender {
     entry
   }
 
-  /** Train `e`'s model on `events` and overwrite its model files — the one
-    * train-and-persist path of CREATE and the R17 rebuild. Returns `e` with
-    * the stats that make every later catalog-hit strategy pick pure: one
-    * aggregation measures eventTotal (EXACT: it anchors the R17 rebuild
-    * threshold, recathon.c:1089), the co-rating key count and the model
-    * build's own strategy inputs; the other entity count is an HLL
-    * estimate, which only feeds cost models and their bounds. The model's
-    * row count comes from the written files' footers, not from a re-read.
+  /** Train `e`'s model on `events` and commit its model files
+    * ([[graft.StateCommit.writeDir]]: a reader sees the old model or the
+    * new one) — the one train-and-persist path of CREATE and the R17
+    * rebuild. Returns `e` with the stats that make every later catalog-hit
+    * strategy pick pure: one aggregation measures eventTotal (EXACT: it
+    * anchors the R17 rebuild threshold, recathon.c:1089), the co-rating
+    * key count and the model build's own strategy inputs; the other
+    * entity count is an HLL estimate, which only feeds cost models and
+    * their bounds. The model's row count comes from the written files'
+    * footers, not from a re-read.
     */
-  private[recdb] def train(events: DataFrame, e: RecEntry): RecEntry = {
+  private[graft] def train(events: DataFrame, e: RecEntry): RecEntry = {
     val c = EventCols(e.userCol, e.itemCol, e.ratingCol)
     // SVD has no co-rating key; its stats take the item models' orientation
     val userBased = RecMethod.isUserBased(e.method)
@@ -77,13 +79,15 @@ object Recommender {
     val modelRows = e.method match {
       case RecMethod.SVD =>
         val (uf, itf) = FunkSVD.train(events, c)
-        uf.write.mode("overwrite").parquet(e.modelPaths.head)
-        itf.write.mode("overwrite").parquet(e.modelPaths(1))
+        graft.StateCommit.writeDir(e.modelPaths.head)(
+          uf.write.mode("overwrite").parquet(_))
+        graft.StateCommit.writeDir(e.modelPaths(1))(
+          itf.write.mode("overwrite").parquet(_))
         0L
       case m =>
-        applyNeighborhood(Similarity.model(m, events, c, stats = Some(st)), m,
-            e.neighborhood)
-          .write.mode("overwrite").parquet(e.modelPaths.head)
+        graft.StateCommit.writeDir(e.modelPaths.head)(
+          applyNeighborhood(Similarity.model(m, events, c, stats = Some(st)),
+            m, e.neighborhood).write.mode("overwrite").parquet(_))
         parquetRows(events.sparkSession, e.modelPaths.head)
     }
     e.copy(eventTotal = st.events,
@@ -125,16 +129,6 @@ object Recommender {
       Similarity.capNeighbors(model, e1, e2, nbr.toInt)
     }
 
-  /** Recursive local-path delete (model/view parquet dirs). */
-  private[recdb] def deleteDir(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    val f = new java.io.File(path)
-    if (f.exists()) rm(f)
-  }
-
   /** Drop model files, materialized view, and catalog entry
     * (utility.c:957-1091).
     */
@@ -145,7 +139,7 @@ object Recommender {
         // reap EVERY view version (the one-version grace of materializeView
         // may have left version N-1 on disk besides the current one)
         e.viewPath.foreach(deleteViewVersions(_, keepFrom = Long.MaxValue))
-        e.modelPaths.foreach(deleteDir)
+        e.modelPaths.foreach(graft.StateCommit.delete)
         catalog.delete(name)
     }
   }
@@ -339,8 +333,10 @@ object Recommender {
             // (LONG ids, utility.c:310-317), and skipping parquet schema
             // inference keeps the catalog-hit read job-free — EXPLAIN stays
             // zero-job and per-query serving skips a footer-listing job
-            (spark.read.schema(factorSchema).parquet(e.modelPaths.head),
-              spark.read.schema(factorSchema).parquet(e.modelPaths(1)))
+            (spark.read.schema(factorSchema).parquet(
+                graft.StateCommit.live(e.modelPaths.head)),
+              spark.read.schema(factorSchema).parquet(
+                graft.StateCommit.live(e.modelPaths(1))))
           case None => FunkSVD.train(events, c)
         }
         val scoped = users match {
@@ -352,7 +348,8 @@ object Recommender {
       case m =>
         val model = hit match {
           case Some(e) =>
-            spark.read.schema(modelSchema(m)).parquet(e.modelPaths.head)
+            spark.read.schema(modelSchema(m)).parquet(
+              graft.StateCommit.live(e.modelPaths.head))
           // on-the-fly model is cached because scoring consumes both triangle
           // halves; Spark's cache manager dedupes by plan, so repeated
           // identical OP_GENERATE queries share one entry. Long-lived
@@ -445,15 +442,10 @@ object Recommender {
       keepFrom: Long): Unit = {
     val f = new java.io.File(currentPath)
     val base = f.getName.replaceFirst("""\.view\.v\d+\.parquet$""", "")
-    val dir = f.getParentFile
     val pat = s"""\\Q$base\\E\\.view\\.v(\\d+)\\.parquet""".r
-    Option(if (dir == null) null else dir.listFiles()).foreach(_.foreach { s =>
-      s.getName match {
-        case pat(v) if v.toLong < keepFrom =>
-          deleteDir(s.getPath); invalidateServedView(s.getPath)
-        case _ => ()
-      }
-    })
+    Option(f.getParent).toSeq
+      .flatMap(graft.StateCommit.reap(_, pat)(_ >= keepFrom))
+      .foreach(invalidateServedView)
   }
 
   /** Serve predictions from the materialized view if present. */

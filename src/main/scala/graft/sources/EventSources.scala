@@ -56,9 +56,10 @@ object EventSources {
     * slot (SURVEY.md §2.2 sinks) for format-free parquet storage: merge the
     * delta with the existing table, keep the highest-`versionCol` row per
     * key (a null-payload delta row models a delete marker the caller can
-    * filter on read), and atomically swap via a temp directory — parquet
-    * reads are lazy, so overwriting the directory being read would corrupt
-    * the job.
+    * filter on read), and commit through [[graft.StateCommit.writeDir]] —
+    * the merge is written aside (parquet reads are lazy, so overwriting
+    * the directory being read would corrupt the job), and a reader or the
+    * next upsert sees every earlier merge or this one, at any crash point.
     *
     * `versionCol` should be unique per key (a timestamp/batch id); when it
     * may tie, pass `tieBreakCols` — they extend the window ordering (DESC)
@@ -73,18 +74,15 @@ object EventSources {
       tieBreakCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.expressions.Window
     val existing =
-      if (new java.io.File(path).exists()) Some(spark.read.parquet(path))
+      if (new java.io.File(graft.StateCommit.live(path)).exists())
+        Some(spark.read.parquet(path))
       else None
     val unioned = existing.map(_.unionByName(delta)).getOrElse(delta)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy((versionCol +: tieBreakCols).map(col(_).desc): _*)
     val merged = unioned.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
-    val tmp = path + ".__tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.Exec.deletePath(path)
-    if (!new java.io.File(tmp).renameTo(new java.io.File(path)))
-      throw new java.io.IOException(s"upsert swap failed: $tmp -> $path")
+    graft.StateCommit.writeDir(path)(merged.write.mode("overwrite").parquet(_))
   }
 
   /** Key/value coercion: int-like keys (floats truncate, recathon.c:487-506),

@@ -74,12 +74,10 @@ object Layout {
     * whose open/footer overhead eventually dominates scans and whose count
     * explodes driver file-listing memory. Sizing reads the CURRENT on-disk
     * bytes (compressed) from the filesystem, not a row count, so it holds
-    * at any schema/scale; the rewrite swaps via temp dirs — the old dir is
-    * renamed ASIDE before the new one takes its place and deleted only
-    * after, so a crash mid-swap leaves the data recoverable in one of the
-    * two temp dirs rather than gone (same local-FS rendering as
-    * [[EventSources.upsertByKey]]; at cluster scale a table format makes
-    * this a metadata transaction instead).
+    * at any schema/scale. The rewrite commits through
+    * [[graft.StateCommit.writeDir]]: a reader sees the old layout or the
+    * new one, never neither (at cluster scale a table format makes this a
+    * metadata transaction instead).
     *
     * Returns (filesBefore, filesAfter).
     */
@@ -90,27 +88,16 @@ object Layout {
       else if (f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
         Seq(f)
       else Seq.empty
-    val before = parquetFiles(new java.io.File(path))
+    val before = parquetFiles(new java.io.File(graft.StateCommit.live(path)))
     val bytes = before.map(_.length()).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val tmp = path + ".__compact"
     // coalesce, not repartition: narrow dependency, no shuffle — compaction
     // is an I/O rewrite, the data need not move between keys
-    spark.read.parquet(path).coalesce(n)
-      .write.mode("overwrite").parquet(tmp)
-    val after = parquetFiles(new java.io.File(tmp)).size
-    // rename the old dir aside first; delete it only once the new dir is in
-    // place — never a window where the table exists nowhere
-    val old = new java.io.File(path + ".__old")
-    graft.Exec.deletePath(old.getPath)
-    if (!new java.io.File(path).renameTo(old))
-      throw new java.io.IOException(s"compact swap failed: $path -> $old")
-    if (!new java.io.File(tmp).renameTo(new java.io.File(path))) {
-      old.renameTo(new java.io.File(path)) // restore; best-effort
-      throw new java.io.IOException(s"compact swap failed: $tmp -> $path")
+    graft.StateCommit.writeDir(path) { tmp =>
+      spark.read.parquet(path).coalesce(n)
+        .write.mode("overwrite").parquet(tmp)
+      (before.size, parquetFiles(new java.io.File(tmp)).size)
     }
-    graft.Exec.deletePath(old.getPath)
-    (before.size, after)
   }
 
   /** Write `df` as parquet clustered by the z-order of `cols`:

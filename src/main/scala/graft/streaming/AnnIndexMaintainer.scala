@@ -393,8 +393,8 @@ object AnnIndexMaintainer {
   // ---- versioned quantizer artifacts: which centroids served WHEN ----
 
   /** Persist a quantizer GENERATION: the centroid frame that starts
-    * serving once batch `batchId` commits — `qg<batchId>/`, atomically
-    * renamed like every other artifact. Growth and retrain both CHANGE
+    * serving once batch `batchId` commits — `qg<batchId>/`, committed
+    * like every other artifact. Growth and retrain both CHANGE
     * the active quantizer, so a reproducibility audit at an old horizon
     * needs not just the historical rows ([[readIndexAsOf]]) but the
     * historical centroid set; generations are append-only and re-read
@@ -403,14 +403,9 @@ object AnnIndexMaintainer {
     * (the executor's grow path does this automatically).
     */
   def persistCentroids(spark: SparkSession, indexDir: String,
-      batchId: Long, cdf: DataFrame): Unit = {
-    val tmp = new java.io.File(indexDir, s".qg$batchId.tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    cdf.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val dest = new java.io.File(indexDir, s"qg$batchId")
-    graft.Exec.deletePath(dest.getPath) // replay rewrites its generation
-    require(tmp.renameTo(dest), s"quantizer commit failed: $dest")
-  }
+      batchId: Long, cdf: DataFrame): Unit =
+    graft.StateCommit.writeDir(s"$indexDir/qg$batchId")(
+      cdf.coalesce(1).write.mode("overwrite").parquet(_))
 
   /** The quantizer that was SERVING at horizon `asOf`: the newest
     * persisted generation at or below it. Horizons before the first
@@ -435,14 +430,9 @@ object AnnIndexMaintainer {
     * THEN (growth never re-encodes, so a growth advances only the
     * quantizer generation and the codebook generation carries over). */
   def persistCodebook(spark: SparkSession, indexDir: String,
-      batchId: Long, cbDf: DataFrame): Unit = {
-    val tmp = new java.io.File(indexDir, s".cbg$batchId.tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    cbDf.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val dest = new java.io.File(indexDir, s"cbg$batchId")
-    graft.Exec.deletePath(dest.getPath) // replay rewrites its generation
-    require(tmp.renameTo(dest), s"codebook commit failed: $dest")
-  }
+      batchId: Long, cbDf: DataFrame): Unit =
+    graft.StateCommit.writeDir(s"$indexDir/cbg$batchId")(
+      cbDf.coalesce(1).write.mode("overwrite").parquet(_))
 
   /** The codebooks SERVING at horizon `asOf`: the newest persisted
     * generation at or below it. Horizons before the first generation
@@ -761,37 +751,33 @@ object AnnIndexMaintainer {
     val small = graft.Exec.materializeLocal(scored.select(col("id"),
       col("cell"), col("__ncell"), col("__dold"), col("__dnew")))
     val movers = small.where(col("__dnew") < col("__dold"))
-    // build the whole growth aside, commit with ONE rename — data,
+    // build the whole growth aside, commit it as ONE dir — data,
     // exclusions, metrics baseline, and the trainedBatch advance become
     // visible together (no duplicate-copy or missing-copy window, ever)
-    val tmpRoot = s"$indexDir/.g$growB.tmp"
-    graft.Exec.deletePath(tmpRoot)
     val moverCols = Seq(col("id"), col("v")) ++
       (if (pq) Seq(col("codes"), col("rn2")) else Nil) ++
       Seq(lit(growB).as("batch_id"),
         (col("__ncell") + lit(cents.length)).cast("int").as("cell"))
     // the three growth legs are independent once `small` is
     // checkpointed (mv + metrics read it; data re-runs the scan with v)
-    // and all land under tmpRoot before the single commit rename —
-    // overlap them (guide §2.6)
-    graft.Exec.inParallel(
-      () => scored.where(col("__dnew") < col("__dold"))
-        .select(moverCols: _*)
-        .transform(BatchDirs.clusterForWrite(_, "cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$tmpRoot/data"),
-      () => movers.select(col("id"), col("cell"), lit(growB).as("batch_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmpRoot/mv"),
-      // whole-index distortion under the grown quantizer = the new
-      // baseline
-      () => small.select(least(col("__dold"), col("__dnew")).as("__d"))
-        .agg(count(lit(1)).cast("long").as("n"),
-          coalesce(sum(col("__d")), lit(0.0)).as("sum_d2"))
-        .select(lit(growB).as("batch_id"), col("n"), col("sum_d2"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmpRoot/m"))
-    require(new java.io.File(tmpRoot)
-        .renameTo(new java.io.File(s"$indexDir/g$growB")),
-      s"grow commit failed: $indexDir/g$growB")
+    // and all land under tmpRoot before the single commit — overlap them
+    // (guide §2.6)
+    graft.StateCommit.writeDir(s"$indexDir/g$growB")(tmpRoot =>
+      graft.Exec.inParallel(
+        () => scored.where(col("__dnew") < col("__dold"))
+          .select(moverCols: _*)
+          .transform(BatchDirs.clusterForWrite(_, "cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$tmpRoot/data"),
+        () => movers.select(col("id"), col("cell"), lit(growB).as("batch_id"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmpRoot/mv"),
+        // whole-index distortion under the grown quantizer = the new
+        // baseline
+        () => small.select(least(col("__dold"), col("__dnew")).as("__d"))
+          .agg(count(lit(1)).cast("long").as("n"),
+            coalesce(sum(col("__d")), lit(0.0)).as("sum_d2"))
+          .select(lit(growB).as("batch_id"), col("n"), col("sum_d2"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmpRoot/m")))
     (cents ++ newCents).zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cid", "c")
   }

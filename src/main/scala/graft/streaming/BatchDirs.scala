@@ -70,10 +70,9 @@ private[streaming] object BatchDirs {
     * into `c<upTo>/`, then remove the absorbed dirs. Only compact batches
     * the stream has durably COMMITTED (default: max batch − 1, so the
     * newest batch stays replayable — a crash-replay of an absorbed batch
-    * would double its rows). Crash-safe: the consolidated dir is fully
-    * written under a temp name and renamed into place before any source
-    * dir is deleted; a crash in between leaves covered dirs that readers
-    * ignore.
+    * would double its rows). Crash-safe: the consolidated dir commits
+    * ([[graft.StateCommit.writeDir]]) before any source dir is deleted; a
+    * crash in between leaves covered dirs that readers ignore.
     */
   def compact(spark: SparkSession, indexDir: String, schema: StructType,
       partitionCol: Option[String], upToOpt: Option[Long]): Unit = {
@@ -87,7 +86,6 @@ private[streaming] object BatchDirs {
       s"compact($upTo) below existing compaction ${prevC.map(_._1).max}")
     val merged = readUnion(spark, absorb.map(_._2), schema,
       partitioned = partitionCol.isDefined).get
-    val tmp = new java.io.File(indexDir, s".c$upTo.tmp")
     // cluster rows by the layout column first so the fold writes ≈ one
     // file per partition value instead of one per (task, value) pair;
     // unpartitioned (small-statistic) folds take the stateParts cap for
@@ -95,12 +93,11 @@ private[streaming] object BatchDirs {
     val clustered = partitionCol.fold(stateParts(merged))(c =>
       clusterForWrite(merged, c))
     val writer = clustered.write.mode("overwrite")
-    partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(tmp.getPath)
-    val dest = new java.io.File(indexDir, s"c$upTo")
     // crash recovery: an existing c<upTo> is in `absorb` (its rows are
-    // already inside tmp), so dropping it before the rename loses nothing
-    if (dest.exists()) graft.Exec.deletePath(dest.getPath)
-    require(tmp.renameTo(dest), s"rename $tmp -> $dest failed")
+    // already in the new fold), so the commit replaces it
+    val dest = new java.io.File(indexDir, s"c$upTo")
+    graft.StateCommit.writeDir(dest.getPath)(
+      partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(_))
     absorb.filter(_._2 != dest.getPath)
       .foreach { case (_, d) => graft.Exec.deletePath(d) }
   }

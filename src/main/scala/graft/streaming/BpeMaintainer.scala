@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -175,24 +175,16 @@ object BpeMaintainer {
 
   private def commit(modelDir: String, v: Long, total: Long): Unit = {
     Files.createDirectories(Paths.get(modelDir))
-    val tmp = Paths.get(modelDir, s"_LATEST.tmp$v")
-    Files.write(tmp, s"$v $total".getBytes)
-    Files.move(tmp, latestPath(modelDir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.StateCommit.writeFile(latestPath(modelDir).toString,
+      s"$v $total".getBytes)
     // version retention: with a persisted policy
     // ([[Retention.setMergesPolicy]]) the model dir is APPEND-ONLY and
     // truncation belongs to the pin-aware vacuum
     // ([[Retention.vacuumMergeVersions]] — a SnapshotManifest pin can
     // then durably hold any horizon); without one, the legacy keep-two
     // window applies at commit time (serving + one rollback).
-    if (Retention.readPolicy(Retention.mergesPolicyPath(modelDir)).isEmpty) {
-      val keep = Set(s"v$v", s"v${v - 1}")
-      Option(Paths.get(modelDir).toFile.listFiles()).foreach(_.foreach { f =>
-        if (f.getName.startsWith("v") && !f.getName.startsWith("_") &&
-            !keep(f.getName))
-          graft.Exec.deletePath(f.getPath)
-      })
-    }
+    if (Retention.readPolicy(Retention.mergesPolicyPath(modelDir)).isEmpty)
+      graft.StateCommit.reap(modelDir, "v(\\d+)".r)(n => n == v || n == v - 1)
   }
 
   /** One micro-batch: aggregate the batch's word counts into its state

@@ -203,10 +203,10 @@ object CurateMaintainer {
     * `selection/s<batchId>` — the firing body of
     * [[processBatchDriftTriggered]], exposed so an out-of-band executor
     * ([[MaintenancePlanner]]'s `recurate` decision) can run the same
-    * re-derivation. Generations are APPEND-ONLY and committed by a
-    * single rename (written aside as `.s<batchId>.tmp` first), so a
+    * re-derivation. Generations are APPEND-ONLY and committed by
+    * [[graft.StateCommit.writeDir]] (written aside first), so a
     * reader always finds a complete selection — the previous generation
-    * stays in place until the new one's rename lands, and a crash in
+    * stays in place until the new one's commit lands, and a crash in
     * between leaves only an ignored temp dir (no window where
     * [[currentSelection]] has nothing to serve). The generation id IS
     * the version axis: [[selectionAsOf]] re-reads any historical
@@ -220,13 +220,9 @@ object CurateMaintainer {
       pplKeepBelow: Double = 3.43, tokenBudget: Long = 6000L): Unit = {
     val sel = curated(ingested, idCol, textCol, s"$stateDir/cur", width,
       pplKeepBelow, tokenBudget)
-    val selDir = new java.io.File(stateDir, "selection")
-    val tmp = new java.io.File(selDir, s".s$batchId.tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    sel.write.mode("overwrite").parquet(tmp.getPath)
-    val dest = new java.io.File(selDir, s"s$batchId")
-    graft.Exec.deletePath(dest.getPath) // replay rewrites its own generation
-    require(tmp.renameTo(dest), s"selection commit failed in $stateDir")
+    // a replay rewrites its own generation
+    graft.StateCommit.writeDir(s"$stateDir/selection/s$batchId")(
+      sel.write.mode("overwrite").parquet(_))
     new java.io.File(stateDir, s"selbase$batchId").mkdirs()
   }
 

@@ -45,7 +45,9 @@ import org.apache.spark.sql.functions._
   */
 object MaintenancePlanner {
 
-  sealed trait StateSpec { def name: String; def threshold: Double }
+  sealed trait StateSpec {
+    def name: String; def dir: String; def threshold: Double
+  }
 
   /** Training-shard layout ([[ShardMaintainer]]): tombstoned mass →
     * `compact`. With `manifestDirs`, the executor's fold runs
@@ -120,7 +122,9 @@ object MaintenancePlanner {
     * nightly GC as a scheduled planner citizen: one spec per state
     * TREE, not per state. */
   final case class SweepSpec(name: String, root: String,
-      threshold: Double, manifestDirs: Seq[String] = Nil) extends StateSpec
+      threshold: Double, manifestDirs: Seq[String] = Nil) extends StateSpec {
+    def dir: String = root
+  }
 
   private def staleOf(spark: SparkSession, sp: RetentionSpec): Seq[Long] =
     sp.kind match {
@@ -256,20 +260,34 @@ object MaintenancePlanner {
     * ANN specs re-pointed at their new generations). Idempotent in the
     * fixed point sense: a plan of all-`none` executes nothing and post ==
     * pre.
+    *
+    * Concurrency contract: the arms run concurrently, so each state owns
+    * its dirs outright. Two specs whose dirs are equal or nested (a
+    * [[SweepSpec]] root included), or an `annNewDirs` target equal to,
+    * inside or around another spec's dir or target, are rejected with an
+    * IllegalArgumentException before anything is measured or changed.
+    * Callbacks (`deltaCompactors`) must touch only the dir they are
+    * given.
     */
   def execute(spark: SparkSession, specs: Seq[StateSpec],
       annNewDirs: Map[String, String] = Map.empty,
       curateRuns: Map[String, CurateRun] = Map.empty,
       deltaCompactors: Map[String, (SparkSession, String) => Unit] =
         Map.empty): (DataFrame, Seq[StateSpec]) = {
+    // each (owner, dir) pair: spec dirs and the retrain targets
+    val owned = (specs.map(sp => sp.name -> sp.dir) ++ annNewDirs)
+      .map { case (n, d) => n -> new java.io.File(d).getCanonicalFile.toPath }
+    for (((n1, d1), i) <- owned.zipWithIndex; (n2, d2) <- owned.drop(i + 1)
+        if n1 != n2 && (d1.startsWith(d2) || d2.startsWith(d1)))
+      throw new IllegalArgumentException(
+        s"execute: states '$n1' ($d1) and '$n2' ($d2) have equal or " +
+          "nested dirs — remedies run concurrently and need disjoint ones")
     val pre = plan(spark, specs)
     val decisions = pre.select("state", "decision").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // fail FAST on a decision whose caller-supplied target is missing —
-    // BEFORE any remedy acts. The sequential loop aborted mid-way (arms
-    // before the bad spec had already acted); validating up front makes
-    // a mis-called execute() a no-op instead of a partial mutation, and
-    // lets the arms below overlap safely.
+    // BEFORE any remedy acts: a mis-called execute() is a no-op instead
+    // of a partial mutation, and the arms below can rely on the maps.
     specs.foreach {
       case AnnSpec(n, _, _, _, _)
           if decisions(n) == "retrain" && !annNewDirs.contains(n) =>
@@ -293,10 +311,10 @@ object MaintenancePlanner {
             "view was supplied in curateRuns")
       case _ => ()
     }
-    // each spec's remedy acts on its OWN state dir (disjoint dirs,
-    // per-state new-generation targets) — overlap the arms (guide
-    // §2.6); result order is index-pinned so the post plan and the
-    // returned spec seq are byte-identical to the sequential run
+    // each spec's remedy acts on its OWN state dir (disjoint, checked
+    // above) — overlap the arms (guide §2.6); result order is
+    // index-pinned so the post plan and the returned spec seq are
+    // byte-identical to the sequential run
     val postArr = new Array[StateSpec](specs.size)
     graft.Exec.inParallel(specs.zipWithIndex.map { case (sp0, i) =>
       () => postArr(i) = (sp0 match {
@@ -310,12 +328,10 @@ object MaintenancePlanner {
         }
         sp
       case sp @ AnnSpec(n, dir, t, gmax, rs) if decisions(n) == "retrain" =>
-        val newDir = annNewDirs.getOrElse(n,
-          throw new IllegalArgumentException(
-            s"execute: ANN state '$n' decided retrain but no new-generation " +
-              "dir was supplied in annNewDirs"))
+        val newDir = annNewDirs(n)
         val re = AnnIndexMaintainer.retrain(spark, dir, newDir)
-        re.coalesce(1).write.mode("overwrite").parquet(s"$newDir/cents")
+        graft.StateCommit.writeDir(s"$newDir/cents")(
+          re.coalesce(1).write.mode("overwrite").parquet(_))
         // quantizer GENERATION alongside the live copy: horizon reads of
         // the new generation resolve their centroid set from the state
         AnnIndexMaintainer.persistCentroids(spark, newDir,
@@ -330,22 +346,21 @@ object MaintenancePlanner {
         // the delta remedy the planner chose: extra centroids over the
         // drifted tail, movers-sized rewrite, SAME generation dir — the
         // state's current quantizer comes from its persisted-centroids
-        // artifact and the grown union set commits back to it
-        // (rename-aside) so serving and the next ingest pick it up
+        // artifact and the grown union set commits back to it so
+        // serving and the next ingest pick it up
         executeGrow(spark, n, dir, rs, pq = false)
         sp
       case sp @ AnnPqSpec(n, dir, t, m, kc, gmax, cbmax, rs)
           if decisions(n) == "retrain" =>
-        val newDir = annNewDirs.getOrElse(n,
-          throw new IllegalArgumentException(
-            s"execute: PQ state '$n' decided retrain but no new-generation " +
-              "dir was supplied in annNewDirs"))
+        val newDir = annNewDirs(n)
         val (cdf, cbDf) = AnnIndexMaintainer.retrainPq(spark, dir, newDir,
           m, kc, roundScale = rs)
-        cdf.coalesce(1).write.mode("overwrite").parquet(s"$newDir/cents")
+        graft.StateCommit.writeDir(s"$newDir/cents")(
+          cdf.coalesce(1).write.mode("overwrite").parquet(_))
         // the codebook is part of the PQ generation contract — persisted
         // beside the quantizer so serving resolves BOTH from the state
-        cbDf.coalesce(1).write.mode("overwrite").parquet(s"$newDir/codebook")
+        graft.StateCommit.writeDir(s"$newDir/codebook")(
+          cbDf.coalesce(1).write.mode("overwrite").parquet(_))
         AnnIndexMaintainer.persistCentroids(spark, newDir,
           AnnIndexMaintainer.trainedBatch(newDir), cdf)
         AnnIndexMaintainer.persistCodebook(spark, newDir,
@@ -359,16 +374,10 @@ object MaintenancePlanner {
         executeGrow(spark, n, dir, rs, pq = true)
         sp
       case sp @ DeltaSpec(n, dir, _) if decisions(n) == "compact" =>
-        deltaCompactors.getOrElse(n,
-          throw new IllegalArgumentException(
-            s"execute: delta state '$n' decided compact but no compactor " +
-              "was supplied in deltaCompactors"))(spark, dir)
+        deltaCompactors(n)(spark, dir)
         sp
       case sp @ CurateSpec(n, dir, _) if decisions(n) == "recurate" =>
-        val c = curateRuns.getOrElse(n,
-          throw new IllegalArgumentException(
-            s"execute: curate state '$n' decided recurate but no ingested " +
-              "view was supplied in curateRuns"))
+        val c = curateRuns(n)
         val cur = BatchDirs.listDirs(s"$dir/freq", "b").map(_._1)
           .maxOption.getOrElse(
             throw new IllegalStateException(
@@ -407,57 +416,22 @@ object MaintenancePlanner {
       postSpecs)
   }
 
-  /** The committed `<dir>/cents` location, healing the one crash window
-    * [[executeGrow]]'s two-rename commit leaves: a crash between
-    * `cents → .cents.old` and `.cents.tmp → cents` leaves NO live copy —
-    * but the union set is by then FULLY written at `.cents.tmp` (the
-    * aside rename runs strictly after the tmp write completes), so the
-    * resolver rolls the commit FORWARD (tmp renamed in, aside dropped)
-    * and every reader — the next [[executeGrow]], serving code pointed
-    * at `<dir>/cents` — finds the grown quantizer with no manual
-    * repair. If the tmp is gone too (manual cleanup), the aside rolls
-    * BACK. Either way there is no instant at which a reader finds
-    * nothing — the [[SnapshotManifest]] aside-fallback discipline
-    * applied to the executor's quantizer artifact. */
+  /** The committed `<dir>/cents` quantizer of an ANN state. Its commits
+    * go through [[graft.StateCommit.writeDir]], so a reader finds the old
+    * set or the grown one at every crash point; a state with none fails
+    * explicitly. */
   def servingCentsFile(dir: String): java.io.File = {
-    val live = new java.io.File(dir, "cents")
-    val tmp = new java.io.File(dir, ".cents.tmp")
-    if (live.exists()) {
-      // live + tmp coexisting is a HEALTHY transient of executeGrow's
-      // commit (the tmp is fully written before live is renamed aside),
-      // so readers must NOT clean the orphan up — a reader-side delete
-      // here would race the writer and destroy its fresh union set
-      // mid-commit. The hazard a cleanup would target (a stale tmp
-      // pairing with a fresh aside and rolling an OLD union forward)
-      // cannot occur: executeGrow deletes the tmp before every write,
-      // so any tmp next to an aside is the current commit's own.
-      return live
-    }
-    val aside = new java.io.File(dir, ".cents.old")
-    // two concurrent repairers race the renames below; losing the race
-    // is FINE — the dir is healthy once either wins — so each failed
-    // rename re-checks live before declaring the repair failed
-    def committed(): Boolean = live.exists()
-    if (tmp.exists() && aside.exists()) {
-      require(tmp.renameTo(live) || committed(),
-        s"cents crash-repair failed (roll-forward): $dir")
-      graft.Exec.deletePath(aside.getPath)
-      live
-    } else if (aside.exists()) {
-      require(aside.renameTo(live) || committed(),
-        s"cents crash-repair failed (roll-back): $dir")
-      live
-    } else if (committed()) live // a concurrent repairer just won
-    else throw new IllegalStateException(
+    val live = new java.io.File(graft.StateCommit.live(s"$dir/cents"))
+    if (!live.exists()) throw new IllegalStateException(
       s"no persisted quantizer at $live (write the state's centroid " +
         "frame there, the retrain convention)")
+    live
   }
 
   /** The executor's in-place grow: the state's serving quantizer comes
-    * from its persisted `<dir>/cents` artifact
-    * ([[servingCentsFile]] — crash-window healing), the grown union set
-    * commits back to it rename-aside (serving and the next ingest pick
-    * it up), and a quantizer GENERATION lands for horizon reads. */
+    * from its persisted `<dir>/cents` artifact ([[servingCentsFile]]),
+    * the grown union set commits back to it (serving and the next ingest
+    * pick it up), and a quantizer GENERATION lands for horizon reads. */
   private def executeGrow(spark: SparkSession, n: String, dir: String,
       rs: Int, pq: Boolean): Unit = {
     val centsPath =
@@ -474,14 +448,8 @@ object MaintenancePlanner {
         roundScale = rs)
       else AnnIndexMaintainer.grow(spark, dir, cents, kNew,
         roundScale = rs)
-    val tmp = new java.io.File(dir, ".cents.tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    union.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val aside = new java.io.File(dir, ".cents.old")
-    graft.Exec.deletePath(aside.getPath)
-    require(centsPath.renameTo(aside) && tmp.renameTo(centsPath),
-      s"execute: quantizer commit failed for ANN state '$n'")
-    graft.Exec.deletePath(aside.getPath)
+    graft.StateCommit.writeDir(centsPath.getPath)(
+      union.coalesce(1).write.mode("overwrite").parquet(_))
     AnnIndexMaintainer.persistCentroids(spark, dir,
       AnnIndexMaintainer.trainedBatch(dir), union)
   }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Reads BELOW the floor fail with an explicit retention error, never
   * silently-wrong history: the vacuum leaves a `_retfloor` marker (text
-  * file, temp-write + rename, floors only ever rise) that
+  * file, a [[graft.StateCommit.writeFile]], floors only ever rise) that
   * [[CurateMaintainer.selectionAsOf]] / [[AnnIndexMaintainer.centroidsAsOf]]
   * consult when no generation resolves — the reader then reports "below
   * the retention floor" instead of the misleading "state never fired".
@@ -51,13 +51,13 @@ object Retention {
     new java.io.File(indexDir, "_qg_retfloor").getPath
 
   /** The committed retention floor, if a vacuum ever ran here. */
-  def readFloor(markerPath: String): Option[Long] = {
-    val f = new java.io.File(markerPath)
-    if (!f.isFile) None
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try Some(src.mkString.trim.toLong) finally src.close()
-    }
+  def readFloor(markerPath: String): Option[Long] =
+    readMarker(markerPath).map(_.toLong)
+
+  private def readMarker(path: String): Option[String] = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.isRegularFile(p)) None
+    else Some(java.nio.file.Files.readString(p).trim)
   }
 
   /** Floors only rise: a later vacuum with a lower effective floor (more
@@ -65,15 +65,8 @@ object Retention {
     * vacuum already removed. */
   private def writeFloor(markerPath: String, floor: Long): Unit = {
     val committed = readFloor(markerPath).getOrElse(Long.MinValue)
-    if (floor > committed) {
-      val tmp = new java.io.File(markerPath + ".tmp")
-      graft.Exec.deletePath(tmp.getPath)
-      val w = new java.io.PrintWriter(tmp)
-      try w.print(floor.toString) finally w.close()
-      val dest = new java.io.File(markerPath)
-      graft.Exec.deletePath(dest.getPath) // single-file swap; tmp is complete
-      require(tmp.renameTo(dest), s"retention marker commit failed: $dest")
-    }
+    if (floor > committed)
+      graft.StateCommit.writeFile(markerPath, floor.toString.getBytes)
   }
 
   private[streaming] def mergesMarker(modelDir: String): String =
@@ -95,7 +88,7 @@ object Retention {
     * ([[MaintenancePlanner.RetentionSpec]] with no `keepFrom`) needs no
     * per-spec knobs thereafter. Pins still lower the floor further; an
     * explicit `keepFrom` below the policy floor still wins (both only
-    * ever KEEP more). Temp-write + rename like every marker. */
+    * ever KEEP more). Committed like every marker. */
   def setSelectionPolicy(stateDir: String, keepLast: Int): Unit =
     writePolicy(selectionPolicyPath(stateDir), keepLast)
 
@@ -120,24 +113,11 @@ object Retention {
   private def writePolicy(path: String, keepLast: Int): Unit = {
     require(keepLast >= 1,
       s"retention policy must keep at least 1 generation, got $keepLast")
-    val tmp = new java.io.File(path + ".tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    val w = new java.io.PrintWriter(tmp)
-    try w.print(s"keepLast=$keepLast") finally w.close()
-    val dest = new java.io.File(path)
-    graft.Exec.deletePath(dest.getPath)
-    require(tmp.renameTo(dest), s"retention policy commit failed: $dest")
+    graft.StateCommit.writeFile(path, s"keepLast=$keepLast".getBytes)
   }
 
-  def readPolicy(path: String): Option[Int] = {
-    val f = new java.io.File(path)
-    if (!f.isFile) None
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try Some(src.mkString.trim.stripPrefix("keepLast=").toInt)
-      finally src.close()
-    }
-  }
+  def readPolicy(path: String): Option[Int] =
+    readMarker(path).map(_.stripPrefix("keepLast=").toInt)
 
   /** The floor the state's own policy implies for one generation family:
     * the id of the keepLast-th-newest generation (everything strictly
@@ -455,7 +435,7 @@ object Retention {
     * every rebuild permanently doubles that index's footprint until an
     * operator remembers a manual [[retireState]]. The executor stamps
     * it the moment the new generation commits; the nightly sweep
-    * retires it pin-guardedly. Temp-write + rename like every marker. */
+    * retires it pin-guardedly. Committed like every marker. */
   def markSuperseded(oldDir: String, newDir: String): Unit = {
     // producer contract, asserted here so the shape can never arise: no
     // NESTED state layouts under a superseded dir. [[sweep]]'s held-pin
@@ -474,14 +454,9 @@ object Retention {
         s"superseded dir are unsupported — ${nested.mkString(", ")}. " +
         "Retire or relocate the nested state first; a pin holding the " +
         "superseded dir could not govern its retention.")
-    val path = new java.io.File(oldDir, supersededMarkerName).getPath
-    val tmp = new java.io.File(path + ".tmp")
-    graft.Exec.deletePath(tmp.getPath)
-    val w = new java.io.PrintWriter(tmp)
-    try w.print(newDir) finally w.close()
-    graft.Exec.deletePath(path)
-    require(tmp.renameTo(new java.io.File(path)),
-      s"superseded marker commit failed: $path")
+    graft.StateCommit.writeFile(
+      new java.io.File(oldDir, supersededMarkerName).getPath,
+      newDir.getBytes("UTF-8"))
   }
 
   /** The pins refusing a [[retireState]] of `stateDir`, each naming its

@@ -141,8 +141,8 @@ object SearchIndexMaintainer {
   }
 
   /** Fold committed batch dirs (default horizon: max batch − 1), then
-    * derive the lengths sidecar FROM the folded postings (temp-write +
-    * rename, the BatchDirs crash discipline; superseded sidecars are
+    * derive the lengths sidecar FROM the folded postings (committed like
+    * the fold, [[graft.StateCommit.writeDir]]; superseded sidecars are
     * dropped). A doc's postings land wholly in its ingest batch, so the
     * sidecar is exact for everything at or below the horizon.
     */
@@ -151,14 +151,11 @@ object SearchIndexMaintainer {
     BatchDirs.compact(spark, stateDir, postSchema(idCol), None, upToOpt)
     BatchDirs.listDirs(stateDir, "c").lastOption.foreach {
       case (upTo, dir) =>
-        val tmp = new java.io.File(stateDir, s".len_c$upTo.tmp")
-        BatchDirs.stateParts(
-          spark.read.schema(postSchema(idCol)).parquet(dir)
-            .groupBy(col(idCol)).agg(sum(col("tf")).as("len")))
-          .write.mode("overwrite").parquet(tmp.getPath)
-        val dest = new java.io.File(stateDir, s"len_c$upTo")
-        if (dest.exists()) graft.Exec.deletePath(dest.getPath)
-        require(tmp.renameTo(dest), s"rename $tmp -> $dest failed")
+        graft.StateCommit.writeDir(s"$stateDir/len_c$upTo")(
+          BatchDirs.stateParts(
+            spark.read.schema(postSchema(idCol)).parquet(dir)
+              .groupBy(col(idCol)).agg(sum(col("tf")).as("len")))
+            .write.mode("overwrite").parquet(_))
         Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
           .filter(f => f.getName.startsWith("len_c") &&
             f.getName != s"len_c$upTo")

@@ -34,7 +34,9 @@ import graft.ops.Packing
   */
 object ShardMaintainer {
 
-  private def dataDir(dir: String) = s"$dir/data"
+  /** The shard rows; [[compactTombstones]] swaps it whole, so every
+    * access goes through [[graft.StateCommit.live]]. */
+  private def dataDir(dir: String) = graft.StateCommit.live(s"$dir/data")
   private def metaDir(dir: String) = s"$dir/meta"
   private def seqsDir(dir: String) = s"$dir/seqs"
 
@@ -269,34 +271,24 @@ object ShardMaintainer {
     * resurrect rows whose tombstones were folded — compaction trades
     * time-travel depth for scan width, the same trade a table format's
     * VACUUM makes; compact only below your oldest pinned corpus version.
-    * Crash-safe via the rename-aside swap ([[graft.sources.Layout]]'s
-    * compact discipline); sidecars are deleted only after the swap lands.
+    * Crash-safe: the rewrite commits through
+    * [[graft.StateCommit.writeDir]]; sidecars are deleted only after the
+    * swap lands.
     */
   def compactTombstones(spark: SparkSession, dir: String,
       upTo: Long): Unit = {
     val d = dataDir(dir)
     if (!new java.io.File(d).exists()) return
-    val tmp = d + ".__compact"
-    graft.Exec.deletePath(tmp)
-    val rows = spark.read.parquet(d)
     val folded = tombstoneBatchesBefore(spark, dir, upTo + 1L)
-    rows.join(folded.groupBy("seq_id").agg(max(col("tomb_batch")).as("__mt")),
+    graft.StateCommit.writeDir(d)(spark.read.parquet(d)
+      .join(folded.groupBy("seq_id").agg(max(col("tomb_batch")).as("__mt")),
         Seq("seq_id"), "left_outer")
       .where(col("__mt").isNull || col("batch_id") > col("__mt"))
       .drop("__mt")
       .repartition(math.max(1, spark.sparkContext.defaultParallelism / 2),
         col("epoch"), col("shard_id"))
       .sortWithinPartitions(col("epoch"), col("shard_id"), col("ord"))
-      .write.mode("overwrite").partitionBy("epoch", "shard_id").parquet(tmp)
-    val old = new java.io.File(d + ".__old")
-    graft.Exec.deletePath(old.getPath)
-    if (!new java.io.File(d).renameTo(old))
-      throw new java.io.IOException(s"compact swap failed: $d -> $old")
-    if (!new java.io.File(tmp).renameTo(new java.io.File(d))) {
-      old.renameTo(new java.io.File(d)) // restore; best-effort
-      throw new java.io.IOException(s"compact swap failed: $tmp -> $d")
-    }
-    graft.Exec.deletePath(old.getPath)
+      .write.mode("overwrite").partitionBy("epoch", "shard_id").parquet(_))
     // SEAL the history below the folded horizon BEFORE retiring the
     // sidecars: once the marker exists, readShardsAsOf refuses horizons
     // the folded tombstones can no longer reproduce — an explicit error,

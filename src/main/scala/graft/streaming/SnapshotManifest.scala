@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * "version 7 of the training run" = the tuple of horizons whose as-of
   * reads compose to the exact historical training input. A manifest is
   * a tiny parquet of (state, kind, dir, as_of, id_col) rows committed by
-  * a single rename — the same artifact discipline as every sidecar —
+  * [[graft.StateCommit.writeDir]] — the same discipline as every sidecar —
   * and [[readState]] dispatches each row to its state's own as-of
   * reader.
   *
@@ -51,16 +51,11 @@ object SnapshotManifest {
     Set("shards", "curate", "postings", "ann", "annpq", "neardup",
       "quantizer", "codebook", "bpe")
 
-  /** Write the manifest (rename-aside commit, crash-atomic) after
+  /** Write the manifest (a [[graft.StateCommit.writeDir]] commit) after
     * validating every pin RESOLVES — failing at pin time, not at some
-    * later read. Duplicate state names are rejected. Commit discipline
-    * (the [[CurateMaintainer.deriveSelection]] rule — never a
-    * delete-then-rename window): the new manifest is fully written
-    * aside, the previous one is renamed aside (not deleted), the new
-    * one renamed in, and only then is the aside dropped. A crash
-    * between the two renames leaves the OLD manifest readable at the
-    * aside path, which [[pins]] falls back to — there is no instant at
-    * which a reader finds nothing.
+    * later read. Duplicate state names are rejected. A re-pin swaps the
+    * manifest whole: [[pins]] reads the old one or the new one at every
+    * crash point, never none.
     */
   def pin(spark: SparkSession, pins: Seq[Pin], manifestDir: String): Unit = {
     require(pins.nonEmpty, "pin: empty manifest")
@@ -81,20 +76,10 @@ object SnapshotManifest {
     // probe-job latency per pin
     graft.Exec.inParallel(pins.map(p => () => validate(spark, p)): _*)
     import spark.implicits._
-    val tmp = manifestDir + ".__tmp"
-    graft.Exec.deletePath(tmp)
-    pins.map(p => (p.state, p.kind, p.dir, p.asOf, p.idCol))
-      .toDF("state", "kind", "dir", "as_of", "id_col")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val aside = new java.io.File(manifestDir + ".__old")
-    graft.Exec.deletePath(aside.getPath)
-    val dest = new java.io.File(manifestDir)
-    if (dest.exists())
-      require(dest.renameTo(aside),
-        s"manifest commit failed (aside): $manifestDir")
-    require(new java.io.File(tmp).renameTo(dest),
-      s"manifest commit failed: $manifestDir")
-    graft.Exec.deletePath(aside.getPath)
+    graft.StateCommit.writeDir(manifestDir)(
+      pins.map(p => (p.state, p.kind, p.dir, p.asOf, p.idCol))
+        .toDF("state", "kind", "dir", "as_of", "id_col")
+        .coalesce(1).write.mode("overwrite").parquet(_))
   }
 
   /** Every pin must resolve at pin/verify time, and the index-slice
@@ -120,24 +105,15 @@ object SnapshotManifest {
         "batch")
   }
 
-  /** The committed manifest location: the destination itself, or the
-    * rename-aside left by a crash between [[pin]]'s two commit renames
-    * (the OLD manifest, still fully servable). */
-  private def manifestPath(manifestDir: String): String =
-    if (new java.io.File(manifestDir).exists()) manifestDir
-    else {
-      val aside = manifestDir + ".__old"
-      require(new java.io.File(aside).exists(),
-        s"no manifest at $manifestDir")
-      aside
-    }
-
-  def pins(spark: SparkSession, manifestDir: String): Seq[Pin] =
-    spark.read.schema(manifestSchema).parquet(manifestPath(manifestDir))
+  def pins(spark: SparkSession, manifestDir: String): Seq[Pin] = {
+    require(new java.io.File(graft.StateCommit.live(manifestDir)).exists(),
+      s"no manifest at $manifestDir")
+    spark.read.schema(manifestSchema).parquet(manifestDir)
       .collect()
       .map(r => Pin(r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getString(4)))
       .sortBy(_.state).toSeq
+  }
 
   /** The pinned historical view of one state, re-read from CURRENT
     * files through the state's own as-of reader. */

@@ -105,7 +105,7 @@ object SubstrIndexMaintainer {
     * (default upTo: max batch − 1, keeping the newest batch replayable),
     * then write the segment's per-key count sidecar `kc<upTo>/` — the
     * key-sized frame [[spans]] reads instead of re-counting positions.
-    * The sidecar is written tmp-then-rename AFTER the segment commits:
+    * The sidecar commits ([[graft.StateCommit.writeDir]]) AFTER the segment:
     * a crash in between leaves a consolidated segment with no sidecar,
     * which [[spans]] handles by recounting (fallback, not corruption).
     */
@@ -115,11 +115,10 @@ object SubstrIndexMaintainer {
     BatchDirs.listDirs(indexDir, "c").lastOption.foreach { case (cid, cdir) =>
       val kd = new java.io.File(indexDir, s"kc$cid")
       if (!kd.exists()) {
-        val counts = spark.read.schema(indexSchema).parquet(cdir)
-          .groupBy("__k1", "__k2").agg(count(lit(1)).as("__n"))
-        val tmp = new java.io.File(indexDir, s".kc$cid.tmp")
-        counts.write.mode("overwrite").parquet(tmp.getPath)
-        require(tmp.renameTo(kd), s"rename $tmp -> $kd failed")
+        graft.StateCommit.writeDir(kd.getPath)(
+          spark.read.schema(indexSchema).parquet(cdir)
+            .groupBy("__k1", "__k2").agg(count(lit(1)).as("__n"))
+            .write.mode("overwrite").parquet(_))
       }
       // superseded sidecars (their segment dirs are gone) are dead weight
       BatchDirs.listDirs(indexDir, "kc").filter(_._1 < cid)

@@ -154,15 +154,19 @@ class Round17OpsSpec extends SparkSpec {
       "embedding", cents2, ann)
     val mdir = tmp("snapcm") + "/m"
     SnapshotManifest.pin(spark, Seq(Pin("ann", "ann", ann, 0L)), mdir)
-    // simulate the crash: the old manifest was renamed aside and the new
-    // one never renamed in
-    require(new java.io.File(mdir).renameTo(new java.io.File(mdir + ".__old")))
+    // crash a re-pin between the two renames of its first swap: the old
+    // manifest is renamed aside as a version, the new one never linked in
+    graft.StateCommitSpec.crashAt(mdir, "aside")(SnapshotManifest.pin(spark,
+      Seq(Pin("ann", "ann", ann, 1L)), mdir)) shouldBe true
+    new java.io.File(mdir).exists() shouldBe false
     SnapshotManifest.pins(spark, mdir).head.asOf shouldBe 0L
     SnapshotManifest.readState(spark, mdir, "ann").count() shouldBe 6L
-    // a re-pin commits the new manifest and drops the aside
+    // a re-pin commits the new manifest; no temp is left beside it
     SnapshotManifest.pin(spark, Seq(Pin("ann", "ann", ann, 1L)), mdir)
     SnapshotManifest.pins(spark, mdir).head.asOf shouldBe 1L
-    new java.io.File(mdir + ".__old").exists() shouldBe false
+    new java.io.File(mdir).getParentFile.list().toSeq
+      .filter(n => n.startsWith(".m.") && !n.matches("\\.m\\.v\\d+")) shouldBe
+      empty
     // no manifest anywhere is an explicit error
     intercept[IllegalArgumentException] {
       SnapshotManifest.pins(spark, tmp("snapnone") + "/m")
@@ -316,8 +320,9 @@ class Round17OpsSpec extends SparkSpec {
       MaintenancePlanner.execute(spark, Seq(
         AnnSpec("a", dir, 4.0, growPostFractionMax = 0.5)))
     }.getMessage should include("no persisted quantizer")
-    cents2.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").write.mode("overwrite").parquet(s"$dir/cents")
+    graft.StateCommit.writeDir(s"$dir/cents")(
+      cents2.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cid", "c").write.mode("overwrite").parquet(_))
     val (table, postSpecs) = MaintenancePlanner.execute(spark, Seq(
       AnnSpec("a", dir, 4.0, growPostFractionMax = 0.5)))
     val rows = table.collect()
@@ -357,7 +362,8 @@ class Round17OpsSpec extends SparkSpec {
     val c2df = cents2.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("cid", "c")
     AnnIndexMaintainer.persistCentroids(spark, dir, 0L, c2df)
-    c2df.write.mode("overwrite").parquet(s"$dir/cents")
+    graft.StateCommit.writeDir(s"$dir/cents")(
+      c2df.write.mode("overwrite").parquet(_))
     AnnIndexMaintainer.processBatchMonitored(vecs(10L to 13L, shift = 5.0),
       1L, "vec_id", "embedding", cents2, dir)
     intercept[IllegalArgumentException] {

@@ -304,8 +304,9 @@ class Round18OpsSpec extends SparkSpec {
     AnnIndexMaintainer.markTrained(dir, 0L)
     AnnIndexMaintainer.processBatchPqMonitored(w1, 1L, "vec_id",
       "embedding", cents4, cb0, dir, roundScale = 6)
-    cents4.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").coalesce(1).write.parquet(s"$dir/cents")
+    graft.StateCommit.writeDir(s"$dir/cents")(
+      cents4.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cid", "c").coalesce(1).write.parquet(_))
     // drifted tail is 5/25 of the index → the cost-aware choice is grow
     val spec = AnnPqSpec("pq", dir, 2.0, m = 2, kCode = 4,
       growPostFractionMax = 0.5, roundScale = 6)
@@ -465,8 +466,9 @@ class Round18OpsSpec extends SparkSpec {
     pre("bycell") shouldBe "grow"
     pre("bycode") shouldBe "retrain"
     // the executor acts on both and the fleet measures healthy after
-    comboCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").coalesce(1).write.parquet(s"$growDir/cents")
+    graft.StateCommit.writeDir(s"$growDir/cents")(
+      comboCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cid", "c").coalesce(1).write.parquet(_))
     val gen2 = tmp("cbdrift2") + "/idx2"
     val (table, postSpecs) = MaintenancePlanner.execute(spark, specs,
       annNewDirs = Map("bycode" -> gen2))

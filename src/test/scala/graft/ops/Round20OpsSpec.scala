@@ -81,26 +81,36 @@ class Round20OpsSpec extends SparkSpec {
   test("servingCentsFile heals the two-rename crash window: tmp+aside " +
       "rolls FORWARD to the grown set, aside-only rolls BACK, neither " +
       "artifact fails explicitly") {
+    import graft.StateCommit
+    import graft.StateCommitSpec.crashAt
+    def writeCents(dir: String, tag: Double): Unit =
+      StateCommit.writeDir(s"$dir/cents")(
+        Seq((0, Seq(tag, 0.0)), (1, Seq(0.0, tag)))
+          .toDF("cid", "c").coalesce(1)
+          .write.mode("overwrite").parquet(_))
+    def served(dir: String): Double =
+      spark.read.parquet(MaintenancePlanner.servingCentsFile(dir).getPath)
+        .where(col("cid") === 0).head.getSeq[Double](1).head
+    // roll-forward: a grow commit crashed between its two renames after
+    // the union set was renamed in as a version — no live name
     val dir = tmp("centswin")
-    def writeCents(path: String, tag: Double): Unit =
-      Seq((0, Seq(tag, 0.0)), (1, Seq(0.0, tag)))
-        .toDF("cid", "c").coalesce(1)
-        .write.mode("overwrite").parquet(path)
-    // roll-forward: the union set is fully written at .cents.tmp and the
-    // old copy was renamed aside — a crash hit between the two renames
-    writeCents(s"$dir/.cents.tmp", 2.0)
-    writeCents(s"$dir/.cents.old", 1.0)
+    writeCents(dir, 1.0)
+    crashAt(dir, "versioned")(writeCents(dir, 2.0)) shouldBe true
+    new java.io.File(dir, "cents").exists() shouldBe false
     val healed = MaintenancePlanner.servingCentsFile(dir)
     healed.getPath shouldBe new java.io.File(dir, "cents").getPath
-    spark.read.parquet(healed.getPath).where(col("cid") === 0)
-      .head.getSeq[Double](1).head shouldBe 2.0
-    new java.io.File(dir, ".cents.old").exists() shouldBe false
-    // roll-back: only the aside survives (tmp manually cleaned)
+    served(dir) shouldBe 2.0
+    // roll-back: crashed right after the old set was renamed aside
     val dir2 = tmp("centswin2")
-    writeCents(s"$dir2/.cents.old", 1.0)
-    spark.read.parquet(
-        MaintenancePlanner.servingCentsFile(dir2).getPath)
-      .where(col("cid") === 0).head.getSeq[Double](1).head shouldBe 1.0
+    writeCents(dir2, 1.0)
+    crashAt(dir2, "aside")(writeCents(dir2, 2.0)) shouldBe true
+    new java.io.File(dir2, "cents").exists() shouldBe false
+    served(dir2) shouldBe 1.0
+    // the next commit leaves only the one-version grace beside the name
+    writeCents(dir2, 3.0)
+    served(dir2) shouldBe 3.0
+    new java.io.File(dir2).list().toSeq.filter(_.startsWith(".cents."))
+      .sorted shouldBe Seq(".cents.v1", ".cents.v2")
     // nothing at all: explicit error, not a silent empty
     val dir3 = tmp("centswin3")
     intercept[IllegalStateException] {
@@ -119,14 +129,15 @@ class Round20OpsSpec extends SparkSpec {
     AnnIndexMaintainer.processBatchMonitored(blobVecs(20 to 23,
       shift = 5.0), 1L, "vec_id", "embedding", blobCents, dir,
       roundScale = 6)
-    // simulate the window: cents fully written aside as tmp, old copy
-    // renamed to the aside, no live cents
-    blobCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/.cents.tmp")
-    blobCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/.cents.old")
+    // the window: a commit of the quantizer crashed between its two
+    // renames, the new set renamed in as a version, no live cents
+    def commitCents(): Unit = graft.StateCommit.writeDir(s"$dir/cents")(
+      blobCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cid", "c").coalesce(1).write.mode("overwrite").parquet(_))
+    commitCents()
+    graft.StateCommitSpec.crashAt(dir, "versioned")(commitCents()) shouldBe
+      true
+    new java.io.File(dir, "cents").exists() shouldBe false
     val (table, _) = MaintenancePlanner.execute(spark, Seq(
       AnnSpec("a", dir, 4.0, growPostFractionMax = 0.5, roundScale = 6)))
     table.collect().map(r => (r.getString(0), r.getString(5)))

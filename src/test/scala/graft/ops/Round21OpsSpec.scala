@@ -103,10 +103,13 @@ class Round21OpsSpec extends SparkSpec {
       "reader-side delete would race the writer and destroy its fresh " +
       "union set mid-commit") {
     val dir = tmp("centsorphan")
-    centsDf(blobCents).coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(dir, "cents").getPath)
-    centsDf(blobCents.take(1)).coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(dir, ".cents.tmp").getPath)
+    def commitCents(cs: Array[Array[Double]]): Unit =
+      graft.StateCommit.writeDir(new java.io.File(dir, "cents").getPath)(
+        centsDf(cs).coalesce(1).write.mode("overwrite").parquet(_))
+    commitCents(blobCents)
+    // a grow commit stopped with its union set fully written at the temp
+    graft.StateCommitSpec.crashAt(dir, "written")(
+      commitCents(blobCents.take(1))) shouldBe true
     val f = MaintenancePlanner.servingCentsFile(dir)
     f.getName shouldBe "cents"
     // the tmp survives: it may be a concurrent grow's in-flight commit
