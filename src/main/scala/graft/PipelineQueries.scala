@@ -74,7 +74,7 @@ object PipelineQueries {
   private val bpeMergesCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
-  private[graft] def bpeMergesFor(s: SparkSession, d: String): Seq[(String, String)] =
+  private def bpeMergesFor(s: SparkSession, d: String): Seq[(String, String)] =
     bpeMergesCache.computeIfAbsent(d, _ => {
       val m = graft.ops.Bpe.learnMerges(docs(s, d), "doc_id", "text",
         numMerges = 40)
@@ -131,7 +131,7 @@ object PipelineQueries {
   private val semDedupCentsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
-  private[graft] def semDedupCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
+  private def semDedupCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
     semDedupCentsCache.computeIfAbsent(d, _ => {
       val (cdf, _) = Ann.ivfTrainBalanced(emb(s, d), "embedding",
         cellsPerSqrtN = 4)
@@ -655,7 +655,7 @@ object PipelineQueries {
   private val trainManifestStateCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[graft] def trainManifestStateFor(s: SparkSession, d: String): String =
+  private def trainManifestStateFor(s: SparkSession, d: String): String =
     trainManifestStateCache.computeIfAbsent(d, _ => {
       val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_stream_manifest", Tables.runKey(d)).toString

@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Repeat-run profiler: runs each named query `reps` times in one JVM and
-  * prints per-run wall clock, separating fixed cost (planning + codegen +
-  * JIT, visible as run1 − runN) from steady-state data cost (runN). Usage:
-  *   runMain graft.Profile <reps> [queryName ...]
+/** Repeat-run profiler. `runMain graft.Profile <reps> [mode ...]`; a mode
+  * that names a gate of [[SparkEntry.queries]] runs it `reps` times under
+  * [[Trace]] and prints one `PROFILE trace <gate> rep<i> …` line per run
+  * (see [[traceGate]]). The other modes: `fullgate[:mult]` and
+  * `queries:<names>[:mult]` (base vs `mult`× replica timing) and the
+  * generator-scale probes `bpeprobe`, `scaleprobe`, `flipprobe`,
+  * `dedupprobe`, `textprobe`, `deltaprobe` and `annprobe` (README).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -33,98 +36,6 @@ object Profile {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach {
-      case "jaccard_stages" => jaccardStages(spark, sfDir, reps)
-      case s if s.startsWith("usercf:") => userCfStrategy(spark, sfDir, reps, s)
-      case s if s.startsWith("model:") => modelStrategy(spark, sfDir, reps, s)
-      case "modelstages" => modelStages(spark, sfDir, reps)
-      case "multirec" =>
-        // stage decomposition of the r_multirec gate (the one remaining
-        // above-bar sf1 outlier): which branch pays the 10s?
-        import org.apache.spark.sql.functions._
-        import graft.recdb.{Scoring, Similarity}
-        val c = Tables.ratingCols
-        def t(label: String)(body: => Long): Unit = {
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime(); val n = body
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          println(f"PROFILE multirec:$label rows=${times.head._2} " +
-            times.map(x => f"${x._1}%.2f").mkString(" "))
-        }
-        val r = Tables.ratings(spark, sfDir)
-        t("ratings")(r.count())
-        val rc = r.cache(); rc.count()
-        val minUser = rc.agg(min(col("userid"))).head().getLong(0)
-        val users = rc.select(col("userid"))
-          .where(col("userid") === minUser).distinct()
-        t("item_model")(Similarity.itemCosine(rc, c).count())
-        val im = Similarity.itemCosine(rc, c).cache(); im.count()
-        t("user_model_restricted")(
-          Similarity.userCosine(rc, c, restrictTo = Some(users)).count())
-        val um = Similarity.userCosine(rc, c, restrictTo = Some(users)).cache()
-        um.count()
-        t("itemcf_score")(Scoring.itemCF(rc, im, c, Some(users)).count())
-        t("usercf_score")(Scoring.userCF(rc, um, c, Some(users)).count())
-        val is = Scoring.itemCF(rc, im, c, Some(users))
-        val us = Scoring.userCF(rc, um, c, Some(users))
-        t("join_top10")(is.as("a").join(us.as("b"), Seq("userid", "itemid"))
-          .select(col("userid"), col("itemid"),
-            round((is("score") + us("score")) / 2, 6).as("combined"))
-          .orderBy(col("combined").desc, col("itemid")).limit(10).count())
-        t("gate_verbatim")(
-          graft.SparkEntry.queries("r_multirec")(spark, sfDir).count())
-      case "lshstages" =>
-        import org.apache.spark.sql.functions._
-        import graft.ops.Dedup
-        import graft.functions.TextFns
-        val docsDf = Tables.read(spark, sfDir, "documents")
-        def t(label: String)(body: => Long): Unit = {
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime(); val n = body
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          println(f"PROFILE lsh:$label rows=${times.head._2} " +
-            times.map(x => f"${x._1}%.2f").mkString(" "))
-        }
-        val docs = docsDf.select(col("doc_id").as("id"),
-          TextFns.charShinglesNative(col("text"), 5).as("grams"))
-        t("grams_size")(docs.select(sum(size(col("grams")))).head().getLong(0))
-        val wdocs = docsDf.select(col("doc_id").as("id"), col("text"))
-          .repartition(32, col("id"))
-          .select(col("id"), TextFns.charShinglesNative(col("text"), 5).as("grams"))
-        t("grams_wide")(wdocs.select(sum(size(col("grams")))).head().getLong(0))
-        t("sigs")(Dedup.minhashSignatures(wdocs, "id", "grams", 64).count())
-        val ex = wdocs.select(col("id"), explode(col("grams")).as("g"))
-        t("explode_hash")(ex.select(col("id"),
-          pmod(hash(col("g")).cast("long"), lit(2147483647L)).as("h"))
-          .agg(count(lit(1))).head().getLong(0))
-        t("explode_hashed_arr")(wdocs.select(col("id"),
-          explode(expr("transform(grams, g -> hash(g))")).as("h"))
-          .agg(count(lit(1))).head().getLong(0))
-        t("explode_noproj")(docsDf.select(col("doc_id").as("id"), col("text"))
-          .repartition(32, col("id"))
-          .select(col("id"),
-            explode(TextFns.charShinglesNative(col("text"), 5)).as("g"))
-          .agg(count(lit(1))).head().getLong(0))
-        t("sigs_inline") {
-          val base = docsDf.select(col("doc_id").as("id"), col("text"))
-            .repartition(32, col("id"))
-            .select(col("id"),
-              explode(TextFns.charShinglesNative(col("text"), 5)).as("g"))
-            .select(col("id"),
-              pmod(hash(col("g")).cast("long"), lit(2147483647L)).as("h"))
-          val mins = (0 until 64).map(i =>
-            min(pmod(lit(3 + 2 * i) * col("h") + lit(7 * i), lit(2147483647L))).as(s"m$i"))
-          base.groupBy(col("id")).agg(mins.head, mins.tail: _*)
-            .select(col("id"), array((0 until 64).map(i => col(s"m$i")): _*).as("sig"))
-            .count()
-        }
-        val ck = wdocs.localCheckpoint()
-        t("explode_from_ck")(ck.select(col("id"), explode(col("grams")).as("g"))
-          .agg(count(lit(1))).head().getLong(0))
-        t("agg64_from_ck")(Dedup.minhashSignatures(ck, "id", "grams", 64).count())
-        t("agg8_from_ck")(Dedup.minhashSignatures(ck, "id", "grams", 8).count())
-        t("full")(Dedup.charMinhashLshPairs(docsDf, "doc_id", "text", 5, 64, 16, 0.8).count())
       case s if s.startsWith("fullgate") =>
         // The whole SparkEntry.queries set at `mult`× the bench scale
         // (usage: fullgate[:mult], default 10 — i.e. sf1-equivalent volume
@@ -395,111 +306,6 @@ object Profile {
         println(f"PROFILE deltaprobe events=$nEv hist=$nh delta=$nd " +
           f"state_rows=$nPairs init=$tInit%.1fs merged_pairs=$nMerged " +
           f"merge=$tMerge%.1fs ratio=${tMerge / tInit}%.2f")
-      case "modelplan" =>
-        import graft.recdb.Similarity
-        val r = Tables.ratings(spark, sfDir).cache()
-        r.count()
-        val m = Similarity.userCosine(r, Tables.ratingCols, "dense")
-        m.count()
-        val p = graft.sources.Bucketing.concretePlan(m)
-        val kinds = p.collect { case n => n.nodeName }
-          .groupBy(identity).view.mapValues(_.size).toMap.toSeq.sortBy(-_._2)
-        println("PROFILE modelplan " + kinds.map { case (k, v) => s"$k=$v" }.mkString(" "))
-      case "usercf_stages" => userCfStages(spark, sfDir, reps)
-      case "serving" =>
-        // single-user latency variants: (a) from-model auto, (b) from-model
-        // join + fewer shuffle partitions, (c) from cached materialized view
-        import org.apache.spark.sql.functions._
-        import graft.recdb.{Scoring, Similarity}
-        val c = Tables.ratingCols
-        val r = Tables.ratings(spark, sfDir).cache()
-        val users = r.select(col(c.user)).distinct()
-          .orderBy(col(c.user)).collect().map(_.getLong(0))
-        val model = Similarity.itemCosine(r, c).cache()
-        model.count()
-        val rnd = new scala.util.Random(42)
-        def time(label: String)(body: Long => Unit): Unit = {
-          val ts = (1 to reps).map { _ =>
-            val u = users(rnd.nextInt(users.length))
-            val t0 = System.nanoTime(); body(u); (System.nanoTime() - t0) / 1e9
-          }
-          println(f"PROFILE serving:$label " + ts.map(t => f"$t%.3f").mkString(" "))
-        }
-        time("auto") { u =>
-          val uf = r.where(col(c.user) === u).select(col(c.user)).distinct()
-          Scoring.itemCF(r, model, c, Some(uf))
-            .orderBy(col("score").desc, col(c.item)).limit(10).count()
-        }
-        time("join") { u =>
-          val uf = r.where(col(c.user) === u).select(col(c.user)).distinct()
-          Scoring.itemCF(r, model, c, Some(uf), strategy = "join")
-            .orderBy(col("score").desc, col(c.item)).limit(10).count()
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", 4)
-        time("join_p4") { u =>
-          val uf = r.where(col(c.user) === u).select(col(c.user)).distinct()
-          Scoring.itemCF(r, model, c, Some(uf), strategy = "join")
-            .orderBy(col("score").desc, col(c.item)).limit(10).count()
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
-        val view = Scoring.itemCF(r, model, c).cache()
-        view.count()
-        time("view") { u =>
-          view.where(col(c.user) === u)
-            .orderBy(col("score").desc, col(c.item)).limit(10).count()
-        }
-      case "workload" =>
-        // rec_workload.c per-query latency decomposition: plan-time (strategy
-        // stats jobs) vs execution for single-user top-10 RECOMMEND
-        import org.apache.spark.sql.functions._
-        import graft.recdb.{Scoring, Similarity}
-        val c = Tables.ratingCols
-        val r = Tables.ratings(spark, sfDir).cache()
-        val users = r.select(col(c.user)).distinct()
-          .orderBy(col(c.user)).collect().map(_.getLong(0))
-        val model = graft.recdb.Similarity.itemCosine(r, c).cache()
-        model.count()
-        val rnd = new scala.util.Random(42)
-        (1 to reps).foreach { _ =>
-          val u = users(rnd.nextInt(users.length))
-          var t0 = System.nanoTime()
-          val uf = r.where(col(c.user) === u).select(col(c.user)).distinct()
-          val df = Scoring.itemCF(r, model, c, Some(uf))
-          val tPlan = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          df.orderBy(col("score").desc, col(c.item)).limit(10).count()
-          val tExec = (System.nanoTime() - t0) / 1e9
-          println(f"PROFILE workload u=$u plan=$tPlan%.3f exec=$tExec%.3f")
-        }
-      case s if s.startsWith("knngraph_nlist") =>
-        // The kNN-graph IVF cost model, demonstrated: at a FIXED quantizer
-        // the within-cell candidate volume grows quadratically with the
-        // corpus (the fullgate probe's 7.3× at 10× data); re-training with
-        // nlist ∝ corpus restores per-cell work — the sizing rule the
-        // operator's caller owns at deploy time.
-        // usage: knngraph_nlist[:mult] — times knnGraph on the scaled
-        // corpus with nlist ∈ {8, 8·√mult, 8·mult}.
-        import graft.ops.Ann
-        val mult = s.split(':').drop(1).headOption.map(_.toInt).getOrElse(10)
-        val scaled = buildScaledDir(spark, sfDir, mult)
-        val e = Tables.read(spark, scaled, "embeddings")
-        Seq(8, 8 * math.sqrt(mult).round.toInt, 8 * mult).distinct.foreach { nl =>
-          spark.catalog.clearCache()
-          val cents = Ann.ivfCentroidsFromDf(
-            Ann.ivfTrain(e, "embedding", nlist = nl))
-          val t0 = System.nanoTime()
-          val n = Ann.knnGraph(e, "vec_id", "embedding", k = 5, cents,
-            nprobe = 2, rankOnRoundedTo = Some(6)).count()
-          println(f"PROFILE knngraph_nlist nlist=$nl " +
-            f"t=${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
-        }
-      case "ivf_vs_brute" =>
-        val b = SparkEntry.queries("p_knn_brute")(spark, sfDir).collect()
-          .map(_.toString).toSet
-        val v = SparkEntry.queries("p_knn_ivf")(spark, sfDir).collect()
-          .map(_.toString).toSet
-        println(s"PROFILE ivf_vs_brute equal=${b == v} brute=${b.size} " +
-          s"ivf=${v.size} onlyBrute=${(b -- v).size}")
       case s if s.startsWith("annprobe") =>
         // ANN at synthetic-corpus scale (default 300k vectors × 64 dims,
         // ~60× the sf0.1 embeddings table; usage: annprobe[:n]): brute vs
@@ -543,622 +349,21 @@ object Profile {
           f"pq5=$tP%.1fs($nP) ivf100=$tI100%.1fs ivf_qps=${100.0 / tI100}%.1f " +
           f"ivf100_pretrained=$tIs%.1fs(${100.0 / tIs}%.1fq/s) " +
           f"pq100_precoded=$tPs%.1fs(${100.0 / tPs}%.1fq/s)")
-      case "denseingest" =>
-        // Micro-decomposition of the ANN dense-leg processBatch: embedding
-        // compute vs cell assignment vs the cell-partitioned write.
-        import org.apache.spark.sql.functions._
-        import graft.ops.TextOps
-        val cents = PipelineQueries.hybridCentsProbe(spark, sfDir)
-        val corpus = Tables.read(spark, sfDir, "documents")
-          .where(col("doc_id") >= 25 && col("doc_id") < 2000)
-        val embCorpus = corpus.select(col("doc_id").as("vec_id"),
-          TextOps.textEmbedding(col("text"), 8).as("embedding"))
-        val half = embCorpus.where(col("vec_id") % 2 === 0)
-        def tt(label: String)(body: => Unit): Unit = {
-          (1 to reps).foreach { i =>
-            val t0 = System.nanoTime(); body
-            println(f"PROFILE denseingest:$label rep$i " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f")
-          }
-        }
-        val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          "graft_prof_denseingest").toString
-        tt("embed_noop")(half.write.format("noop").mode("overwrite").save())
-        val assigned = half.select(col("vec_id").cast("long").as("id"),
-            col("embedding").cast("array<double>").as("v"))
-          .withColumn("batch_id", lit(0L))
-          .withColumn("cell", graft.functions.VectorFns.nearestCellNative(
-            col("v"), cents, 6))
-        tt("assign_noop")(
-          assigned.write.format("noop").mode("overwrite").save())
-        tt("repart_noop")(assigned.repartition(col("cell"))
-          .write.format("noop").mode("overwrite").save())
-        tt("write_flat") {
-          graft.Exec.deletePath(base)
-          assigned.repartition(col("cell"))
-            .write.mode("overwrite").parquet(s"$base/flat")
-        }
-        tt("write_partitioned") {
-          graft.Exec.deletePath(base)
-          assigned.repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$base/part")
-        }
-        tt("processBatch_verbatim") {
-          graft.Exec.deletePath(base)
-          graft.streaming.AnnIndexMaintainer.processBatch(half, 0L,
-            "vec_id", "embedding", cents, s"$base/index", roundScale = 6)
-        }
-      case "denseingest2" =>
-        // Round-16 attribution of the ~14 ms/partition-dir dynamic-write
-        // overhead: wall vs summed task time per variant — the gap is
-        // driver-side (commit protocol, scheduling); task-side shows up in
-        // the sum. Variants probe the plausible levers without touching
-        // the layout contract.
-        import org.apache.spark.sql.functions._
-        import graft.ops.TextOps
-        val cents = PipelineQueries.hybridCentsProbe(spark, sfDir)
-        val corpus = Tables.read(spark, sfDir, "documents")
-          .where(col("doc_id") >= 25 && col("doc_id") < 2000)
-        val embCorpus = corpus.select(col("doc_id").as("vec_id"),
-          TextOps.textEmbedding(col("text"), 8).as("embedding"))
-        val half = embCorpus.where(col("vec_id") % 2 === 0)
-        val assigned = half.select(col("vec_id").cast("long").as("id"),
-            col("embedding").cast("array<double>").as("v"))
-          .withColumn("batch_id", lit(0L))
-          .withColumn("cell", graft.functions.VectorFns.nearestCellNative(
-            col("v"), cents, 6))
-        val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          "graft_prof_denseingest2").toString
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
-        val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            Option(te.taskInfo).foreach { ti =>
-              tasks.incrementAndGet(); taskTimeMs.addAndGet(ti.duration) }
-            ()
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          def tt(label: String)(body: => Unit): Unit = {
-            (1 to reps).foreach { i =>
-              jobs.set(0); tasks.set(0); taskTimeMs.set(0)
-              val t0 = System.nanoTime(); body
-              val wall = (System.nanoTime() - t0) / 1e9
-              Thread.sleep(300)
-              println(f"PROFILE di2:$label rep$i wall=$wall%.2f " +
-                f"jobs=${jobs.get} tasks=${tasks.get} " +
-                f"taskSum=${taskTimeMs.get / 1000.0}%.2f")
-            }
-          }
-          def fresh(body: String => Unit): Unit = {
-            graft.Exec.deletePath(base); body(s"$base/part")
-          }
-          tt("part_base")(fresh { p =>
-            assigned.repartition(col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-          tt("part_sorted")(fresh { p =>
-            assigned.repartition(col("cell")).sortWithinPartitions("cell")
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-          val hc = spark.sparkContext.hadoopConfiguration
-          tt("part_v2")(fresh { p =>
-            hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
-            try assigned.repartition(col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p)
-            finally hc.set(
-              "mapreduce.fileoutputcommitter.algorithm.version", "1") })
-          tt("part_8tasks")(fresh { p =>
-            assigned.repartition(8, col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-          tt("part_noplanned")(fresh { p =>
-            spark.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
-            try assigned.repartition(col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p)
-            finally spark.conf.set(
-              "spark.sql.optimizer.plannedWrite.enabled", "true") })
-          tt("flat_base")(fresh { p =>
-            assigned.repartition(col("cell"))
-              .write.mode("overwrite").parquet(p) })
-          tt("part_32tasks")(fresh { p =>
-            assigned.repartition(32, col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-          tt("part_nlist")(fresh { p =>
-            assigned.repartition(cents.length, col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-          tt("part_64tasks")(fresh { p =>
-            assigned.repartition(64, col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(p) })
-        } finally spark.sparkContext.removeSparkListener(listener)
-      case "hybridfreshstages" =>
-        // Stage decomposition of s_hybrid_fresh (round-15 slowest gate):
-        // two-leg ingest vs serve vs fold, per wave.
-        import org.apache.spark.sql.functions._
-        import graft.ops.{TextOps, TfIdf}
-        val t0h = System.nanoTime()
-        val cents = PipelineQueries.hybridCentsProbe(spark, sfDir)
-        println(f"PROFILE hybridfresh:state_memo " +
-          f"${(System.nanoTime() - t0h) / 1e9}%.2f")
-        (1 to reps).foreach { rep =>
-          val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-            "graft_prof_hybridfresh").toString
-          graft.Exec.deletePath(base)
-          val corpus = Tables.read(spark, sfDir, "documents")
-            .where(col("doc_id") >= 25 && col("doc_id") < 2000)
-          val embCorpus = corpus.select(col("doc_id").as("vec_id"),
-            TextOps.textEmbedding(col("text"), 8).as("embedding"))
-          val evalQ = Tables.read(spark, sfDir, "documents")
-            .where(col("doc_id") < 5)
-          val qterms = evalQ.select(col("doc_id").as("qid"),
-            explode(TextOps.tokens(col("text"))).as("term")).distinct()
-          val qvecs = evalQ.select(col("doc_id"),
-              TextOps.textEmbedding(col("text"), 8).as("v"))
-            .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-            .toSeq
-          def tt(label: String)(body: => Unit): Unit = {
-            val t0 = System.nanoTime(); body
-            println(f"PROFILE hybridfresh:$label rep$rep " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f")
-          }
-          (0 until 2).foreach { g =>
-            tt(s"ingest_sparse w$g")(
-              graft.streaming.SearchIndexMaintainer.processBatch(
-                corpus.where(col("doc_id") % 2 === g), g.toLong, "doc_id",
-                "text", s"$base/postings"))
-            tt(s"ingest_dense w$g")(
-              graft.streaming.AnnIndexMaintainer.processBatch(
-                embCorpus.where(col("vec_id") % 2 === g), g.toLong,
-                "vec_id", "embedding", cents, s"$base/index",
-                roundScale = 6))
-            tt(s"serve_sparse w$g") {
-              graft.streaming.SearchIndexMaintainer.searchBatch(
-                spark, s"$base/postings", "doc_id", qterms, "qid", "term",
-                k = 10).count()
-              ()
-            }
-            tt(s"serve_dense w$g") {
-              graft.streaming.AnnIndexMaintainer.search(
-                spark, s"$base/index", cents, qvecs, k = 10,
-                rankOnRoundedTo = Some(6)).count()
-              ()
-            }
-            tt(s"serve_fused w$g") {
-              val sparse = graft.streaming.SearchIndexMaintainer.searchBatch(
-                spark, s"$base/postings", "doc_id", qterms, "qid", "term",
-                k = 10).select(col("qid"), col("doc_id"), col("rank"))
-              val dense = graft.streaming.AnnIndexMaintainer.search(
-                spark, s"$base/index", cents, qvecs, k = 10,
-                rankOnRoundedTo = Some(6))
-                .select(col("query_id").as("qid"),
-                  col("neighbor_id").as("doc_id"), col("rank"))
-              graft.Exec.materializeLocal(
-                TfIdf.rrfFuse(sparse, dense, "qid", "doc_id", k = 10))
-              ()
-            }
-            if (g == 0) {
-              tt("fold_sparse")(
-                graft.streaming.SearchIndexMaintainer.compact(spark,
-                  "doc_id", s"$base/postings"))
-              tt("fold_dense")(
-                graft.streaming.AnnIndexMaintainer.compact(spark,
-                  s"$base/index"))
-            }
-          }
-        }
-        (1 to reps).foreach { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries("s_hybrid_fresh")(spark, sfDir).count()
-          println(f"PROFILE hybridfresh:gate_verbatim " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f")
-        }
-      case "semdedupstages" =>
-        // Stage decomposition of s_semdedup: ingest waves vs fold vs the
-        // derive-from-index pruning pass.
-        import org.apache.spark.sql.functions._
-        import graft.ops.Ann
-        def t(label: String)(body: => Long): Unit = {
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime(); val n = body
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          println(f"PROFILE semdedup:$label rows=${times.head._2} " +
-            times.map(x => f"${x._1}%.2f").mkString(" "))
-        }
-        val cents = PipelineQueries.semDedupCentsFor(spark, sfDir)
-        val e = Tables.read(spark, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          "graft_prof_semdedup").toString
-        t("ingest2")({
-          graft.Exec.deletePath(base)
-          (0 until 2).foreach { g =>
-            graft.streaming.AnnIndexMaintainer.processBatch(
-              e.where(col("vec_id") % 2 === g), g.toLong, "vec_id",
-              "embedding", cents, s"$base/index", roundScale = 6)
-          }
-          0L
-        })
-        t("compact")({
-          graft.streaming.AnnIndexMaintainer.compact(spark, s"$base/index")
-          0L
-        })
-        t("read_index")(graft.streaming.AnnIndexMaintainer
-          .readIndex(spark, s"$base/index").count())
-        t("derive")(Ann.semDedupAssigned(
-          graft.streaming.AnnIndexMaintainer.readIndex(spark, s"$base/index")
-            .select(col("id").as("vec_id"), col("v").as("__v"), col("cell")),
-          "vec_id", tau = 0.3).count())
-        t("gate_verbatim")(
-          SparkEntry.queries("s_semdedup")(spark, sfDir).count())
-      case "benchworkloads" =>
-        // The Bench serving loops, runnable under GRAFT_PROFILE_CONF for
-        // conf A/B (e.g. codegen on/off) without touching the driver's
-        // Bench entry point. Prints each metric's rep array.
-        def wl(label: String)(reps: => Seq[Double]): Unit = {
-          val rs = try reps catch { case e: Throwable =>
-            e.printStackTrace(); Seq.empty[Double] }
-          println(f"PROFILE benchworkloads:$label " +
-            rs.map(r => f"$r%.2f").mkString(" "))
-        }
-        wl("qps")(Bench.workloadQps(spark, sfDir))
-        wl("topk")(Bench.workloadTopkQps(spark, sfDir))
-        wl("sweep")(Bench.sweepUsersPerSec(spark, sfDir))
-        wl("view")(Bench.viewQps(spark, sfDir))
-        wl("hybrid")(Bench.hybridQps(spark, sfDir))
-      case s if s.startsWith("jobstats:") =>
-        // Overhead attribution for one gate: jobs launched, stages, tasks,
-        // summed executor task time vs wall clock — the gap is driver-side
-        // overhead (planning, codegen, scheduling, checkpoint commits).
-        val name = s.stripPrefix("jobstats:")
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
-        val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet(); ()
-          }
-          override def onStageCompleted(
-              st: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            stages.incrementAndGet()
-            tasks.addAndGet(st.stageInfo.numTasks); ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            Option(te.taskInfo).foreach(ti => taskTimeMs.addAndGet(ti.duration))
-            ()
-          }
-        }
-        (1 to reps).foreach { i =>
-          jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0)
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          // listener events are delivered async; a short drain window is
-          // enough at this job scale
-          Thread.sleep(300)
-          spark.sparkContext.removeSparkListener(listener)
-          println(f"PROFILE jobstats:$name rep$i wall=$wall%.2fs " +
-            f"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
-            f"taskTime=${taskTimeMs.get / 1000.0}%.2fs")
-        }
-      case "manifeststages" =>
-        // Stage decomposition of the s_train_manifest derivation (the
-        // round-15 slowest-list #2): selection derivation from state vs
-        // the pack + epoch-order tail, each timed from persisted inputs.
-        import org.apache.spark.sql.functions._
-        import graft.ops.{Corpus, Packing}
-        import graft.streaming.{CurateMaintainer, ExactDedupMaintainer}
-        def t(label: String)(body: => Long): Unit = {
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime(); val n = body
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          println(f"PROFILE manifest:$label rows=${times.head._2} " +
-            times.map(x => f"${x._1}%.2f").mkString(" "))
-        }
-        val dd = Tables.read(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-        var t0 = System.nanoTime()
-        val st = PipelineQueries.trainManifestStateFor(spark, sfDir)
-        println(f"PROFILE manifest:state_build " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f")
-        t0 = System.nanoTime()
-        val merges = PipelineQueries.bpeMergesFor(spark, sfDir)
-        println(f"PROFILE manifest:bpe_merges " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f")
-        t("reps_derive")(
-          ExactDedupMaintainer.representatives(spark, s"$st/exact").count())
-        t("spans_derive")(CurateMaintainer.spans(spark, st, 30).count())
-        t("curated_sel")(
-          CurateMaintainer.curated(dd, "doc_id", "text", st).count())
-        // the tail, from a persisted selection (manifest() runs this after
-        // the same curateWithText prefix)
-        val reps0 = ExactDedupMaintainer.representatives(spark, s"$st/exact")
-          .select(col("doc_id"))
-        val sel = graft.Exec.materializeLocal(
-          Corpus.curateWithText(dd, "doc_id", "text",
-              repsOpt = Some(reps0),
-              spansOpt = Some(CurateMaintainer.spans(spark, st, 30)))
-            .select(col("doc_id"), col("clean_text").as("text")))
-        t("pack_ids")(
-          Packing.packTokenIds(sel, "doc_id", "text", merges, 128).count())
-        val seqs = graft.Exec.materializeLocal(
-          Packing.packTokenIds(sel, "doc_id", "text", merges, 128))
-        t("epoch_order")(
-          Packing.epochOrder(seqs.select(col("seq_id")), "seq_id", 2).count())
-        t("order_join")(
-          Packing.epochOrder(seqs.select(col("seq_id")), "seq_id", 2)
-            .join(seqs, Seq("seq_id")).count())
-        t("manifest_full")(CurateMaintainer.manifest(dd, "doc_id", "text",
-          st, merges, seqLen = 128, epochs = 2).count())
-        t("gate_verbatim")(
-          SparkEntry.queries("s_train_manifest")(spark, sfDir).count())
-      case "curatestages" =>
-        // Stage decomposition of [[graft.ops.Corpus.curate]] — the shared
-        // prefix of p_curate_*/q_sql_curate/p_train_manifest*/s_curate's
-        // derivation. Each stage is timed from a persisted input so the
-        // numbers attribute, not cascade.
-        import org.apache.spark.sql.functions._
-        import graft.ops.{Bpe, Corpus, Dedup, LangModel, TextOps}
-        def t(label: String)(body: => Long): Unit = {
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime(); val n = body
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          println(f"PROFILE curate:$label rows=${times.head._2} " +
-            times.map(x => f"${x._1}%.2f").mkString(" "))
-        }
-        val dd = Tables.read(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-        t("gopher")(TextOps.gopherAudit(dd, "doc_id", "text",
-          minStopwords = 1).where(col("fail_mask") === 0).count())
-        val audit = TextOps.gopherAudit(dd, "doc_id", "text",
-          minStopwords = 1)
-        val passed = dd.join(audit.where(col("fail_mask") === 0)
-          .select(col("doc_id")), Seq("doc_id")).persist()
-        passed.count()
-        t("exact_reps")(
-          Dedup.exact(passed, Seq("text"), "doc_id").count())
-        val reps2 = Dedup.exact(passed, Seq("text"), "doc_id")
-          .select(col("doc_id"))
-        val surv = passed.join(reps2, Seq("doc_id"), "semi")
-        t("window_digests")(Dedup.windowDigests(
-          surv.select(col("doc_id").cast("long").as("id"), col("text")),
-          "id", "text", 30).count())
-        t("remove_spans")(
-          Dedup.removeSpans(surv, "doc_id", "text", 30).count())
-        val cleaned = Dedup.removeSpans(surv, "doc_id", "text", 30).persist()
-        cleaned.count()
-        t("ppl_score")(LangModel.perplexityScore(cleaned, "doc_id",
-          "clean_text", 3.43).count())
-        t("tok_count_word")(cleaned.select(col("doc_id"),
-          size(split(col("clean_text"), " ")).cast("long").as("n_tok"))
-          .agg(sum(col("n_tok"))).head().getLong(0))
-        val scored = LangModel.perplexityScore(cleaned, "doc_id",
-          "clean_text", 3.43).persist()
-        scored.count()
-        val withTok = cleaned
-          .join(scored.where(col("kept"))
-            .select(col("id").as("doc_id"), col("avg_nll")), Seq("doc_id"))
-          .join(cleaned.select(col("doc_id"),
-            size(split(col("clean_text"), " ")).cast("long").as("n_tok")),
-            Seq("doc_id"))
-          .select(col("doc_id"), col("n_tok"), col("avg_nll"))
-        t("budget_select")(Corpus.selectWithinBudget(
-          withTok.withColumn("__q", -col("avg_nll")),
-          "doc_id", "n_tok", "__q", 6000L).count())
-        t("full_curate")(
-          Corpus.curate(dd, "doc_id", "text").count())
-        passed.unpersist(); cleaned.unpersist(); scored.unpersist()
-        ()
-      case s if s.startsWith("curategrowth") =>
-        // Repeated one-shot curate in one JVM: does per-call cost grow with
-        // accumulated cached blocks / CacheManager entries? Variants:
-        //   curategrowth        — call as the gates do
-        //   curategrowth:clear  — clearCache() before every call
-        //   curategrowth:gc     — System.gc() before every call
-        import org.apache.spark.sql.functions._
-        val variant = s.split(':').drop(1).headOption.getOrElse("plain")
-        val dd = Tables.read(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text"))
-        (1 to reps).foreach { i =>
-          if (variant == "clear") spark.catalog.clearCache()
-          if (variant == "gc") System.gc()
-          val gcB = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-          val gcT0 = {
-            var t = 0L; gcB.forEach(b => t += b.getCollectionTime); t
-          }
-          val t0 = System.nanoTime()
-          val n = graft.ops.Corpus.curate(dd, "doc_id", "text").count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val gcT1 = {
-            var t = 0L; gcB.forEach(b => t += b.getCollectionTime); t
-          }
-          val blocks = spark.sparkContext.getRDDStorageInfo.length
-          println(f"PROFILE curategrowth[$variant] rep$i rows=$n " +
-            f"t=$dt%.2fs gc=${(gcT1 - gcT0) / 1000.0}%.2fs cachedRdds=$blocks")
-        }
-      case n =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"PROFILE $n: ${times.map(t => f"$t%.2f").mkString(" ")}")
+      case n => traceGate(spark, sfDir, n, reps)
     }
-
-  /** model:<kind>:<strategy> — isolated model-build cost (no caching between
-    * reps), kind ∈ {itemcos, itempear, usercos, userpear}.
-    */
-  def modelStrategy(spark: SparkSession, sfDir: String, reps: Int,
-      spec: String): Unit = {
-    import graft.recdb.Similarity
-    val Array(_, kind, st) = spec.split(":")
-    val r = Tables.ratings(spark, sfDir).cache()
-    r.count()
-    val build = kind match {
-      case "itemcos" => () => Similarity.itemCosine(r, Tables.ratingCols, st)
-      case "itempear" => () => Similarity.itemPearson(r, Tables.ratingCols, st)
-      case "usercos" => () => Similarity.userCosine(r, Tables.ratingCols, st)
-      case "userpear" => () => Similarity.userPearson(r, Tables.ratingCols, st)
-    }
-    val times = (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      val n = build().count()
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    println(f"PROFILE $spec rows=${times.head._2} " +
-      times.map(x => f"${x._1}%.2f").mkString(" "))
+    spark.stop()
   }
 
-  /** Decompose the dense userCosine model build: index, vectors, pair join. */
-  def modelStages(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorFns
-    val c = Tables.ratingCols
-    val r = Tables.ratings(spark, sfDir).cache()
-    r.count()
-    def t(label: String)(body: => Long): Unit = {
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); val n = body
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"PROFILE mstage:$label rows=${times.head._2} " +
-        times.map(x => f"${x._1}%.2f").mkString(" "))
+  /** Run gate `name` `reps` times, each under [[Trace]], and print one
+    * `PROFILE trace <name> rep<i> rows=<n> <Trace.line>` line per run. */
+  def traceGate(spark: SparkSession, sfDir: String, name: String,
+      reps: Int): Seq[Trace] = {
+    val gate = SparkEntry.queries(name)
+    (1 to reps).map { i =>
+      val (rows, t) = Trace.run(spark.sparkContext)(gate(spark, sfDir).count())
+      println(s"PROFILE trace $name rep$i rows=$rows ${t.line}")
+      t
     }
-    // userCosine: joinKey = item (dims), pairKey = user (entities)
-    val idx = r.select(col(c.item).as("k")).distinct()
-      .withColumn("ki", (row_number().over(Window.orderBy("k")) - 1).cast("int"))
-    t("idx")(idx.count())
-    val dims = idx.count().toInt
-    val vecs = r.join(broadcast(idx), col(c.item) === col("k"))
-      .groupBy(col(c.user).as("p"))
-      .agg(VectorFns.denseVecAgg(col("ki"), col(c.rating).cast("double"), dims).as("vec"))
-      .withColumn("nrm", sqrt(VectorFns.dotNative(col("vec"), col("vec"))))
-    t("vecs")(vecs.count())
-    val vc = vecs.cache(); vc.count()
-    val a = vc.select(col("p").as("p1"), col("vec").as("v1"), col("nrm").as("n1"))
-    val bb = vc.select(col("p").as("p2"), col("vec").as("v2"), col("nrm").as("n2"))
-    val dot = VectorFns.dotNative(col("v1"), col("v2"))
-    val pairs = a.join(bb, col("p1") < col("p2"))
-      .select(col("p1"), col("p2"), (dot / (col("n1") * col("n2"))).as("similarity"))
-    t("pairs_cached_vecs")(pairs.where(col("similarity") > 0d).count())
-    t("pairs_count_only")(a.join(bb, col("p1") < col("p2")).count())
-    vc.unpersist()
-  }
-
-  /** usercf:<modelStrategy>:<scoreStrategy> — isolated pearson userCF cost. */
-  def userCfStrategy(spark: SparkSession, sfDir: String, reps: Int,
-      spec: String): Unit = {
-    import graft.recdb.{Scoring, Similarity}
-    val Array(_, ms, ss) = spec.split(":")
-    val r = Tables.ratings(spark, sfDir).cache()
-    val times = (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      val model = Similarity.userPearson(r, Tables.ratingCols, ms).cache()
-      val n = Scoring.userCF(r, model, Tables.ratingCols, strategy = ss).count()
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
-    println(f"PROFILE $spec rows=${times.head._2} " +
-      times.map(x => f"${x._1}%.2f").mkString(" "))
-  }
-
-  /** Decompose the dense userCF sweep: vectors, sim rows, cross join. */
-  def userCfStages(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorFns
-    import graft.recdb.{Scoring, Similarity}
-    val c = Tables.ratingCols
-    val r = Tables.ratings(spark, sfDir).cache()
-    val model = Similarity.userPearson(r, c, "dense").cache()
-    model.count()
-    def t(label: String)(body: => Long): Unit = {
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); val n = body
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"PROFILE ustage:$label rows=${times.head._2} " +
-        times.map(x => f"${x._1}%.2f").mkString(" "))
-    }
-    val idx = r.select(col(c.user).as("k"))
-      .distinct()
-      .withColumn("ki", (row_number().over(Window.orderBy("k")) - 1).cast("int"))
-    val dims = idx.count().toInt
-    val ivec = r.join(broadcast(idx), col(c.user) === col("k"))
-      .groupBy(col(c.item).as("i"))
-      .agg(collect_list(struct(col("ki"), col(c.rating).cast("double"))).as("re"),
-        collect_list(struct(col("ki"), lit(1.0).as("one"))).as("me"))
-      .select(col("i"), VectorFns.denseFromEntries(col("re"), dims).as("rv"),
-        VectorFns.denseFromEntries(col("me"), dims).as("mv"))
-    t("ivec")(ivec.count())
-    val sym = Scoring.symmetric(model, "user1", "user2")
-      .select(col("i").as("u"), col("j").as("v"), col("s"))
-    t("sym")(sym.count())
-    val srows = r.select(col(c.user).as("u")).distinct()
-      .join(sym, Seq("u"), "left")
-      .join(broadcast(idx.select(col("k").as("v"), col("ki").as("vi"))), Seq("v"), "left")
-      .groupBy(col("u"))
-      .agg(collect_list(when(col("s").isNotNull,
-          struct(col("vi"), col("s").cast("double")))).as("se"),
-        collect_list(when(col("s").isNotNull,
-          struct(col("vi"), abs(col("s")).cast("double")))).as("ae"))
-      .select(col("u"), VectorFns.denseFromEntries(col("se"), dims).as("sv"),
-        VectorFns.denseFromEntries(col("ae"), dims).as("av"))
-    t("srows")(srows.count())
-    val uavg = r.groupBy(col(c.user).as("u")).agg(avg(col(c.rating)).as("ubar"))
-    val den = VectorFns.dotNative(col("av"), col("mv"))
-    val num = VectorFns.dotNative(col("sv"), col("rv")) -
-      col("ubar") * VectorFns.dotNative(col("sv"), col("mv"))
-    val full = srows.join(uavg, Seq("u")).crossJoin(ivec)
-      .select(col("u"), col("i"),
-        when(den === 0d, lit(0.0)).otherwise(col("ubar") + num / den).as("score"))
-    t("cross_score")(full.count())
-    val cached = srows.join(uavg, Seq("u")).cache()
-    cached.count()
-    val iCached = ivec.cache(); iCached.count()
-    t("cross_score_precached")(cached.crossJoin(iCached)
-      .select(col("u"), col("i"),
-        when(den === 0d, lit(0.0)).otherwise(col("ubar") + num / den).as("score"))
-      .count())
-  }
-
-  /** Decompose jaccardPairs cost: grams eval, explode, self-join, full. */
-  def jaccardStages(spark: SparkSession, sfDir: String, reps: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import graft.ops.{Dedup, TextOps}
-    val docsDf = Tables.read(spark, sfDir, "documents")
-    def t(label: String)(body: => Long): Unit = {
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); val n = body
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      println(f"PROFILE stage:$label rows=${times.head._2} " +
-        times.map(x => f"${x._1}%.2f").mkString(" "))
-    }
-    val docs = docsDf.select(col("doc_id").as("id"),
-      Dedup.wordNgrams(TextOps.tokens(col("text")), 3).as("grams"))
-    t("grams")(docs.count())
-    t("grams_eval")(docs.select(sum(size(col("grams")))).head().getLong(0))
-    val ex = docs.select(col("id"), explode(col("grams")).as("g"))
-    t("explode")(ex.count())
-    val inter = ex.select(col("g"), col("id").as("id1"))
-      .join(ex.select(col("g"), col("id").as("id2")), Seq("g"))
-      .where(col("id1") < col("id2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("n_inter"))
-    t("selfjoin_agg")(inter.count())
-    t("full")(Dedup.jaccardPairs(docsDf, "doc_id", "text", 3, 0.5).count())
   }
 
   /** FK-consistent `mult`× replica of the driver tables (see the fullgate
@@ -1255,7 +460,5 @@ object Profile {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$out/_DONE"), fingerprint)
     out
-  }
-    spark.stop()
   }
 }

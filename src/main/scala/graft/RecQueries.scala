@@ -557,10 +557,10 @@ object RecQueries {
     "r_svd_topk" ->
       """WITH uf AS (
         |  SELECT id, CAST(features AS DOUBLE[]) AS f
-        |  FROM '__SVD_FACTORS__/models/svdrec.userModel.parquet/*.parquet'),
+        |  FROM '__SVD_FACTORS__/models/svdrec.factors/user/*.parquet'),
         |itf AS (
         |  SELECT id, CAST(features AS DOUBLE[]) AS f
-        |  FROM '__SVD_FACTORS__/models/svdrec.itemModel.parquet/*.parquet')
+        |  FROM '__SVD_FACTORS__/models/svdrec.factors/item/*.parquet')
         |SELECT u.id AS userid, i.id AS itemid,
         |  round(list_inner_product(u.f, i.f), 6) AS score
         |FROM uf u CROSS JOIN itf i

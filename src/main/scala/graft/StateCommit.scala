@@ -86,6 +86,11 @@ object StateCommit {
     * is there. */
   def live(path: String): String = { heal(Paths.get(path).toAbsolutePath); path }
 
+  /** The version `path` serves now, links resolved: a reader that reads
+    * several files of one commit reads them all from here. */
+  def resolve(path: String): String =
+    Paths.get(live(path)).toRealPath().toString
+
   /** Delete `path`, links not followed, with its versions and temps. */
   def delete(path: String): Unit = {
     val f = new File(path).getAbsoluteFile

@@ -48,8 +48,8 @@ object Recommender {
     require(catalog.findByTagAndMethod(eventsTag, method).isEmpty,
       s"a recommender on ($eventsTag, ${method.name}) already exists (recathon.c:844)")
     val paths = method match {
-      case RecMethod.SVD => Seq(s"$modelsDir/$name.userModel.parquet",
-        s"$modelsDir/$name.itemModel.parquet")
+      case RecMethod.SVD => Seq(s"$modelsDir/$name.factors/user",
+        s"$modelsDir/$name.factors/item")
       case _ => Seq(s"$modelsDir/$name.model.parquet")
     }
     val entry = train(events, RecEntry(name, eventsTag, c.user, c.item,
@@ -79,10 +79,9 @@ object Recommender {
     val modelRows = e.method match {
       case RecMethod.SVD =>
         val (uf, itf) = FunkSVD.train(events, c)
-        graft.StateCommit.writeDir(e.modelPaths.head)(
-          uf.write.mode("overwrite").parquet(_))
-        graft.StateCommit.writeDir(e.modelPaths(1))(
-          itf.write.mode("overwrite").parquet(_))
+        graft.StateCommit.writeDir(factorsDir(e)) { d =>
+          uf.write.parquet(s"$d/user"); itf.write.parquet(s"$d/item")
+        }
         0L
       case m =>
         graft.StateCommit.writeDir(e.modelPaths.head)(
@@ -93,6 +92,23 @@ object Recommender {
     e.copy(eventTotal = st.events,
       nUsers = if (userBased) st.entities else st.keys,
       nItems = if (userBased) st.keys else st.entities, modelRows = modelRows)
+  }
+
+  /** The committed dirs of `e`'s model files. An SVD model is one dir
+    * whose `user/` and `item/` hold the two factor halves, so one commit
+    * swaps both and a reader never pairs halves of two trainings.
+    */
+  private def modelDirs(e: RecEntry): Seq[String] = e.modelPaths.map { p =>
+    val f = new java.io.File(p)
+    if (e.method == RecMethod.SVD && Set("user", "item")(f.getName)) f.getParent
+    else p
+  }.distinct
+
+  private def factorsDir(e: RecEntry): String = modelDirs(e) match {
+    case Seq(d) => d
+    case ps => throw new IllegalStateException(s"svd recommender " +
+      s"'${e.name}' has model paths $ps, not <dir>/user and <dir>/item: " +
+      "drop and re-create it")
   }
 
   /** Rows in the parquet files of `dir`, summed from their footers in this
@@ -139,7 +155,7 @@ object Recommender {
         // reap EVERY view version (the one-version grace of materializeView
         // may have left version N-1 on disk besides the current one)
         e.viewPath.foreach(deleteViewVersions(_, keepFrom = Long.MaxValue))
-        e.modelPaths.foreach(graft.StateCommit.delete)
+        modelDirs(e).foreach(graft.StateCommit.delete)
         catalog.delete(name)
     }
   }
@@ -332,11 +348,12 @@ object Recommender {
             // explicit schemas: the model layout is an engine contract
             // (LONG ids, utility.c:310-317), and skipping parquet schema
             // inference keeps the catalog-hit read job-free — EXPLAIN stays
-            // zero-job and per-query serving skips a footer-listing job
-            (spark.read.schema(factorSchema).parquet(
-                graft.StateCommit.live(e.modelPaths.head)),
-              spark.read.schema(factorSchema).parquet(
-                graft.StateCommit.live(e.modelPaths(1))))
+            // zero-job and per-query serving skips a footer-listing job;
+            // both halves come from the one version the factors dir
+            // resolves to now
+            val d = graft.StateCommit.resolve(factorsDir(e))
+            (spark.read.schema(factorSchema).parquet(s"$d/user"),
+              spark.read.schema(factorSchema).parquet(s"$d/item"))
           case None => FunkSVD.train(events, c)
         }
         val scoped = users match {

@@ -9,34 +9,9 @@ trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   def sc = spark.sparkContext
 
-  /** Spark jobs that `body` starts on this thread, told apart from other
-    * threads' jobs by a job group. A sentinel job in its own group flushes
-    * the listener bus, which delivers each listener's events in order.
-    */
-  def jobsRunBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == s"$tag-body" => jobs.incrementAndGet(); ()
-          case Some(g) if g == s"$tag-flush" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(s"$tag-body", "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-flush", "listener-bus flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the flush job")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs that `body` starts, on this thread or on threads it
+    * spawns: the job count of its [[Trace]]. */
+  def jobsRunBy(body: => Unit): Int = Trace.run(sc)(body)._2.jobs
 }
 
 object SparkSpec {

@@ -214,6 +214,50 @@ class StateCommitSpec extends SparkSpec {
     new File(s"$root/models").list().toSeq shouldBe empty
   }
 
+  test("svd model: a retrain crashed at any step serves user and item " +
+      "factors of one training; DROP leaves no version behind") {
+    import graft.recdb.{EventCols, RecCatalog, Recommender}
+    val c = EventCols("userid", "itemid", "rating")
+    val root = tmp("scsvd")
+    val cat = new RecCatalog(s"$root/catalog")
+    val models = s"$root/models"
+    // trainings of even and odd v see disjoint users and items: ids 1-6
+    // and 11-16
+    def shift(v: Int) = 10L * (v % 2)
+    def events(v: Int) = (for {
+      u <- 1L to 6L; i <- 1L to 6L if (u + i) % 3 != 0
+    } yield (u + shift(v), i + shift(v), (1 + (u * i) % 5).toDouble))
+      .toDF("userid", "itemid", "rating")
+    def ids(v: Int) = {
+      val r = (1L to 6L).map(_ + shift(v)).toSet
+      (r, r)
+    }
+    // (users, items) that a catalog-hit svd RECOMMEND scores
+    def served() = {
+      val rows = Recommender.recommend(spark, events(0), "m", c, "svd",
+        Some(cat)).collect()
+      (rows.map(_.getLong(0)).toSet, rows.map(_.getLong(1)).toSet)
+    }
+    Seq("written", "aside", "versioned", "linked").foreach { step =>
+      withClue(s"crash after '$step': ") {
+        Recommender.drop("m", cat)
+        Recommender.create(spark, "m", events(0), "m", c, "svd", cat, models)
+        served() shouldBe ids(0)
+        // v = 1 swaps the plain dir CREATE published, v = 2 a link
+        (1 to 2).foreach { v =>
+          crashAt(models, step)(Recommender.train(events(v),
+            cat.get("m").get)) shouldBe (step != "aside" || v == 1)
+          served() should (be(ids(v - 1)) or be(ids(v)))
+          Recommender.train(events(v), cat.get("m").get)
+          served() shouldBe ids(v)
+        }
+        assertTidy(s"$models/m.factors")
+      }
+    }
+    Recommender.drop("m", cat) shouldBe true
+    new File(models).list().toSeq shouldBe empty
+  }
+
   test("catalog entry and retention policy: a crashed file commit keeps " +
       "the old record; the next write lands") {
     import graft.recdb.{RecCatalog, RecEntry, RecMethod}

@@ -3,7 +3,6 @@ package graft.ops
 import graft.SparkSpec
 import graft.streaming.{AnnIndexMaintainer, BpeMaintainer, MaintenancePlanner,
   Retention, ShardMaintainer, SnapshotManifest}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
 
 /** Specs for the round-13 fixes and additions: the snapshot pin/verify
@@ -165,32 +164,17 @@ class Round20OpsSpec extends SparkSpec {
     AnnIndexMaintainer.processBatch(big, 0L, "vec_id", "embedding",
       Array(Array(1.0, 0.0, 3.0, 0.0)), dir)
     val total = 30000L
-    @volatile var records = 0L
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          records += e.taskMetrics.inputMetrics.recordsRead
-    }
-    // settle outstanding events from the fixture writes first
-    Thread.sleep(1500)
-    sc.addSparkListener(listener)
-    try {
+    val (_, trace) = graft.Trace.run(sc) {
       val mdir = tmp("pinprobem") + "/manifest"
       SnapshotManifest.pin(spark,
         Seq(SnapshotManifest.Pin("idx", "ann", dir, 0L, "vec_id")), mdir)
       SnapshotManifest.verify(spark, mdir).collect()
         .map(_.getBoolean(3)) shouldBe Array(true)
-      // listener delivery is async — poll until the count stabilizes
-      var last = -1L
-      var spins = 0
-      while (records != last && spins < 20) {
-        last = records; spins += 1; Thread.sleep(300)
-      }
-    } finally sc.removeSparkListener(listener)
+    }
     // pin + verify together: a slice COUNT would read >= 2 * total rows
     // (60k); the limit(1) probe loads ~one 4096-row column batch per
     // probe
-    records should be < total / 2
+    trace.rowsRead should be < total / 2
   }
 
   // --------- discovery GC: hardened merges signature, new families

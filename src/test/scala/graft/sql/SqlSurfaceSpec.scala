@@ -386,25 +386,13 @@ class SqlSurfaceSpec extends SparkSpec with BeforeAndAfterAll {
     ext.sql("""CREATE RECOMMENDER rec_explain ON ml_ratings USERS FROM userid
               |ITEMS FROM itemid EVENTS FROM rating USING itemCosCF""".stripMargin)
       .collect()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val sc = ext.sparkContext
-    sc.addSparkListener(listener)
     try {
-      ext.sql(
+      jobsRunBy(ext.sql(
         """EXPLAIN EXTENDED SELECT * FROM ml_ratings
           |RECOMMEND itemid TO userid ON rating USING itemCosCF
           |WHERE userid = 2 ORDER BY rating DESC LIMIT 3""".stripMargin)
-        .collect()
-      Thread.sleep(1000) // listener bus is async
-      jobs.get() shouldBe 0
+        .collect()) shouldBe 0
     } finally {
-      sc.removeSparkListener(listener)
       ext.sql("DROP RECOMMENDER rec_explain").collect()
     }
   }
