@@ -319,9 +319,7 @@ object Bench {
     import graft.ops.{Ann, TextOps}
     import graft.streaming.{AnnIndexMaintainer, SearchIndexMaintainer}
     try {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_bench_hybrid", Tables.runKey(sfDir)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_bench_hybrid", sfDir)
       val dd = Tables.read(spark, sfDir, "documents")
       val corpus = dd.where(col("doc_id") >= 50)
       val embCorpus = corpus.select(col("doc_id").as("vec_id"),
@@ -447,12 +445,7 @@ object Bench {
       val r = Tables.ratings(spark, sfDir).cache()
       val users = r.select(col(c.user)).distinct()
         .orderBy(col(c.user)).collect().map(_.getLong(0))
-      // runKey (sf dir AND pid), not the sf-dir hash alone: two concurrent
-      // bench runs at the same scale must not clobber each other's
-      // catalog/models mid-loop
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_bench_workload", Tables.runKey(sfDir)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_bench_workload", sfDir)
       val cat = new RecCatalog(s"$base/catalog")
       val tag = s"events@$sfDir"
       Recommender.create(spark, "wl", r, tag, c, "itemCosCF",
@@ -484,9 +477,7 @@ object Bench {
       val r = Tables.ratings(spark, sfDir).cache()
       val users = r.select(col(c.user)).distinct()
         .orderBy(col(c.user)).collect().map(_.getLong(0))
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_bench_workload_topk", Tables.runKey(sfDir)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_bench_workload_topk", sfDir)
       val cat = new RecCatalog(s"$base/catalog")
       val tag = s"events_tk@$sfDir"
       Recommender.create(spark, "wltk", r, tag, c, "itemCosCF",

@@ -92,9 +92,8 @@ object ExtQueries {
     // keys with a higher version — read-back must hold exactly the
     // latest-version row per key. Oracle = window dedup over the union.
     "q_upsert" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_upsert", java.lang.Integer.toHexString(d.hashCode)).toString
-      graft.Exec.deletePath(base) // idempotent across warmup/timed/verify
+      // wiped: idempotent across warmup/timed/verify
+      val base = Fixtures.scratch("graft_upsert", d)
       val ev = Tables.read(s, d, "events")
         .select(col("user_id"), expr("ts DIV 86400000000000").as("day"),
           expr("ts DIV 1000").as("ver"), col("value"))
@@ -137,8 +136,7 @@ object ExtQueries {
     // layout-invariant (the oracle reads the original table); the pruning
     // effect itself is asserted in LayoutSpec via scan metrics.
     "q_zorder_scan" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_zorder", java.lang.Integer.toHexString(d.hashCode)).toString
+      val base = Fixtures.dir("graft_zorder", d)
       val orders = Tables.read(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       graft.sources.Layout.zorderWrite(orders,

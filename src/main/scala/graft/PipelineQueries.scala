@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Ann, Corpus, Dedup, LangModel, Packing, Sampling, TextOps, TfIdf, Tower}
 
@@ -22,24 +22,74 @@ object PipelineQueries {
   private def emb(s: SparkSession, d: String): DataFrame =
     Tables.read(s, d, "embeddings")
 
-  /** Where p_knn_ivf / p_knn_pq persist their trained centroids / codebooks —
-    * keyed by the sf dir (same contract as [[RecQueries.svdFactorBase]]).
-    * The oracle SQL carries the `__ANN_ARTIFACTS__` placeholder;
-    * [[graft.Verify]] substitutes this path when writing oracle_sql.json, so
-    * the DuckDB side re-derives cell assignment / codes / ADC / rerank from
-    * the SAME persisted model the Spark scan used — isolating exactly the
-    * scan stages (train determinism is irrelevant to the compare).
+  /** The [[Fixtures.dir]] where p_knn_ivf / p_knn_pq persist their trained
+    * centroids / codebooks (the [[RecQueries.SvdFactors]] contract). The
+    * oracle SQL carries the `__ANN_ARTIFACTS__` placeholder; [[graft.Verify]]
+    * substitutes this dir when writing oracle_sql.json, so the DuckDB side
+    * re-derives cell assignment / codes / ADC / rerank from the SAME
+    * persisted model the Spark scan used — isolating exactly the scan
+    * stages (train determinism is irrelevant to the compare).
     */
-  def annArtifactBase(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_ann_artifacts",
-      Tables.runKey(dir)).toString
+  private[graft] val AnnArtifacts = "graft_ann_artifacts"
 
   /** Where the BPE gates persist the learned merges table — same contract
-    * as [[annArtifactBase]]; the oracle SQL carries `__BPE_ARTIFACTS__`.
+    * as [[AnnArtifacts]]; the oracle SQL carries `__BPE_ARTIFACTS__`.
     */
-  def bpeArtifactBase(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_bpe_artifacts",
-      Tables.runKey(dir)).toString
+  private[graft] val BpeArtifacts = "graft_bpe_artifacts"
+
+  private def annArtifact(d: String, sub: String): String =
+    Fixtures.dir(AnnArtifacts, d) + "/" + sub
+
+  /** Persist `df` as the one-file ANN artifact `sub`. */
+  private def persistArtifact(df: DataFrame, d: String, sub: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(annArtifact(d, sub))
+
+  /** The centroid artifact `sub`, read back (doubles round-trip parquet
+    * exactly). */
+  private def artifactCents(s: SparkSession, d: String,
+      sub: String): Array[Array[Double]] =
+    Ann.ivfCentroidsFromDf(s.read.parquet(annArtifact(d, sub)))
+
+  /** Persist a trained centroid frame as artifact `sub` and serve its
+    * read-back: the gate and its oracle use the same bytes. */
+  private def persistCents(s: SparkSession, d: String, sub: String,
+      cdf: DataFrame): Array[Array[Double]] = {
+    persistArtifact(cdf, d, sub)
+    artifactCents(s, d, sub)
+  }
+
+  /** `e` as (vec_id, embedding array<double>) under the embedding drift
+    * splice: +[[EmbShift]] per component where `up` holds, −EmbShift where
+    * `down` holds. The one Spark-side rendering of the splice; the oracles
+    * render it in SQL.
+    */
+  private def shiftedEmb(e: DataFrame, up: Column,
+      down: Column = lit(false)): DataFrame = {
+    val v = col("embedding").cast("array<double>")
+    e.select(col("vec_id"), when(up, transform(v, x => x + lit(EmbShift)))
+      .when(down, transform(v, x => x - lit(EmbShift))).otherwise(v)
+      .as("embedding"))
+  }
+
+  /** `embeddings` as (vec_id, embedding array<double>), wave 2
+    * (vec_id % 3 == 2) spliced when `spliced`. */
+  private def embVecs(s: SparkSession, d: String,
+      spliced: Boolean): DataFrame =
+    shiftedEmb(emb(s, d), if (spliced) col("vec_id") % 3 === 2 else lit(false))
+
+  /** An (id, vector) frame collected as search queries. */
+  private def collectVecs(vecs: DataFrame): Seq[(Long, Array[Double])] =
+    vecs.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** The kNN gates' probe set: rows vec_id < 5 of a (vec_id, vector)
+    * frame. */
+  private def probes(vecs: DataFrame): Seq[(Long, Array[Double])] =
+    collectVecs(vecs.where(col("vec_id") < 5))
+
+  /** The probe set over `embeddings`, drift-spliced when `spliced`. */
+  private def embProbes(s: SparkSession, d: String,
+      spliced: Boolean = false): Seq[(Long, Array[Double])] =
+    probes(embVecs(s, d, spliced))
 
   /** One 4-wave STAMPED BPE model per (JVM, sf dir): growthFactor 0
     * relearns at every wave (version v<g> stamped at batch g over the
@@ -49,14 +99,11 @@ object PipelineQueries {
     * mutation-safe; the oracles re-derive the version board from the raw
     * documents.
     */
-  private val bpe4ModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bpe4ModelCache = Fixtures.memo[String, String]("bpe4Model")
 
   private def bpe4ModelFor(s: SparkSession, d: String): String =
-    bpe4ModelCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_bpe4model", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    bpe4ModelCache(d) {
+      val base = Fixtures.scratch("graft_bpe4model", d)
       graft.streaming.Retention.setMergesPolicy(s"$base/model", keepLast = 2)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       (0 until 4).foreach { g =>
@@ -66,57 +113,56 @@ object PipelineQueries {
           graft.streaming.BpeMaintainer.Config(growthFactor = 0.0))
       }
       s"$base/model"
-    })
+    }
 
   /** One BPE learning run per (JVM, sf dir): the three BPE gates share the
     * learned rules and the persisted artifact regardless of gate order.
     */
   private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+    Fixtures.memo[String, Seq[(String, String)]]("bpeMerges")
 
   private def bpeMergesFor(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeMergesCache.computeIfAbsent(d, _ => {
+    bpeMergesCache(d) {
       val m = graft.ops.Bpe.learnMerges(docs(s, d), "doc_id", "text",
         numMerges = 40)
       graft.ops.Bpe.mergesDf(s, m).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges")
       m
-    })
+    }
 
   /** One derived WordPiece vocabulary per (JVM, sf dir) — corpus alphabet
     * + the shared BPE run's merge symbols, both piece forms — persisted as
     * the one-column artifact the greedy-match oracle re-applies.
     */
-  private val wpVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private val wpVocabCache = Fixtures.memo[String, Seq[String]]("wpVocab")
 
   private def wpVocabFor(s: SparkSession, d: String): Seq[String] =
-    wpVocabCache.computeIfAbsent(d, _ => {
+    wpVocabCache(d) {
       val v = graft.ops.WordPiece.vocabFromMerges(
         graft.ops.WordPiece.corpusAlphabet(docs(s, d), "doc_id", "text"),
         bpeMergesFor(s, d))
       graft.ops.WordPiece.vocabDf(s, v).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/wp_vocab")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/wp_vocab")
       v
-    })
+    }
 
   /** Byte-mode WordPiece vocabulary (hex-pair alphabet of the mixed-script
     * corpus + the byte-BPE merge symbols), persisted for the byte walk
     * oracle.
     */
   private val wpByteVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    Fixtures.memo[String, Seq[String]]("wpByteVocab")
 
   private def wpByteVocabFor(s: SparkSession, d: String): Seq[String] =
-    wpByteVocabCache.computeIfAbsent(d, _ => {
+    wpByteVocabCache(d) {
       val v = graft.ops.WordPiece.vocabFromMerges(
         graft.ops.WordPiece.corpusAlphabet(mixedDocs(s, d), "doc_id", "text",
           byteLevel = true),
         bpeByteMergesFor(s, d))
       graft.ops.WordPiece.vocabDf(s, v).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/wp_vocab_bytes")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/wp_vocab_bytes")
       v
-    })
+    }
 
   /** One SemDeDup coarse-quantizer train per (JVM, sf dir), persisted so
     * the oracle re-derives cluster assignment from the SAME centroids —
@@ -129,16 +175,15 @@ object PipelineQueries {
     * O(N^1.5·dim) — the same balance point as assignment.
     */
   private val semDedupCentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
+    Fixtures.memo[String, Array[Array[Double]]]("semDedupCents")
 
   private def semDedupCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
-    semDedupCentsCache.computeIfAbsent(d, _ => {
+    semDedupCentsCache(d) {
       val (cdf, _) = Ann.ivfTrainBalanced(emb(s, d), "embedding",
         cellsPerSqrtN = 4)
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/semdedup_centroids")
+      persistArtifact(cdf, d, "semdedup_centroids")
       Ann.ivfCentroidsFromDf(cdf)
-    })
+    }
 
   /** BALANCED coarse quantizer for the corpus-wide graph gates: nlist =
     * 4·⌈√N⌉ via [[Ann.ivfTrainBalanced]] — the FAISS √N law that equalizes
@@ -152,16 +197,15 @@ object PipelineQueries {
     * tools/fullgate_r9_sf1.log adjudication #3, 70.7s → 3.6s once sized.)
     */
   private val sizedCentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
+    Fixtures.memo[String, Array[Array[Double]]]("sizedCents")
 
   private def sizedCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
-    sizedCentsCache.computeIfAbsent(d, _ => {
+    sizedCentsCache(d) {
       val (cdf, _) = Ann.ivfTrainBalanced(emb(s, d), "embedding",
         cellsPerSqrtN = 4)
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/sized_centroids")
+      persistArtifact(cdf, d, "sized_centroids")
       Ann.ivfCentroidsFromDf(cdf)
-    })
+    }
 
   /** The sized quantizer re-persisted under a gate's OWN artifact subdir
     * without retraining: every oracle keeps reading its own path (the
@@ -176,9 +220,8 @@ object PipelineQueries {
       subdir: String): Array[Array[Double]] = {
     val cents = sizedCentsFor(s, d)
     import s.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cid", "c").coalesce(1)
-      .write.mode("overwrite").parquet(annArtifactBase(d) + "/" + subdir)
+    persistArtifact(cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+      .toSeq.toDF("cid", "c"), d, subdir)
     cents
   }
 
@@ -187,17 +230,16 @@ object PipelineQueries {
     * [[sizedCentsCopy]] amortization for the code-compression artifacts.
     */
   private val pqCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
+    Fixtures.memo[String, Array[Array[Array[Double]]]]("pqCodebook")
 
   private def pqCodebookFor(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    pqCodebookCache.computeIfAbsent(d, _ =>
+    pqCodebookCache(d)(
       Ann.pqTrain(emb(s, d), "embedding", m = 8, k = 32))
 
   private def pqCodebookCopy(s: SparkSession, d: String,
       subdir: String): Array[Array[Array[Double]]] = {
     val cb = pqCodebookFor(s, d)
-    Ann.pqCodebookDf(s, cb).coalesce(1).write.mode("overwrite")
-      .parquet(annArtifactBase(d) + "/" + subdir)
+    persistArtifact(Ann.pqCodebookDf(s, cb), d, subdir)
     cb
   }
 
@@ -212,31 +254,18 @@ object PipelineQueries {
     * (retrain writes a NEW generation dir), so sharing is mutation-safe.
     */
   private val annDriftStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), String]()
+    Fixtures.memo[(String, Boolean), String]("annDriftState")
 
   private def annDriftStateFor(s: SparkSession, d: String,
       spliced: Boolean): String =
-    annDriftStateCache.computeIfAbsent((d, spliced), _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+    annDriftStateCache((d, spliced)) {
+      val base = Fixtures.scratch(
         if (spliced) "graft_stream_annretrain" else "graft_stream_annretrainh",
-        Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
-      val e0 = emb(s, d)
-      val e =
-        if (spliced) e0.select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        else e0.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val sub = if (spliced) "retrain_boot_cents" else "retrain_hold_cents"
-      val (c0df, _) = Ann.ivfTrainBalanced(
-        e.where(col("vec_id") % 3 === 0), "embedding")
-      c0df.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/" + sub)
-      val cents0 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/" + sub))
+        d)
+      val e = embVecs(s, d, spliced)
+      val cents0 = persistCents(s, d,
+        if (spliced) "retrain_boot_cents" else "retrain_hold_cents",
+        Ann.ivfTrainBalanced(e.where(col("vec_id") % 3 === 0), "embedding")._1)
       // disjoint b<g>/ + m/b<g> writes — overlap (guide §2.6); the
       // trained-marker value is batch-independent, stamped after
       graft.Exec.inParallel((0 until 3).map { g =>
@@ -246,7 +275,7 @@ object PipelineQueries {
       }: _*)
       graft.streaming.AnnIndexMaintainer.markTrained(s"$base/idx", 0L)
       s"$base/idx"
-    })
+    }
 
   /** One TAIL-DRIFT monitored state per (JVM, sf dir): quantizer trained
     * on waves 0–1 (persisted `tail_boot_cents`), baseline marked at wave
@@ -254,25 +283,14 @@ object PipelineQueries {
     * grow-shaped remedy case (vs [[annDriftStateFor]]'s 2/3
     * retrain-shaped one). Read-only consumers.
     */
-  private val annTailStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val annTailStateCache = Fixtures.memo[String, String]("annTailState")
 
   private def annTailStateFor(s: SparkSession, d: String): String =
-    annTailStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_anntail", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
-      val e = emb(s, d).select(col("vec_id"),
-        when(col("vec_id") % 3 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-      val (c0df, _) = Ann.ivfTrainBalanced(
-        e.where(col("vec_id") % 3 <= 1), "embedding")
-      c0df.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/tail_boot_cents")
-      val cents0 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/tail_boot_cents"))
+    annTailStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_anntail", d)
+      val e = embVecs(s, d, spliced = true)
+      val cents0 = persistCents(s, d, "tail_boot_cents",
+        Ann.ivfTrainBalanced(e.where(col("vec_id") % 3 <= 1), "embedding")._1)
       graft.Exec.inParallel((0 until 3).map { g =>
         () => graft.streaming.AnnIndexMaintainer.processBatchMonitored(
           e.where(col("vec_id") % 3 === g), g.toLong, "vec_id",
@@ -280,7 +298,7 @@ object PipelineQueries {
       }: _*)
       graft.streaming.AnnIndexMaintainer.markTrained(s"$base/idx", 1L)
       s"$base/idx"
-    })
+    }
 
   /** One EXECUTED remedy fleet per (JVM, sf dir) — the closed loop with
     * the cost-aware choice enabled: the 1/3-post tail state grows IN
@@ -299,16 +317,13 @@ object PipelineQueries {
     * copy — the two retrains are paid once per run, not per gate (the
     * sizedCentsCopy amortization applied to the heaviest new fixtures).
     */
-  private val retireFleetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val retireFleetCache = Fixtures.memo[String, String]("retireFleet")
 
   private def retireFleetFor(s: SparkSession, d: String): String =
-    retireFleetCache.computeIfAbsent(d, _ => {
+    retireFleetCache(d) {
       import graft.streaming.MaintenancePlanner
       import graft.streaming.MaintenancePlanner.AnnSpec
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_retire_fleet", Tables.runKey(d)).toString
-      graft.Exec.deletePath(root)
+      val root = Fixtures.scratch("graft_retire_fleet", d)
       graft.Exec.copyPath(annDriftStateFor(s, d, spliced = true),
         s"$root/a_old")
       graft.Exec.copyPath(annDriftStateFor(s, d, spliced = true),
@@ -318,20 +333,18 @@ object PipelineQueries {
           AnnSpec("b", s"$root/b_old", RetrainRatio)),
         annNewDirs = Map("a" -> s"$root/a_new", "b" -> s"$root/b_new"))
       root
-    })
+    }
 
-  private val remedyExecCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, String)]()
+  private val remedyExecCache =
+    Fixtures.memo[String, (DataFrame, String)]("remedyExec")
 
   private def remedyExecFor(s: SparkSession, d: String): (DataFrame, String) =
-    remedyExecCache.computeIfAbsent(d, _ => {
+    remedyExecCache(d) {
       import graft.streaming.MaintenancePlanner
       import graft.streaming.MaintenancePlanner.AnnSpec
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_remexec", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_remexec", d)
       graft.Exec.copyPath(annTailStateFor(s, d), s"$base/tail")
-      graft.Exec.copyPath(annArtifactBase(d) + "/tail_boot_cents",
+      graft.Exec.copyPath(annArtifact(d, "tail_boot_cents"),
         s"$base/tail/cents")
       // the retrain arm acts on a COPY too: the executor stamps the
       // superseded pre-rebuild dir ([[Retention.markSuperseded]]), and
@@ -348,9 +361,9 @@ object PipelineQueries {
             growPostFractionMax = 0.5, roundScale = 6)),
         annNewDirs = Map("ann_drift" -> s"$base/drift_gen2"))
       graft.Exec.copyPath(s"$base/tail/cents",
-        annArtifactBase(d) + "/tailexec_grow_cents")
+        annArtifact(d, "tailexec_grow_cents"))
       (graft.Exec.materializeLocal(table), s"$base/tail")
-    })
+    }
 
   /** One PACKED PAYLOAD of the curated selection per (JVM, sf dir):
     * (seq_id, ids_str, n_tok) from [[Packing.packTokenIdRows]] over
@@ -366,10 +379,10 @@ object PipelineQueries {
     * Consumers only FILTER the frame into their own state dirs.
     */
   private val packedPayloadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    Fixtures.memo[String, DataFrame]("packedPayload")
 
   private def packedPayloadFor(s: SparkSession, d: String): DataFrame =
-    packedPayloadCache.computeIfAbsent(d, _ =>
+    packedPayloadCache(d)(
       graft.Exec.materializeLocal(
         Packing.packTokenIdRows(curatedSelFor(s, d), "doc_id", "text",
           bpeMergesFor(s, d), seqLen = 128)))
@@ -382,14 +395,11 @@ object PipelineQueries {
     * Consumers COPY the returned dir before acting (seal/compact/sweep
     * mutate), so the shared tree stays pristine.
     */
-  private val shardLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val shardLayoutCache = Fixtures.memo[String, String]("shardLayout")
 
   private def shardLayoutFor(s: SparkSession, d: String): String =
-    shardLayoutCache.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shard_layout", Tables.runKey(d)).toString
-      graft.Exec.deletePath(root)
+    shardLayoutCache(d) {
+      val root = Fixtures.scratch("graft_shard_layout", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         val sel =
@@ -402,7 +412,7 @@ object PipelineQueries {
           epochs = 2, shardSize = 2, s"$root/layout")
       }
       s"$root/layout"
-    })
+    }
 
   /** One pair of monitored PQ states (hold + shifted, 3 waves each,
     * bootstrap artifacts persisted as `pqremedy_cents`/
@@ -411,26 +421,18 @@ object PipelineQueries {
     * builds per call were pure fixture cost. Consumers only read.
     */
   private val pqRemedyStatesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    Fixtures.memo[String, (String, String)]("pqRemedyStates")
 
   private def pqRemedyStatesFor(s: SparkSession,
       d: String): (String, String) =
-    pqRemedyStatesCache.computeIfAbsent(d, _ => {
+    pqRemedyStatesCache(d) {
       val m = graft.streaming.AnnIndexMaintainer
       val cents = sizedCentsCopy(s, d, "pqremedy_cents")
       val cb = pqCodebookCopy(s, d, "pqremedy_codebook")
       def build(spliced: Boolean): String = {
-        val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          "graft_pq_remedy" + (if (spliced) "_s" else "_h"),
-          Tables.runKey(d)).toString
-        graft.Exec.deletePath(base)
-        val e = emb(s, d).select(col("vec_id"),
-          (if (spliced)
-            when(col("vec_id") % 3 === 2,
-              transform(col("embedding").cast("array<double>"),
-                x => x + lit(EmbShift)))
-            .otherwise(col("embedding").cast("array<double>"))
-          else col("embedding").cast("array<double>")).as("embedding"))
+        val base = Fixtures.scratch(
+          "graft_pq_remedy" + (if (spliced) "_s" else "_h"), d)
+        val e = embVecs(s, d, spliced)
         graft.Exec.inParallel((0 until 3).map { g =>
           () => m.processBatchPqMonitored(e.where(col("vec_id") % 3 === g),
             g.toLong, "vec_id", "embedding", cents, cb, base,
@@ -440,7 +442,7 @@ object PipelineQueries {
         base
       }
       (build(spliced = false), build(spliced = true))
-    })
+    }
 
   /** One monitored-grown-redrifted PQ state per (JVM, sf dir) — the
     * p_pq_remedy_grow fixture (3 monitored waves, committed growth with
@@ -448,44 +450,32 @@ object PipelineQueries {
     * drifted wave 4). The gate itself only reads the drift/codebook/
     * post-fraction sidecars and asks pqRemedy for the decision.
     */
-  private val pqGrowStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pqGrowStateCache = Fixtures.memo[String, String]("pqGrowState")
 
   private def pqGrowStateFor(s: SparkSession, d: String): String =
-    pqGrowStateCache.computeIfAbsent(d, _ => {
+    pqGrowStateCache(d) {
       val m = graft.streaming.AnnIndexMaintainer
       val cents = sizedCentsCopy(s, d, "pqgrow_cents")
       val cb = pqCodebookCopy(s, d, "pqgrow_codebook")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_pq_remedy_grow", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_pq_remedy_grow", d)
       // static corpus cap (the s_knn_pq_fresh rule): this gate pins the
       // era-split semantics, not index scale
-      val e = emb(s, d).where(col("vec_id") < 1000).select(col("vec_id"),
-        when(col("vec_id") % 4 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .when(col("vec_id") % 4 === 3,
-          transform(col("embedding").cast("array<double>"),
-            x => x - lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("embedding"))
+      val e = shiftedEmb(emb(s, d).where(col("vec_id") < 1000),
+        up = col("vec_id") % 4 === 2, down = col("vec_id") % 4 === 3)
       graft.Exec.inParallel((0 until 3).map { g =>
         () => m.processBatchPqMonitored(e.where(col("vec_id") % 4 === g),
           g.toLong, "vec_id", "embedding", cents, cb, base, roundScale = 6)
       }: _*)
       m.markTrained(base, 1L)
       // the growth covers the first drifted region; growB = 3
-      m.growPq(s, base, cents, kNew = 8, roundScale = 6)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/pqgrow_union_cents")
-      val union = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/pqgrow_union_cents"))
+      val union = persistCents(s, d, "pqgrow_union_cents",
+        m.growPq(s, base, cents, kNew = 8, roundScale = 6))
       // the post-grow wave drifts into a region the union set has no
       // cells for — codes unfaithful AGAIN (batch 4)
       m.processBatchPqMonitored(e.where(col("vec_id") % 4 === 3), 4L,
         "vec_id", "embedding", union, cb, base, roundScale = 6)
       base
-    })
+    }
 
   /** One PQ-index GROWTH per (JVM, sf dir) — the s_knn_grow_pq
     * construction (bootstrap quantizer on waves 0-1 persisted as
@@ -493,25 +483,15 @@ object PipelineQueries {
     * the union set persisted as `growpq_union_cents`). The gate's
     * measurement is the ADC + rerank serve. Consumers only read.
     */
-  private val growPqStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val growPqStateCache = Fixtures.memo[String, String]("growPqState")
 
   private def growPqStateFor(s: SparkSession, d: String): String =
-    growPqStateCache.computeIfAbsent(d, _ => {
-      val spliced = emb(s, d).select(col("vec_id"),
-        when(col("vec_id") % 3 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-      val idxBase = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_growpq", Tables.runKey(d)).toString
-      graft.Exec.deletePath(idxBase)
-      Ann.ivfTrainBalanced(spliced.where(col("vec_id") % 3 <= 1),
-          "embedding")._1
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/growpq_boot_cents")
-      val cents0 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/growpq_boot_cents"))
+    growPqStateCache(d) {
+      val spliced = embVecs(s, d, spliced = true)
+      val idxBase = Fixtures.scratch("graft_stream_growpq", d)
+      val cents0 = persistCents(s, d, "growpq_boot_cents",
+        Ann.ivfTrainBalanced(spliced.where(col("vec_id") % 3 <= 1),
+          "embedding")._1)
       val cb = pqCodebookCopy(s, d, "growpq_codebook")
       graft.Exec.inParallel((0 until 3).map { g =>
         () => graft.streaming.AnnIndexMaintainer.processBatchPq(
@@ -519,12 +499,10 @@ object PipelineQueries {
           "embedding", cents0, cb, idxBase, roundScale = 6)
       }: _*)
       graft.streaming.AnnIndexMaintainer.markTrained(idxBase, 1L)
-      graft.streaming.AnnIndexMaintainer.growPq(s, idxBase, cents0,
-          kNew = 8, roundScale = 6)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/growpq_union_cents")
+      persistArtifact(graft.streaming.AnnIndexMaintainer.growPq(s, idxBase,
+        cents0, kNew = 8, roundScale = 6), d, "growpq_union_cents")
       idxBase
-    })
+    }
 
   /** One PQ REBUILD per (JVM, sf dir): the s_knn_retrain_pq construction
     * (3 spliced waves under stale bootstrap artifacts, full fold, then
@@ -535,18 +513,12 @@ object PipelineQueries {
     * rebuild and is identical on every call. Consumers only read.
     */
   private val pqRetrainStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.memo[String, String]("pqRetrainState")
 
   private def pqRetrainStateFor(s: SparkSession, d: String): String =
-    pqRetrainStateCache.computeIfAbsent(d, _ => {
-      val spliced = emb(s, d).select(col("vec_id"),
-        when(col("vec_id") % 3 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_pqretrain", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    pqRetrainStateCache(d) {
+      val spliced = embVecs(s, d, spliced = true)
+      val base = Fixtures.scratch("graft_stream_pqretrain", d)
       val cents0 = sizedCentsFor(s, d)
       val cb0 = pqCodebookFor(s, d)
       graft.Exec.inParallel((0 until 3).map { g =>
@@ -557,12 +529,10 @@ object PipelineQueries {
       graft.streaming.AnnIndexMaintainer.compactPq(s, s"$base/idx")
       val (cdf, cbDf) = graft.streaming.AnnIndexMaintainer.retrainPq(
         s, s"$base/idx", s"$base/idx2", m = 8, kCode = 32, roundScale = 6)
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/retrainpq_cents")
-      cbDf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/retrainpq_codebook")
+      persistArtifact(cdf, d, "retrainpq_cents")
+      persistArtifact(cbDf, d, "retrainpq_codebook")
       s"$base/idx2"
-    })
+    }
 
   /** One GROW→INGEST→RETRAIN lifecycle per (JVM, sf dir) — the
     * s_knn_grow_retrain construction (growth at G=3 on a copy of the
@@ -573,15 +543,13 @@ object PipelineQueries {
     * every call. Consumers only read.
     */
   private val growRetrainStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    Fixtures.memo[String, (String, String)]("growRetrainState")
 
   private def growRetrainStateFor(s: SparkSession,
       d: String): (String, String) =
-    growRetrainStateCache.computeIfAbsent(d, _ => {
+    growRetrainStateCache(d) {
       val src = annDriftStateFor(s, d, spliced = true)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_anngrowret", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_anngrowret", d)
       graft.Exec.copyPath(src, s"$base/idx")
       val cents0 = annDriftCents(s, d, spliced = true)
       val union = Ann.ivfCentroidsFromDf(
@@ -595,12 +563,10 @@ object PipelineQueries {
             x => x * lit(0.5) + lit(2.0)).as("embedding"))
       graft.streaming.AnnIndexMaintainer.processBatch(extra, 4L,
         "vec_id", "embedding", union, s"$base/idx")
-      graft.streaming.AnnIndexMaintainer.retrain(s, s"$base/idx",
-          s"$base/gen2")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/growret_re_cents")
+      persistArtifact(graft.streaming.AnnIndexMaintainer.retrain(s,
+        s"$base/idx", s"$base/gen2"), d, "growret_re_cents")
       (s"$base/idx", s"$base/gen2")
-    })
+    }
 
   /** One executed five-state maintenance fleet per (JVM, sf dir) — the
     * s_maint_execute construction-and-execution (copies of the shared
@@ -610,17 +576,14 @@ object PipelineQueries {
     * re-running it per bench pass re-measured identical work
     * (the remedyExecFor amortization applied to the full fleet).
     */
-  private val maintExecCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val maintExecCache = Fixtures.memo[String, DataFrame]("maintExec")
 
   private def maintExecFor(s: SparkSession, d: String): DataFrame =
-    maintExecCache.computeIfAbsent(d, _ => {
+    maintExecCache(d) {
       import graft.streaming.MaintenancePlanner
       import graft.streaming.MaintenancePlanner.{AnnSpec, CurateRun,
         CurateSpec, DeltaSpec, ShardSpec}
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_exec", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_exec", d)
       // destructive targets act on COPIES of the shared/memoized states
       graft.Exec.copyPath(shardRecStateFor(s, d), s"$base/shards")
       graft.Exec.copyPath(bm25StateFor(s, d), s"$base/postings")
@@ -645,7 +608,7 @@ object PipelineQueries {
           graft.streaming.SearchIndexMaintainer.compact(sp, "doc_id", dir,
             Some(2L)))))
       graft.Exec.materializeLocal(table)
-    })
+    }
 
   /** One curation STATE (3 waves + mid-stream fold) per (JVM, sf dir)
     * for s_train_manifest — the gate's measurement is the manifest
@@ -653,13 +616,11 @@ object PipelineQueries {
     * build it repeated per call. Consumers only read (manifest derives).
     */
   private val trainManifestStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.memo[String, String]("trainManifestState")
 
   private def trainManifestStateFor(s: SparkSession, d: String): String =
-    trainManifestStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_manifest", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    trainManifestStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_manifest", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       (0 until 3).foreach { g =>
         graft.streaming.CurateMaintainer.processBatch(
@@ -668,7 +629,7 @@ object PipelineQueries {
         if (g == 1) graft.streaming.CurateMaintainer.compact(s, s"$base/state")
       }
       s"$base/state"
-    })
+    }
 
   /** One curation STATE (2 waves on the %2 partition + mid-stream fold)
     * per (JVM, sf dir) for s_curate — the round-15 rendering of the
@@ -685,14 +646,11 @@ object PipelineQueries {
     * from the persisted state every call and must hash-equal the
     * one-shot oracle. Consumers only read.
     */
-  private val curateStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val curateStateCache = Fixtures.memo[String, String]("curateState")
 
   private def curateStateFor(s: SparkSession, d: String): String =
-    curateStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_curate", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    curateStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_curate", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       (0 until 2).foreach { g =>
         graft.streaming.CurateMaintainer.processBatch(
@@ -706,7 +664,7 @@ object PipelineQueries {
           s"$base/state", Some(0L))
       }
       s"$base/state"
-    })
+    }
 
   /** One GROWN state with VERSIONED quantizer generations per (JVM, sf
     * dir): a copy of the spliced drift state, bootstrap generation
@@ -715,51 +673,30 @@ object PipelineQueries {
     * SQL paths). The union set is re-persisted as `qgauto_union_cents`
     * for the oracles. Consumers only read.
     */
-  private val qgAutoStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The qgauto probe set (vec_id < 5), optionally with the drift splice
-    * applied — shared by q_sql_knn_asof's inline form and the retention
-    * gate's API-path probes. */
-  private def qgProbes(s: SparkSession, d: String,
-      spliced: Boolean): Seq[(Long, Array[Double])] = {
-    val e0 = emb(s, d)
-    val e = if (spliced) e0.select(col("vec_id"),
-        when(col("vec_id") % 3 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("v"))
-      else e0.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    e.where(col("vec_id") < 5).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-  }
+  private val qgAutoStateCache = Fixtures.memo[String, String]("qgAutoState")
 
   private def qgAutoStateFor(s: SparkSession, d: String): String =
-    qgAutoStateCache.computeIfAbsent(d, _ => {
+    qgAutoStateCache(d) {
       val src = annDriftStateFor(s, d, spliced = true)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_qgauto", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_qgauto", d)
       graft.Exec.copyPath(src, s"$base/idx")
       graft.streaming.AnnIndexMaintainer.persistCentroids(s, s"$base/idx",
-        0L, s.read.parquet(annArtifactBase(d) + "/retrain_boot_cents"))
+        0L, s.read.parquet(annArtifact(d, "retrain_boot_cents")))
       val cents0 = annDriftCents(s, d, spliced = true)
-      graft.streaming.AnnIndexMaintainer.grow(s, s"$base/idx", cents0,
-          kNew = 8, roundScale = 6) // growB = 3
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/qgauto_union_cents")
+      persistArtifact(graft.streaming.AnnIndexMaintainer.grow(s,
+        s"$base/idx", cents0, kNew = 8, roundScale = 6), // growB = 3
+        d, "qgauto_union_cents")
       graft.streaming.AnnIndexMaintainer.persistCentroids(s, s"$base/idx",
-        3L, s.read.parquet(annArtifactBase(d) + "/qgauto_union_cents"))
+        3L, s.read.parquet(annArtifact(d, "qgauto_union_cents")))
       s"$base/idx"
-    })
+    }
 
   /** The bootstrap quantizer of a monitored drift state, re-read from its
     * persisted artifact (exact double round trip). */
   private def annDriftCents(s: SparkSession, d: String,
       spliced: Boolean): Array[Array[Double]] =
-    Ann.ivfCentroidsFromDf(s.read.parquet(annArtifactBase(d) + "/" +
-      (if (spliced) "retrain_boot_cents" else "retrain_hold_cents")))
+    artifactCents(s, d,
+      if (spliced) "retrain_boot_cents" else "retrain_hold_cents")
 
   /** One reconciled shard layout per (JVM, sf dir) — the 3-wave
     * construction with wave-2 retroactive de-selection (%7 sequences
@@ -768,13 +705,11 @@ object PipelineQueries {
     * deadFraction); the compaction/seal gates build their own dirs.
     */
   private val shardRecStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.memo[String, String]("shardRecState")
 
   private def shardRecStateFor(s: SparkSession, d: String): String =
-    shardRecStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_shardrec", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    shardRecStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_shardrec", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         val sel =
@@ -785,7 +720,7 @@ object PipelineQueries {
           epochs = 2, shardSize = 2, base)
       }
       base
-    })
+    }
 
   /** One streamed ROUNDED-assignment inverted file per (JVM, sf dir) —
     * 3 waves against the frozen √N quantizer, mid-stream LSM fold after
@@ -796,13 +731,11 @@ object PipelineQueries {
     * state kind, so the build cost itself remains a benchmarked number.
     */
   private val knnGraphStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.memo[String, String]("knnGraphState")
 
   private def knnGraphStateFor(s: SparkSession, d: String): String =
-    knnGraphStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_knngraph", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    knnGraphStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_knngraph", d)
       val e = emb(s, d)
       val cents = sizedCentsFor(s, d)
       // waves 0-1 are disjoint writes — overlap them; the mid-stream
@@ -818,7 +751,7 @@ object PipelineQueries {
         e.where(col("vec_id") % 3 === 2), 2L, "vec_id", "embedding",
         cents, s"$base/index", roundScale = 6)
       s"$base/index"
-    })
+    }
 
   /** One FULLY-FOLDED streamed inverted file per (JVM, sf dir) — 3
     * waves, then everything absorbed into one consolidated dir (upTo =
@@ -827,14 +760,11 @@ object PipelineQueries {
     * artifact its oracle re-derives from. Read-only consumers:
     * s_knn_asof and the SQL as-of surface.
     */
-  private val annAsofStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val annAsofStateCache = Fixtures.memo[String, String]("annAsofState")
 
   private def annAsofStateFor(s: SparkSession, d: String): String =
-    annAsofStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_annasof", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    annAsofStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_annasof", d)
       val e = emb(s, d)
       val cents = sizedCentsCopy(s, d, "asof_centroids_s")
       graft.Exec.inParallel((0 until 3).map { g =>
@@ -846,7 +776,7 @@ object PipelineQueries {
       // come out of the consolidated dir, not surviving batch dirs
       graft.streaming.AnnIndexMaintainer.compact(s, s"$base/index", Some(2L))
       s"$base/index"
-    })
+    }
 
   /** One GROWN PQ state with persisted artifact GENERATIONS per (JVM,
     * sf dir) — the [[qgAutoStateFor]] twin for the compressed index:
@@ -855,26 +785,16 @@ object PipelineQueries {
     * (union set → qg3). A horizon then resolves rows, centroid set AND
     * codebook with no caller-side bookkeeping. Read-only consumer:
     * q_sql_knnpq_auto. */
-  private val pqAutoStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pqAutoStateCache = Fixtures.memo[String, String]("pqAutoState")
 
   private def pqAutoStateFor(s: SparkSession, d: String): String =
-    pqAutoStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_pqauto", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    pqAutoStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_pqauto", d)
       val m = graft.streaming.AnnIndexMaintainer
-      val spliced = emb(s, d).select(col("vec_id"),
-        when(col("vec_id") % 3 === 2,
-          transform(col("embedding").cast("array<double>"),
-            x => x + lit(EmbShift)))
-        .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-      Ann.ivfTrainBalanced(spliced.where(col("vec_id") % 3 <= 1),
-          "embedding")._1
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/pqauto_boot_cents")
-      val cents0 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/pqauto_boot_cents"))
+      val spliced = embVecs(s, d, spliced = true)
+      val cents0 = persistCents(s, d, "pqauto_boot_cents",
+        Ann.ivfTrainBalanced(spliced.where(col("vec_id") % 3 <= 1),
+          "embedding")._1)
       val cb = pqCodebookCopy(s, d, "pqauto_codebook")
       graft.Exec.inParallel((0 until 3).map { g =>
         () => m.processBatchPq(spliced.where(col("vec_id") % 3 === g),
@@ -883,29 +803,25 @@ object PipelineQueries {
       }: _*)
       m.markTrained(s"$base/idx", 1L)
       m.persistCentroids(s, s"$base/idx", 0L,
-        s.read.parquet(annArtifactBase(d) + "/pqauto_boot_cents"))
+        s.read.parquet(annArtifact(d, "pqauto_boot_cents")))
       m.persistCodebook(s, s"$base/idx", 0L,
-        s.read.parquet(annArtifactBase(d) + "/pqauto_codebook"))
-      m.growPq(s, s"$base/idx", cents0, kNew = 8, roundScale = 6)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/pqauto_union_cents")
+        s.read.parquet(annArtifact(d, "pqauto_codebook")))
+      persistArtifact(m.growPq(s, s"$base/idx", cents0, kNew = 8,
+        roundScale = 6), d, "pqauto_union_cents")
       m.persistCentroids(s, s"$base/idx", 3L,
-        s.read.parquet(annArtifactBase(d) + "/pqauto_union_cents"))
+        s.read.parquet(annArtifact(d, "pqauto_union_cents")))
       s"$base/idx"
-    })
+    }
 
   /** [[annAsofStateFor]]'s twin for the PQ-CODED inverted file: three
     * code-bearing waves, whole-index fold; `pqasof_cents` /
     * `pqasof_codebook` are the artifacts its oracle re-derives from.
     * Read-only consumer: s_knn_pq_asof. */
-  private val pqAsofStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pqAsofStateCache = Fixtures.memo[String, String]("pqAsofState")
 
   private def pqAsofStateFor(s: SparkSession, d: String): String =
-    pqAsofStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_pqasof", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    pqAsofStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_pqasof", d)
       val e = emb(s, d)
       val cents = sizedCentsCopy(s, d, "pqasof_cents")
       val cb = pqCodebookCopy(s, d, "pqasof_codebook")
@@ -917,7 +833,7 @@ object PipelineQueries {
       graft.streaming.AnnIndexMaintainer.compactPq(s, s"$base/index",
         Some(2L))
       s"$base/index"
-    })
+    }
 
   /** One learned-space IVF state per (JVM, sf dir): the ridge-head
     * projection of the corpus ([[towerWeightsFor]]), a √N quantizer
@@ -925,23 +841,18 @@ object PipelineQueries {
     * ingest waves with the mid-stream fold. Returns (weights, centroids,
     * index dir); consumers only read.
     */
-  private val learnedStateCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Double]], String)]()
+  private val learnedStateCache = Fixtures.memo[String,
+    (Array[Array[Double]], Array[Array[Double]], String)]("learnedState")
 
   private def learnedStateFor(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Array[Double]], String) =
-    learnedStateCache.computeIfAbsent(d, _ => {
+    learnedStateCache(d) {
       val w = towerWeightsFor(s, d)
       val proj = emb(s, d).select(col("vec_id"),
         Tower.project(col("embedding"), w).as("pv"))
-      val (cdf, _) = Ann.ivfTrainBalanced(proj, "pv")
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/learned_cents")
-      val cents = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/learned_cents"))
-      val idxBase = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_annlearned", Tables.runKey(d)).toString
-      graft.Exec.deletePath(idxBase)
+      val cents = persistCents(s, d, "learned_cents",
+        Ann.ivfTrainBalanced(proj, "pv")._1)
+      val idxBase = Fixtures.scratch("graft_stream_annlearned", d)
       graft.Exec.inParallel((0 until 2).map { g =>
         () => graft.streaming.AnnIndexMaintainer.processBatch(
           proj.where(col("vec_id") % 3 === g), g.toLong, "vec_id", "pv",
@@ -952,7 +863,7 @@ object PipelineQueries {
         proj.where(col("vec_id") % 3 === 2), 2L, "vec_id", "pv",
         cents, idxBase)
       (w, cents, idxBase)
-    })
+    }
 
   /** One maintained HYBRID serving state per (JVM, sf dir): the streamed
     * postings index and the streamed cell-partitioned IVF tower over the
@@ -962,8 +873,8 @@ object PipelineQueries {
     * centroids). Consumers (s_hybrid_search, s_hybrid_learned's sparse
     * leg) only read — construction amortized across bench passes.
     */
-  private val hybridStateCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]])]()
+  private val hybridStateCache =
+    Fixtures.memo[String, (String, Array[Array[Double]])]("hybridState")
 
   /** Profile-only accessor: the memoized hybrid quantizer (trains the
     * shared state on first touch, like any consumer gate). */
@@ -972,18 +883,13 @@ object PipelineQueries {
 
   private def hybridStateFor(s: SparkSession, d: String)
       : (String, Array[Array[Double]]) =
-    hybridStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_hybrid", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    hybridStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_hybrid", d)
       val corpus = docs(s, d).where(col("doc_id") >= 25)
       val embCorpus = corpus.select(col("doc_id").as("vec_id"),
         TextOps.textEmbedding(col("text"), 8).as("embedding"))
-      Ann.ivfTrainBalanced(embCorpus, "embedding")._1
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/hybrid_centroids_s")
-      val cents = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/hybrid_centroids_s"))
+      val cents = persistCents(s, d, "hybrid_centroids_s",
+        Ann.ivfTrainBalanced(embCorpus, "embedding")._1)
       // the six per-batch writes land in DISJOINT b<g>/ dirs on two
       // disjoint states — overlap them (guide §2.6, [[Exec.inParallel]]);
       // each dir's bytes are order-independent. stage lines attribute the
@@ -1010,7 +916,7 @@ object PipelineQueries {
           () => graft.streaming.AnnIndexMaintainer.compact(s, s"$base/index"))
       }
       (base, cents)
-    })
+    }
 
   /** One PQ-CODED hybrid dense leg per (JVM, sf dir): the SAME corpus
     * text embeddings and the SAME coarse quantizer as [[hybridStateFor]],
@@ -1019,25 +925,22 @@ object PipelineQueries {
     * `hybridpq_codebook`) — at 100 TB the dense leg's state is dim/m×
     * smaller and the ADC shortlist never touches full vectors. Returns
     * (index dir, codebooks read back from the artifact). */
-  private val hybridPqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Array[Double]]])]()
+  private val hybridPqCache =
+    Fixtures.memo[String, (String, Array[Array[Array[Double]]])]("hybridPq")
 
   private def hybridPqStateFor(s: SparkSession, d: String)
       : (String, Array[Array[Array[Double]]]) =
-    hybridPqCache.computeIfAbsent(d, _ => {
+    hybridPqCache(d) {
       val (_, cents) = hybridStateFor(s, d) // hybrid_centroids_s persisted
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_hybridpq", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_hybridpq", d)
       val embCorpus = docs(s, d).where(col("doc_id") >= 25)
         .select(col("doc_id").as("vec_id"),
           TextOps.textEmbedding(col("text"), 8).as("embedding"))
-      Ann.pqCodebookDf(s,
-          Ann.pqTrain(embCorpus, "embedding", m = 4, k = 8))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/hybridpq_codebook")
+      persistArtifact(Ann.pqCodebookDf(s,
+        Ann.pqTrain(embCorpus, "embedding", m = 4, k = 8)), d,
+        "hybridpq_codebook")
       val cb = Ann.pqCodebookFromDf(
-        s.read.parquet(annArtifactBase(d) + "/hybridpq_codebook"))
+        s.read.parquet(annArtifact(d, "hybridpq_codebook")))
       // disjoint b<g>/ writes — overlap (guide §2.6); bytes order-free
       graft.Exec.stage("hybridPqState.ingest3") {
         graft.Exec.inParallel((0 until 3).map { g =>
@@ -1049,7 +952,7 @@ object PipelineQueries {
       graft.Exec.stage("hybridPqState.fold")(
         graft.streaming.AnnIndexMaintainer.compactPq(s, s"$base/index"))
       (s"$base/index", cb)
-    })
+    }
 
   /** One LEARNED-TOWER hybrid dense leg per (JVM, sf dir): a ridge head
     * trained on the corpus text embeddings against the documents' lang
@@ -1063,13 +966,12 @@ object PipelineQueries {
     * both engines project through the SAME persisted weights (the
     * centroid contract).
     */
-  private val hybridLearnedStateCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Array[Array[Double]], Array[Array[Double]], String)]()
+  private val hybridLearnedStateCache = Fixtures.memo[String,
+    (Array[Array[Double]], Array[Array[Double]], String)]("hybridLearnedState")
 
   private def hybridLearnedStateFor(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Array[Double]], String) =
-    hybridLearnedStateCache.computeIfAbsent(d, _ => {
+    hybridLearnedStateCache(d) {
       val corpus = docs(s, d).where(col("doc_id") >= 25)
       val langs = corpus.select(col("lang")).distinct()
         .collect().map(_.getString(0)).sorted
@@ -1079,23 +981,16 @@ object PipelineQueries {
       val embCorpus = corpus.select(col("doc_id").as("vec_id"),
         TextOps.textEmbedding(col("text"), 8).as("embedding"),
         lbl.as("label"))
-      graft.Exec.stage("hybridLearnedState.ridge")(
-        Tower.ridgeHead(embCorpus, "embedding", "label")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(annArtifactBase(d) + "/hybrid_tower_w"))
+      graft.Exec.stage("hybridLearnedState.ridge")(persistArtifact(
+        Tower.ridgeHead(embCorpus, "embedding", "label"), d, "hybrid_tower_w"))
       val w = Tower.weightsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/hybrid_tower_w"))
+        s.read.parquet(annArtifact(d, "hybrid_tower_w")))
       val proj = embCorpus.select(col("vec_id"),
         Tower.project(col("embedding"), w).as("pv"))
       val cdf = graft.Exec.stage("hybridLearnedState.quantizer")(
         Ann.ivfTrainBalanced(proj, "pv")._1)
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/hybrid_learned_cents")
-      val cents = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/hybrid_learned_cents"))
-      val idxBase = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_hyblearned", Tables.runKey(d)).toString
-      graft.Exec.deletePath(idxBase)
+      val cents = persistCents(s, d, "hybrid_learned_cents", cdf)
+      val idxBase = Fixtures.scratch("graft_stream_hyblearned", d)
       // disjoint b<g>/ writes — overlap (guide §2.6); bytes order-free
       graft.Exec.stage("hybridLearnedState.ingest3") {
         graft.Exec.inParallel((0 until 3).map { g =>
@@ -1107,7 +1002,7 @@ object PipelineQueries {
       graft.Exec.stage("hybridLearnedState.fold")(
         graft.streaming.AnnIndexMaintainer.compact(s, idxBase))
       (w, cents, idxBase)
-    })
+    }
 
   /** The executor gate's drift-stale curation fixture, built ONCE per
     * (JVM, sf dir) and COPIED per gate call (the destructive recurate
@@ -1119,14 +1014,12 @@ object PipelineQueries {
     * pristine state lives at [[execCurateBase]].
     */
   private def execCurateBase(d: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_maint_curbase", Tables.runKey(d)).toString
+    Fixtures.dir("graft_maint_curbase", d)
 
-  private val execCurateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val execCurateCache = Fixtures.memo[String, DataFrame]("execCurate")
 
   private def execCurateStateFor(s: SparkSession, d: String): DataFrame =
-    execCurateCache.computeIfAbsent(d, _ => {
+    execCurateCache(d) {
       val base = execCurateBase(d)
       graft.Exec.deletePath(base)
       val spliced = graft.Exec.materializeLocal(
@@ -1142,20 +1035,18 @@ object PipelineQueries {
           "doc_id", "text", 30, base, klThreshold = 1e9)
       }
       spliced
-    })
+    }
 
   /** One FULLY-FOLDED streamed postings state per (JVM, sf dir) — the
     * [[annAsofStateFor]] discipline on the sparse index: 3 waves, whole
     * fold, consumed read-only by the BM25 time-travel gate.
     */
   private val bm25AsofStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Fixtures.memo[String, String]("bm25AsofState")
 
   private def bm25AsofStateFor(s: SparkSession, d: String): String =
-    bm25AsofStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_bm25asof", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    bm25AsofStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_bm25asof", d)
       val dd = docs(s, d)
       graft.Exec.inParallel((0 until 3).map { g =>
         () => graft.streaming.SearchIndexMaintainer.processBatch(
@@ -1165,20 +1056,17 @@ object PipelineQueries {
       graft.streaming.SearchIndexMaintainer.compact(s, "doc_id",
         s"$base/state", Some(2L))
       s"$base/state"
-    })
+    }
 
   /** One streamed postings state per (JVM, sf dir) — 3 waves with the
     * mid-stream fold after wave 1 (layout c0 + b1 + b2), shared by
     * s_bm25_search and p_maint_plan (both read-only consumers).
     */
-  private val bm25StateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bm25StateCache = Fixtures.memo[String, String]("bm25State")
 
   private def bm25StateFor(s: SparkSession, d: String): String =
-    bm25StateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_bm25", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    bm25StateCache(d) {
+      val base = Fixtures.scratch("graft_stream_bm25", d)
       val dd = docs(s, d)
       graft.Exec.inParallel((0 until 2).map { g =>
         () => graft.streaming.SearchIndexMaintainer.processBatch(
@@ -1191,7 +1079,7 @@ object PipelineQueries {
         dd.where(col("doc_id") % 3 === 2), 2L, "doc_id", "text",
         s"$base/state")
       s"$base/state"
-    })
+    }
 
   /** One streamed near-dup signature index per (JVM, sf dir) — 3 waves
     * through the maintainer, then a FULL fold (upTo = 2: every batch dir
@@ -1201,14 +1089,11 @@ object PipelineQueries {
     * the full fold makes the gate prove the version axis survives on row
     * stamps alone, with no batch dirs left to fall back on).
     */
-  private val ndmStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ndmStateCache = Fixtures.memo[String, String]("ndmState")
 
   private def ndmStateFor(s: SparkSession, d: String): String =
-    ndmStateCache.computeIfAbsent(d, _ => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_ndm", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+    ndmStateCache(d) {
+      val base = Fixtures.scratch("graft_stream_ndm", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       (0 until 3).foreach { g =>
         graft.streaming.NearDupMaintainer.processBatch(
@@ -1219,7 +1104,7 @@ object PipelineQueries {
       graft.streaming.NearDupMaintainer.compact(s, s"$base/index",
         upToOpt = Some(2L))
       base
-    })
+    }
 
   /** One curate run per (JVM, sf dir): the manifest/shard gates and the
     * curation report all consume the SAME curated frame (the bpeMergesFor
@@ -1232,13 +1117,12 @@ object PipelineQueries {
     * whether releaseOnUnreachable had fired between gates decided whether
     * the curate stages re-ran).
     */
-  private val curatedFullCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val curatedFullCache = Fixtures.memo[String, DataFrame]("curatedFull")
 
   /** The full curated frame: (doc_id, n_tok, avg_nll, cum_tok,
     * clean_text). */
   private def curatedFullFor(s: SparkSession, d: String): DataFrame =
-    curatedFullCache.computeIfAbsent(d, _ =>
+    curatedFullCache(d)(
       graft.Exec.materializeLocal(
         Corpus.curateWithText(docs(s, d), "doc_id", "text",
           width = 30, pplKeepBelow = 3.43, tokenBudget = 6000L)))
@@ -1280,17 +1164,16 @@ object PipelineQueries {
     * splice crossed it). Both localCheckpoint'ed (the cache-poison rule).
     */
   private val driftRunCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+    Fixtures.memo[String, (DataFrame, DataFrame)]("driftRun")
 
   /** The drift-curation state dir of [[driftRunFor]] — deterministic per
     * (sf dir), so the as-of gate can re-open the maintained state the
     * shared run left behind. */
   private def curateDriftBase(d: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_stream_curatedrift", Tables.runKey(d)).toString
+    Fixtures.dir("graft_stream_curatedrift", d)
 
   private def driftRunFor(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    driftRunCache.computeIfAbsent(d, _ => {
+    driftRunCache(d) {
       val base = curateDriftBase(d)
       graft.Exec.deletePath(base)
       val spliced = docs(s, d).select(col("doc_id"),
@@ -1309,7 +1192,7 @@ object PipelineQueries {
       }
       (held, graft.Exec.materializeLocal(
         graft.streaming.CurateMaintainer.currentSelection(s, s"$base/state")))
-    })
+    }
 
   /** One LEARNED-TOWER train per (JVM, sf dir): the ridge head
     * ([[Tower.ridgeHead]], embedding → label) persisted as the (j, k, w)
@@ -1318,51 +1201,48 @@ object PipelineQueries {
     * project through the SAME persisted weights (the centroid contract).
     */
   private val towerWeightsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
+    Fixtures.memo[String, Array[Array[Double]]]("towerWeights")
 
   private def towerWeightsFor(s: SparkSession, d: String): Array[Array[Double]] =
-    towerWeightsCache.computeIfAbsent(d, _ => {
-      Tower.ridgeHead(emb(s, d), "embedding", "label")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/tower_weights")
-      Tower.weightsFromDf(s.read.parquet(annArtifactBase(d) + "/tower_weights"))
-    })
+    towerWeightsCache(d) {
+      persistArtifact(Tower.ridgeHead(emb(s, d), "embedding", "label"), d,
+        "tower_weights")
+      Tower.weightsFromDf(s.read.parquet(annArtifact(d, "tower_weights")))
+    }
 
   /** One hyperplane-set persist per (JVM, sf dir): p_lsh_multiprobe and
     * p_lsh_recall share the planes artifact, and a concurrent gate run
     * must never race a reader against a same-content overwrite.
     */
   private val lshPlanesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
+    Fixtures.memo[String, Seq[Seq[Seq[Double]]]]("lshPlanes")
 
   private def lshPlanesFor(s: SparkSession, d: String): Seq[Seq[Seq[Double]]] =
-    lshPlanesCache.computeIfAbsent(d, _ => {
+    lshPlanesCache(d) {
       // 8 tables × 6 bits: at this corpus's weak-pair regime (cos ≈ 0.45,
       // p ≈ 0.65/bit) the hamming ≤ 1 probe gives ≈ 0.32 per-table hit
       // probability → ≈ 0.95 recall; bits trade bucket occupancy for
       // recall and are sized to the corpus at deploy time
-      Ann.lshPlanesDf(s, nTables = 8, bitsPerTable = 6, dim = 64)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/lsh_planes")
-      Ann.lshPlanesFromDf(s.read.parquet(annArtifactBase(d) + "/lsh_planes"))
-    })
+      persistArtifact(Ann.lshPlanesDf(s, nTables = 8, bitsPerTable = 6,
+        dim = 64), d, "lsh_planes")
+      Ann.lshPlanesFromDf(s.read.parquet(annArtifact(d, "lsh_planes")))
+    }
 
   /** [[semDedupCentsFor]]'s twin for the raw-media path: the coarse
     * quantizer trained on the featurizer's embeddings of the synthetic
     * media corpus, persisted for the end-to-end oracle.
     */
   private val mediaSemCentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
+    Fixtures.memo[String, Array[Array[Double]]]("mediaSemCents")
 
   private def mediaSemCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
-    mediaSemCentsCache.computeIfAbsent(d, _ => {
+    mediaSemCentsCache(d) {
       val media = graft.ops.Multimodal.syntheticMedia(s, 200)
       val e = graft.ops.Multimodal.imageEmbedding(media, dim = 8)
       val (cdf, _) = Ann.ivfTrainBalanced(e, "embedding", cellsPerSqrtN = 4)
-      cdf.coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/media_semdedup_centroids")
+      persistArtifact(cdf, d, "media_semdedup_centroids")
       Ann.ivfCentroidsFromDf(cdf)
-    })
+    }
 
   /** Mixed-script corpus for the byte-level BPE gates: deterministic
     * non-ASCII phrases (Latin diacritics, Cyrillic, CJK — 1-, 2- and 3-byte
@@ -1386,16 +1266,16 @@ object PipelineQueries {
     MixedPhrases.map(p => s"'$p'").mkString("[", ", ", "]")
 
   private val bpeByteMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+    Fixtures.memo[String, Seq[(String, String)]]("bpeByteMerges")
 
   private def bpeByteMergesFor(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeByteMergesCache.computeIfAbsent(d, _ => {
+    bpeByteMergesCache(d) {
       val m = graft.ops.Bpe.learnMerges(mixedDocs(s, d), "doc_id", "text",
         numMerges = 40, byteLevel = true)
       graft.ops.Bpe.mergesDf(s, m).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_bytes")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_bytes")
       m
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_dedup_exact" -> ((s, d) =>
@@ -1693,7 +1573,7 @@ object PipelineQueries {
     // to delta-touching pairs (same recall argument as p_minhash_lsh).
     "p_incr_neardup" -> ((s, d) => {
       val dd = docs(s, d)
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       val corpus = dd.where(col("doc_id") % 3 =!= 0)
       Dedup.minhashSignatures(
         corpus.select(col("doc_id").as("id"),
@@ -1744,9 +1624,7 @@ object PipelineQueries {
     "s_knn_ivf" -> ((s, d) => {
       val e = emb(s, d)
       val cents = sizedCentsCopy(s, d, "ivf_centroids_s")
-      val idxBase = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_ann", Tables.runKey(d)).toString
-      graft.Exec.deletePath(idxBase)
+      val idxBase = Fixtures.scratch("graft_stream_ann", d)
       // 2 ingest waves (r14): the gate pins multi-batch LSM accumulate +
       // whole fold + search; the oracle covers the FULL corpus, so the
       // wave partition is unobservable — 2 batches pin it at 2/3 the
@@ -1757,9 +1635,7 @@ object PipelineQueries {
           cents, idxBase)
       }: _*)
       graft.streaming.AnnIndexMaintainer.compact(s, idxBase)
-      val queries = e.where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       graft.streaming.AnnIndexMaintainer.search(s, idxBase, cents, queries,
         k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1774,9 +1650,7 @@ object PipelineQueries {
       val e = emb(s, d)
       val cents = sizedCentsCopy(s, d, "ivfpq_centroids_s")
       val cb = pqCodebookCopy(s, d, "ivfpq_codebook_s")
-      val idxBase = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_ivfpq", Tables.runKey(d)).toString
-      graft.Exec.deletePath(idxBase)
+      val idxBase = Fixtures.scratch("graft_stream_ivfpq", d)
       // 2 ingest waves — the s_knn_ivf rule (full-corpus oracle)
       graft.Exec.inParallel((0 until 2).map { g =>
         () => graft.streaming.AnnIndexMaintainer.processBatchPq(
@@ -1784,9 +1658,7 @@ object PipelineQueries {
           cents, cb, idxBase, roundScale = 6)
       }: _*)
       graft.streaming.AnnIndexMaintainer.compactPq(s, idxBase)
-      val queries = e.where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       graft.streaming.AnnIndexMaintainer.searchPq(s, idxBase, cents, cb,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1800,12 +1672,9 @@ object PipelineQueries {
     // historical index). The s_shard_asof versioning discipline applied
     // to the retrieval artifact.
     "s_knn_asof" -> ((s, d) => {
-      val e = emb(s, d)
       val idxBase = annAsofStateFor(s, d)
       val cents = sizedCentsFor(s, d)
-      val queries = e.where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       graft.streaming.AnnIndexMaintainer.searchAsOf(s, idxBase, cents,
         queries, k = 10, asOf = 1L, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1821,9 +1690,7 @@ object PipelineQueries {
       val idx = pqAsofStateFor(s, d)
       val cents = sizedCentsFor(s, d)
       val cb = pqCodebookFor(s, d)
-      val queries = emb(s, d).where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       graft.streaming.AnnIndexMaintainer.searchPqAsOf(s, idx, cents, cb,
         queries, k = 10, asOf = 1L, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1838,18 +1705,14 @@ object PipelineQueries {
     // layout. Read-your-writes holds independently of the storage
     // representation — the code compression never buys staleness.
     "s_knn_pq_fresh" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_pqfresh", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_pqfresh", d)
       // static corpus cap, the s_hybrid_fresh rule: the wave protocol is
       // what this gate pins; its per-call construction cost stays flat
       // as sf grows (sf ≤ 0.01 unchanged; sf0.1 halves 2000 → 1000)
       val e = emb(s, d).where(col("vec_id") < 1000)
       val cents = sizedCentsCopy(s, d, "pqfresh_cents")
       val cb = pqCodebookCopy(s, d, "pqfresh_codebook")
-      val queries = e.where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       // 2-wave protocol, the s_knn_fresh rule: delta serve → fold →
       // folded+delta serve pins the same read states as 3 waves did
       (0 until 2).map { g =>
@@ -1894,8 +1757,7 @@ object PipelineQueries {
       val (w, cents, idxBase) = learnedStateFor(s, d)
       val proj = emb(s, d).select(col("vec_id"),
         Tower.project(col("embedding"), w).as("pv"))
-      val queries = proj.where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = probes(proj)
       graft.streaming.AnnIndexMaintainer.search(s, idxBase, cents, queries,
         k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1917,20 +1779,10 @@ object PipelineQueries {
         s, idxDir, RetrainRatio),
         s"distribution shift undetected (ratio ${graft.streaming
           .AnnIndexMaintainer.driftRatio(s, idxDir)})")
-      val gen2 = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_annretrain", Tables.runKey(d), "idx2").toString
-      graft.streaming.AnnIndexMaintainer.retrain(s, idxDir, gen2)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/retrain_cents")
-      val cents1 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/retrain_cents"))
-      val queries = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val gen2 = Fixtures.dir("graft_stream_annretrain", d) + "/idx2"
+      val cents1 = persistCents(s, d, "retrain_cents",
+        graft.streaming.AnnIndexMaintainer.retrain(s, idxDir, gen2))
+      val queries = embProbes(s, d, spliced = true)
       graft.streaming.AnnIndexMaintainer.search(s, gen2, cents1,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1950,25 +1802,15 @@ object PipelineQueries {
     // the shared monitored state (growth mutates its dir).
     "s_knn_grow" -> ((s, d) => {
       val src = annDriftStateFor(s, d, spliced = true)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_anngrow", Tables.runKey(d)).toString
+      val base = Fixtures.dir("graft_stream_anngrow", d)
       graft.Exec.copyPath(src, s"$base/idx")
       val cents0 = annDriftCents(s, d, spliced = true)
       require(graft.streaming.AnnIndexMaintainer.shouldRetrain(
         s, s"$base/idx", RetrainRatio), "distribution shift undetected")
-      graft.streaming.AnnIndexMaintainer.grow(s, s"$base/idx", cents0,
-          kNew = 8, roundScale = 6)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(annArtifactBase(d) + "/grow_cents")
-      val cents1 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/grow_cents"))
-      val queries = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val cents1 = persistCents(s, d, "grow_cents",
+        graft.streaming.AnnIndexMaintainer.grow(s, s"$base/idx", cents0,
+          kNew = 8, roundScale = 6))
+      val queries = embProbes(s, d, spliced = true)
       graft.streaming.AnnIndexMaintainer.search(s, s"$base/idx", cents1,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -1994,20 +1836,9 @@ object PipelineQueries {
       // horizon-resolved SERVES over the two generations
       val (idxDir, gen2Dir) = growRetrainStateFor(s, d)
       val cents0 = annDriftCents(s, d, spliced = true)
-      val cents2 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/growret_re_cents"))
-      val sq = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      val pq = emb(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val cents2 = artifactCents(s, d, "growret_re_cents")
+      val sq = embProbes(s, d, spliced = true)
+      val pq = embProbes(s, d)
       def leg(h: Long, df: DataFrame): DataFrame =
         graft.Exec.materializeLocal(df.select(lit(h).as("horizon"),
           col("query_id"), col("neighbor_id"),
@@ -2034,18 +1865,8 @@ object PipelineQueries {
     // IVF scan of that slice under that quantizer.
     "s_knn_quantizer_asof" -> ((s, d) => {
       val idx = qgAutoStateFor(s, d)
-      val sq = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      val pq = emb(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val sq = embProbes(s, d, spliced = true)
+      val pq = embProbes(s, d)
       def leg(h: Long, qs: Seq[(Long, Array[Double])]): DataFrame =
         graft.Exec.materializeLocal(
           graft.streaming.AnnIndexMaintainer.searchAsOfAuto(s, idx,
@@ -2071,15 +1892,8 @@ object PipelineQueries {
       // under the persisted union quantizer + frozen codebooks
       val idxBase = growPqStateFor(s, d)
       val cb = pqCodebookFor(s, d)
-      val cents1 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/growpq_union_cents"))
-      val queries = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val cents1 = artifactCents(s, d, "growpq_union_cents")
+      val queries = embProbes(s, d, spliced = true)
       graft.streaming.AnnIndexMaintainer.searchPq(s, idxBase, cents1, cb,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -2100,12 +1914,11 @@ object PipelineQueries {
       // gate measures the ADC + exact-rerank SERVE from the rebuilt
       // generation under its persisted artifacts (VERDICT r13 #2)
       val gen2 = pqRetrainStateFor(s, d)
-      val cents1 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/retrainpq_cents"))
+      val cents1 = artifactCents(s, d, "retrainpq_cents")
       val cb1 = Ann.pqCodebookFromDf(
-        s.read.parquet(annArtifactBase(d) + "/retrainpq_codebook"))
+        s.read.parquet(annArtifact(d, "retrainpq_codebook")))
       graft.streaming.AnnIndexMaintainer.searchPq(s, gen2,
-          cents1, cb1, qgProbes(s, d, spliced = true), k = 10,
+          cents1, cb1, embProbes(s, d, spliced = true), k = 10,
           rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
           col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos"))
@@ -2122,11 +1935,7 @@ object PipelineQueries {
         s"spurious retrain trigger (ratio ${graft.streaming
           .AnnIndexMaintainer.driftRatio(s, idxDir)})")
       val cents0 = annDriftCents(s, d, spliced = false)
-      val queries = emb(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       graft.streaming.AnnIndexMaintainer.search(s, idxDir, cents0,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -2149,9 +1958,7 @@ object PipelineQueries {
     // bootstrap quantizers and applies the same thresholds — a planner
     // that mis-measures any signal or mis-applies any threshold hash-fails.
     "p_maint_plan" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_plan", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_plan", d)
       val spliced = docs(s, d).select(col("doc_id"),
         when(col("doc_id") % 3 === 2, concat(col("text"), lit(DriftPhrase)))
           .otherwise(col("text")).as("text"))
@@ -2255,15 +2062,8 @@ object PipelineQueries {
     // exactly like the rebuild it avoided.
     "s_knn_grow_exec" -> ((s, d) => {
       val tailDir = remedyExecFor(s, d)._2
-      val cents1 = Ann.ivfCentroidsFromDf(
-        s.read.parquet(annArtifactBase(d) + "/tailexec_grow_cents"))
-      val queries = emb(s, d).select(col("vec_id"),
-          when(col("vec_id") % 3 === 2,
-            transform(col("embedding").cast("array<double>"),
-              x => x + lit(EmbShift)))
-          .otherwise(col("embedding").cast("array<double>")).as("embedding"))
-        .where(col("vec_id") < 5)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val cents1 = artifactCents(s, d, "tailexec_grow_cents")
+      val queries = embProbes(s, d, spliced = true)
       graft.streaming.AnnIndexMaintainer.search(s, tailDir, cents1,
         queries, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id"), col("neighbor_id"),
@@ -2282,8 +2082,7 @@ object PipelineQueries {
       import graft.streaming.SnapshotManifest
       import graft.streaming.SnapshotManifest.Pin
       driftRunFor(s, d) // ensure the versioned selection generations exist
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_snapshot", Tables.runKey(d), "m").toString
+      val mdir = Fixtures.dir("graft_snapshot", d) + "/m"
       SnapshotManifest.pin(s, Seq(
         Pin("ann_vectors", "ann", annAsofStateFor(s, d), 1L),
         Pin("postings", "postings", bm25AsofStateFor(s, d), 1L, "doc_id"),
@@ -2311,9 +2110,7 @@ object PipelineQueries {
     // all shifting retroactively per wave. Each serve is materialized
     // eagerly (the fold deletes batch dirs a lazy plan would chase).
     "s_bm25_fresh" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_bm25fresh", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_bm25fresh", d)
       val dd = docs(s, d)
       (0 until 3).map { g =>
         graft.streaming.SearchIndexMaintainer.processBatch(
@@ -2334,14 +2131,10 @@ object PipelineQueries {
     // the committed prefix under the frozen persisted quantizer, across
     // the wave-1 fold.
     "s_knn_fresh" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_annfresh", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_annfresh", d)
       val e = emb(s, d)
       val cents = sizedCentsCopy(s, d, "fresh_centroids_s")
-      val queries = e.where(col("vec_id") < 5)
-        .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val queries = embProbes(s, d)
       // TWO waves pin the full contract (r14, VERDICT r13 #2): wave 0
       // serves the pure un-folded delta, the post-serve fold rewrites
       // the layout mid-stream, wave 1 serves folded-base + fresh delta —
@@ -2375,8 +2168,7 @@ object PipelineQueries {
       import graft.streaming.SnapshotManifest
       import graft.streaming.SnapshotManifest.Pin
       val tailDir = remedyExecFor(s, d)._2
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_snapshot", Tables.runKey(d), "mg").toString
+      val mdir = Fixtures.dir("graft_snapshot", d) + "/mg"
       SnapshotManifest.pin(s, Seq(
         Pin("ann_at_growth", "ann", tailDir, 3L),
         Pin("ann_below_growth", "ann", tailDir, 1L)), mdir)
@@ -2401,8 +2193,7 @@ object PipelineQueries {
       import graft.streaming.SnapshotManifest
       import graft.streaming.SnapshotManifest.Pin
       val idx = pqAutoStateFor(s, d)
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_snapshot", Tables.runKey(d), "mpq").toString
+      val mdir = Fixtures.dir("graft_snapshot", d) + "/mpq"
       SnapshotManifest.pin(s, Seq(
         Pin("pq_at_growth", "annpq", idx, 3L),
         Pin("pq_below_growth", "annpq", idx, 1L),
@@ -2435,11 +2226,9 @@ object PipelineQueries {
     // layout.
     "s_hybrid_fresh" -> ((s, d) => {
       val (_, cents) = hybridStateFor(s, d) // trains + persists the quantizer
-      graft.Exec.copyPath(annArtifactBase(d) + "/hybrid_centroids_s",
-        annArtifactBase(d) + "/hybridfresh_cents")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_hybridfresh", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      graft.Exec.copyPath(annArtifact(d, "hybrid_centroids_s"),
+        annArtifact(d, "hybridfresh_cents"))
+      val base = Fixtures.scratch("graft_stream_hybridfresh", d)
       // corpus capped at a STATIC horizon: the gate pins the wave
       // protocol (ingest → serve, mid-stream fold, retroactive stats),
       // not index scale — the 10× probes cover scale — so its three
@@ -2452,9 +2241,8 @@ object PipelineQueries {
       val evalQ = docs(s, d).where(col("doc_id") < 5)
       val qterms = evalQ.select(col("doc_id").as("qid"),
         explode(TextOps.tokens(col("text"))).as("term")).distinct()
-      val qvecs = evalQ
-        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val qvecs = collectVecs(evalQ
+        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v")))
       // 2-wave protocol (r14, VERDICT r13 #2): wave 0 serves both legs'
       // pure un-folded delta, the post-serve fold rewrites BOTH legs'
       // layouts mid-stream, wave 1 serves folded base + fresh delta with
@@ -2503,8 +2291,7 @@ object PipelineQueries {
       import graft.streaming.SnapshotManifest
       import graft.streaming.SnapshotManifest.Pin
       driftRunFor(s, d)
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_snapshot", Tables.runKey(d), "msql").toString
+      val mdir = Fixtures.dir("graft_snapshot", d) + "/msql"
       SnapshotManifest.pin(s, Seq(
         Pin("ann_vectors", "ann", annAsofStateFor(s, d), 1L),
         Pin("postings", "postings", bm25AsofStateFor(s, d), 1L, "doc_id"),
@@ -2597,9 +2384,7 @@ object PipelineQueries {
     // in one batch pass. Decontamination stays continuous as the corpus
     // grows; must equal the one-shot p_bm25_decontam derivation.
     "s_bm25_decontam" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_bm25dc", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_bm25dc", d)
       val all = docs(s, d)
       val train = all.where(col("doc_id") >= 25)
       def passagesOf(g: Int) = train.where(col("doc_id") % 3 === g)
@@ -2753,9 +2538,8 @@ object PipelineQueries {
           explode(TextOps.tokens(col("text"))).as("term")).distinct(),
         "qid", "term", k = 10)
         .select(col("qid"), col("doc_id"), col("rank"))
-      val qvecs = evalQ
-        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val qvecs = collectVecs(evalQ
+        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v")))
       val dense = graft.streaming.AnnIndexMaintainer.search(s, s"$base/index",
         cents, qvecs, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id").as("qid"), col("neighbor_id").as("doc_id"),
@@ -2780,9 +2564,8 @@ object PipelineQueries {
           explode(TextOps.tokens(col("text"))).as("term")).distinct(),
         "qid", "term", k = 10)
         .select(col("qid"), col("doc_id"), col("rank"))
-      val qvecs = evalQ
-        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      val qvecs = collectVecs(evalQ
+        .select(col("doc_id"), TextOps.textEmbedding(col("text"), 8).as("v")))
       val dense = graft.streaming.AnnIndexMaintainer.searchPq(s, pqIdx,
         cents, cb, qvecs, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id").as("qid"), col("neighbor_id").as("doc_id"),
@@ -2812,10 +2595,9 @@ object PipelineQueries {
           explode(TextOps.tokens(col("text"))).as("term")).distinct(),
         "qid", "term", k = 10)
         .select(col("qid"), col("doc_id"), col("rank"))
-      val qvecs = evalQ
+      val qvecs = collectVecs(evalQ
         .select(col("doc_id"), Tower.project(
-          TextOps.textEmbedding(col("text"), 8), w).as("v"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+          TextOps.textEmbedding(col("text"), 8), w).as("v")))
       val dense = graft.streaming.AnnIndexMaintainer.search(s, lIdx,
         lcents, qvecs, k = 10, rankOnRoundedTo = Some(6))
         .select(col("query_id").as("qid"), col("neighbor_id").as("doc_id"),
@@ -2850,7 +2632,7 @@ object PipelineQueries {
       val imgs = graft.ops.Multimodal.imageEmbedding(media, dim = 8,
           seed = 42L)
         .select(col("media_id").as("vec_id"), col("embedding"))
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.ivfTrain(imgs, "embedding", nlist = 4)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$base/xmodal_centroids")
@@ -2876,7 +2658,7 @@ object PipelineQueries {
       val imgs = graft.ops.Multimodal.imageEmbedding(media, dim = 8,
           seed = 42L)
         .select(col("media_id").as("vec_id"), col("embedding"))
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.ivfTrain(imgs, "embedding", nlist = 4)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$base/xmodal_centroids")
@@ -2904,7 +2686,7 @@ object PipelineQueries {
       val imgs = graft.ops.Multimodal.imageEmbedding(media, dim = 8,
           seed = 42L)
         .select(col("media_id").as("vec_id"), col("embedding"))
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.ivfTrain(imgs, "embedding", nlist = 4)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$base/xmodal_centroids")
@@ -2931,7 +2713,7 @@ object PipelineQueries {
       val imgs = graft.ops.Multimodal.imageEmbedding(media, dim = 8,
           seed = 42L)
         .select(col("media_id").as("vec_id"), col("embedding"))
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.ivfTrain(imgs, "embedding", nlist = 4)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$base/xmodal_centroids")
@@ -2959,9 +2741,7 @@ object PipelineQueries {
     // over the grown kept set) comes free. Same oracle as p_clip_pairs:
     // the streamed derivation must equal the one-shot table.
     "s_clip_pairs" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_clip", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_clip", d)
       val dd = docs(s, d)
       // waves 0-1 are disjoint writes — overlap (guide §2.6); fold
       // placement unchanged (sees {b0, b1}), wave 2 after
@@ -3391,7 +3171,7 @@ object PipelineQueries {
       val m1 = graft.streaming.BpeMaintainer.mergesAsOf(s,
         bpe4ModelFor(s, d), 1L)
       graft.ops.Bpe.mergesDf(s, m1).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_v1")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_v1")
       Corpus.trainManifestFrom(curatedSelFor(s, d), "doc_id", "text",
         m1, seqLen = 128, epochs = 2)
     }),
@@ -3414,7 +3194,7 @@ object PipelineQueries {
     "p_mm_manifest" -> ((s, d) => {
       val media = graft.ops.Multimodal.syntheticMedia(s, 200)
       val e = graft.ops.Multimodal.imageEmbedding(media, dim = 8, seed = 42L)
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.pqCodebookDf(s, Ann.pqTrain(e, "embedding", m = 4, k = 8))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/mm_codebook")
       val cb = Ann.pqCodebookFromDf(s.read.parquet(s"$base/mm_codebook"))
@@ -3428,12 +3208,11 @@ object PipelineQueries {
     "p_shard_files_mm" -> ((s, d) => {
       val media = graft.ops.Multimodal.syntheticMedia(s, 200)
       val e = graft.ops.Multimodal.imageEmbedding(media, dim = 8, seed = 42L)
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.pqCodebookDf(s, Ann.pqTrain(e, "embedding", m = 4, k = 8))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/mm_codebook")
       val cb = Ann.pqCodebookFromDf(s.read.parquet(s"$base/mm_codebook"))
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards_mm", Tables.runKey(d)).toString
+      val dir = Fixtures.dir("graft_shards_mm", d)
       Corpus.trainShardsMultimodalFrom(curatedSelFor(s, d), media,
           "doc_id", "text", bpeMergesFor(s, d), cb, dir, seqLen = 128,
           epochs = 2, shardSize = 2)
@@ -3450,7 +3229,7 @@ object PipelineQueries {
     "p_mm_curriculum" -> ((s, d) => {
       val media = graft.ops.Multimodal.syntheticMedia(s, 200)
       val e = graft.ops.Multimodal.imageEmbedding(media, dim = 8, seed = 42L)
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.pqCodebookDf(s, Ann.pqTrain(e, "embedding", m = 4, k = 8))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/mm_codebook")
       val cb = Ann.pqCodebookFromDf(s.read.parquet(s"$base/mm_codebook"))
@@ -3463,7 +3242,7 @@ object PipelineQueries {
     "p_mm_boundaries" -> ((s, d) => {
       val media = graft.ops.Multimodal.syntheticMedia(s, 200)
       val e = graft.ops.Multimodal.imageEmbedding(media, dim = 8, seed = 42L)
-      val base = annArtifactBase(d)
+      val base = Fixtures.dir(AnnArtifacts, d)
       Ann.pqCodebookDf(s, Ann.pqTrain(e, "embedding", m = 4, k = 8))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/mm_codebook")
       val cb = Ann.pqCodebookFromDf(s.read.parquet(s"$base/mm_codebook"))
@@ -3488,8 +3267,7 @@ object PipelineQueries {
     // oracle re-derives the same numbers from the raw corpus, so a writer
     // that loses or reorders a single token cannot hash-match.
     "p_shard_files" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards", Tables.runKey(d)).toString
+      val dir = Fixtures.dir("graft_shards", d)
       Corpus.trainShardsFrom(curatedSelFor(s, d), "doc_id", "text",
           bpeMergesFor(s, d), dir, seqLen = 128, epochs = 2, shardSize = 2)
         .groupBy(col("epoch"), col("shard_id"))
@@ -3508,9 +3286,7 @@ object PipelineQueries {
     // persisted payload; the oracle re-derives the batch-major rank law
     // in SQL over the same manifest chain.
     "s_shard_files" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_shards", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_shards", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         graft.streaming.ShardMaintainer.processBatch(
@@ -3531,8 +3307,7 @@ object PipelineQueries {
     // makes the slice exact; hive partitioning on (epoch, shard_id)
     // makes it a tail scan, not a full-layout read.
     "p_shard_resume" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards_resume", Tables.runKey(d)).toString
+      val dir = Fixtures.dir("graft_shards_resume", d)
       Corpus.trainShardsFrom(curatedSelFor(s, d), "doc_id", "text",
           bpeMergesFor(s, d), dir, seqLen = 128, epochs = 2, shardSize = 2)
         .where(col("epoch") > 1 || col("ord") >= 50)
@@ -3544,8 +3319,7 @@ object PipelineQueries {
     // engine-portable, so the oracle recomputes every checksum from
     // scratch.
     "p_shard_checksums" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards_cksum", Tables.runKey(d)).toString
+      val dir = Fixtures.dir("graft_shards_cksum", d)
       Corpus.trainShardsFrom(curatedSelFor(s, d), "doc_id", "text",
           bpeMergesFor(s, d), dir, seqLen = 128, epochs = 2, shardSize = 2)
         .groupBy(col("epoch"), col("shard_id"))
@@ -3562,8 +3336,7 @@ object PipelineQueries {
     // token inversion, gpos order) and compares it against the curated
     // text itself.
     "p_detok_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards_detok", Tables.runKey(d)).toString
+      val dir = Fixtures.dir("graft_shards_detok", d)
       val sel = curatedSelFor(s, d)
       val merges = bpeMergesFor(s, d)
       Corpus.trainShardsFrom(sel, "doc_id", "text", merges, dir,
@@ -3598,9 +3371,7 @@ object PipelineQueries {
     // the LSM rewrite preserves every surviving (epoch, ord, payload)
     // verbatim while shrinking the scan.
     "s_shard_compact" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_shardcmp", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_shardcmp", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         val sel =
@@ -3645,9 +3416,7 @@ object PipelineQueries {
     // is 3. (Under seq-id-only tombstoning this silently diverges — the
     // re-selected seq is neither re-appended nor served.)
     "s_shard_resurrect" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_shardres", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_shardres", d)
       val payload = packedPayloadFor(s, d)
       (0 until 4).foreach { g =>
         val sel =
@@ -3674,9 +3443,7 @@ object PipelineQueries {
     // at-floor row count in one hash-compared row.
     "s_shard_seal" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_shardseal", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_shardseal", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         val sel =
@@ -3758,9 +3525,7 @@ object PipelineQueries {
     // already-indexed vector) come free from derivation-over-state.
     "s_semdedup" -> ((s, d) => {
       val cents = semDedupCentsFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_semdedup", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_semdedup", d)
       val e = emb(s, d)
       // 2 ingest waves — the s_knn_ivf rule (full-corpus oracle). No
       // serve interleaves them and the b0/b1 dirs are disjoint, so the
@@ -3843,9 +3608,7 @@ object PipelineQueries {
         seqLen = 128, epochs = 2)
     }),
     "s_dedup_exact" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_exact", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_exact", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       // disjoint per-batch partial-aggregate dirs, no interleaved reads —
       // overlap the three writes (guide §2.6); bytes order-independent
@@ -3863,9 +3626,7 @@ object PipelineQueries {
     // duplicateSpans over the full corpus (the p_substr_dedup oracle) —
     // including the RETROACTIVE spans wave 3 induces in wave-1 docs.
     "s_substr_spans" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_substr", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_substr", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       // disjoint per-batch window-digest dirs, no interleaved reads —
       // overlap the three writes (guide §2.6); bytes order-independent
@@ -3991,7 +3752,7 @@ object PipelineQueries {
       val idx = qgAutoStateFor(s, d)
       val ext = RecQueries.extensionSession(s)
       def inlineOf(spliced: Boolean): String =
-        qgProbes(s, d, spliced)
+        embProbes(s, d, spliced)
           .map { case (id, v) => s"$id:${v.mkString(" ")}" }
           .mkString("; ")
       ext.sql(
@@ -4022,7 +3783,7 @@ object PipelineQueries {
         s"""SELECT query_id, neighbor_id, cast(rank AS bigint) AS rank,
            |  round(cos, 6) AS cos
            |FROM GRAFT_KNN('$idxBase',
-           |  '${annArtifactBase(d)}/asof_centroids_s', '$inline', 10)"""
+           |  '${annArtifact(d, "asof_centroids_s")}', '$inline', 10)"""
           .stripMargin)
     }),
     // GRAFT_KNN with the query vectors from a SUBQUERY — the paren-balanced
@@ -4039,7 +3800,7 @@ object PipelineQueries {
         s"""SELECT query_id, neighbor_id, cast(rank AS bigint) AS rank,
            |  round(cos, 6) AS cos
            |FROM GRAFT_KNN('$idxBase',
-           |  '${annArtifactBase(d)}/asof_centroids_s',
+           |  '${annArtifact(d, "asof_centroids_s")}',
            |  (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
            |   FROM knn_probe_src WHERE vec_id < 5), 10)""".stripMargin)
     }),
@@ -4075,9 +3836,7 @@ object PipelineQueries {
     // generation breaks one leg's hash.
     "p_retention" -> ((s, d) => {
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_retention_cur", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_retention_cur", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/pinned")
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/tail")
       graft.streaming.SnapshotManifest.pin(s, Seq(
@@ -4100,9 +3859,7 @@ object PipelineQueries {
     // union generation — both hash-equal to the from-scratch IVF scans.
     "p_retention_knn" -> ((s, d) => {
       val src = qgAutoStateFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_retention_knn", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_retention_knn", d)
       graft.Exec.copyPath(src, s"$base/pinned")
       graft.Exec.copyPath(src, s"$base/tail")
       graft.streaming.SnapshotManifest.pin(s, Seq(
@@ -4113,11 +3870,11 @@ object PipelineQueries {
       graft.streaming.Retention.vacuumQuantizers(s, s"$base/tail",
         keepFrom = Long.MaxValue)
       val m = graft.streaming.AnnIndexMaintainer
-      m.searchAsOfAuto(s, s"$base/pinned", qgProbes(s, d, spliced = false),
+      m.searchAsOfAuto(s, s"$base/pinned", embProbes(s, d, spliced = false),
           10, asOf = 1L, rankOnRoundedTo = Some(6))
         .withColumn("horizon", lit(1L))
         .unionByName(
-          m.searchAsOfAuto(s, s"$base/tail", qgProbes(s, d, spliced = true),
+          m.searchAsOfAuto(s, s"$base/tail", embProbes(s, d, spliced = true),
               10, asOf = 3L, rankOnRoundedTo = Some(6))
             .withColumn("horizon", lit(3L)))
         .select(col("horizon"), col("query_id"), col("neighbor_id"),
@@ -4138,9 +3895,7 @@ object PipelineQueries {
       import graft.streaming.MaintenancePlanner
       import graft.streaming.MaintenancePlanner.RetentionSpec
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_vac", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_vac", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/pinned")
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/tail")
       graft.streaming.SnapshotManifest.pin(s, Seq(
@@ -4166,9 +3921,7 @@ object PipelineQueries {
     // fixtures' version boards), and the post sweep must be empty.
     "p_retention_sweep" -> ((s, d) => {
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_retention_sweep", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_retention_sweep", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/cur")
       graft.Exec.copyPath(qgAutoStateFor(s, d), s"$base/knn")
       graft.Exec.copyPath(bpe4ModelFor(s, d), s"$base/tok")
@@ -4199,9 +3952,7 @@ object PipelineQueries {
     // a horizon below the committed floor must fail with the explicit
     // retention error, never "never learned".
     "p_retention_bpe" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_retention_bpe", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_retention_bpe", d)
       graft.Exec.copyPath(bpe4ModelFor(s, d), s"$base/model")
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       graft.streaming.SnapshotManifest.pin(s, Seq(
@@ -4241,9 +3992,7 @@ object PipelineQueries {
     "s_maint_seal_pin" -> ((s, d) => {
       import graft.streaming.MaintenancePlanner
       import graft.streaming.MaintenancePlanner.ShardSpec
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_sealpin", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_sealpin", d)
       // both legs are copies of the shared memoized layout
       // ([[shardLayoutFor]]) — the executor mutates them
       graft.Exec.copyPath(shardLayoutFor(s, d), s"$base/pinned")
@@ -4279,9 +4028,7 @@ object PipelineQueries {
     "s_maint_sweep" -> ((s, d) => {
       import graft.streaming.MaintenancePlanner
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_sweep", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_maint_sweep", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/cur")
       graft.Exec.copyPath(qgAutoStateFor(s, d), s"$base/knn")
       graft.Exec.copyPath(bpe4ModelFor(s, d), s"$base/tok")
@@ -4311,8 +4058,8 @@ object PipelineQueries {
       ext.sql(
         s"""SELECT query_id, neighbor_id, cast(rank AS bigint) AS rank,
            |  round(cos, 6) AS cos
-           |FROM GRAFT_KNNPQ('$idx', '${annArtifactBase(d)}/pqasof_cents',
-           |  '${annArtifactBase(d)}/pqasof_codebook', '$inline', 10)
+           |FROM GRAFT_KNNPQ('$idx', '${annArtifact(d, "pqasof_cents")}',
+           |  '${annArtifact(d, "pqasof_codebook")}', '$inline', 10)
            |  VERSION AS OF 1""".stripMargin)
     }),
     // the FULLY self-resolving PQ probe: GRAFT_KNNPQ('dir','auto','auto',
@@ -4324,7 +4071,7 @@ object PipelineQueries {
       val idx = pqAutoStateFor(s, d)
       val ext = RecQueries.extensionSession(s)
       def inlineOf(spliced: Boolean): String =
-        qgProbes(s, d, spliced)
+        embProbes(s, d, spliced)
           .map { case (id, v) => s"$id:${v.mkString(" ")}" }
           .mkString("; ")
       ext.sql(
@@ -4420,15 +4167,12 @@ object PipelineQueries {
     // views stay bit-identical (the compaction contract) — the corpus
     // itself, the heaviest state by mass, joins the zero-config GC.
     "s_maint_sweep_shards" -> ((s, d) => {
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sweep_shards", Tables.runKey(d)).toString
-      graft.Exec.deletePath(root)
+      val root = Fixtures.scratch("graft_sweep_shards", d)
       // both legs are copies of the shared memoized layout
       // ([[shardLayoutFor]]) — the sweep's folds mutate them
       graft.Exec.copyPath(shardLayoutFor(s, d), s"$root/pinned")
       graft.Exec.copyPath(shardLayoutFor(s, d), s"$root/plain")
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sweep_shards_m", Tables.runKey(d), "manifest").toString
+      val mdir = Fixtures.dir("graft_sweep_shards_m", d) + "/manifest"
       graft.Exec.deletePath(mdir)
       graft.streaming.SnapshotManifest.pin(s, Seq(
         graft.streaming.SnapshotManifest.Pin("sh", "shards",
@@ -4468,12 +4212,9 @@ object PipelineQueries {
     // naming the holder — while the pinned twin's deep horizon keeps
     // serving from the old files.
     "s_maint_retire" -> ((s, d) => {
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_retire", Tables.runKey(d)).toString
-      graft.Exec.deletePath(root)
+      val root = Fixtures.scratch("graft_maint_retire", d)
       graft.Exec.copyPath(retireFleetFor(s, d), root)
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_maint_retire_m", Tables.runKey(d), "manifest").toString
+      val mdir = Fixtures.dir("graft_maint_retire_m", d) + "/manifest"
       graft.Exec.deletePath(mdir)
       graft.streaming.SnapshotManifest.pin(s, Seq(
         graft.streaming.SnapshotManifest.Pin("b0", "ann",
@@ -4529,12 +4270,9 @@ object PipelineQueries {
     // holder (caught here and emitted as a flag row). The manifest
     // argument is mandatory (an unauditable delete is the disaster case).
     "q_sql_retire" -> ((s, d) => {
-      val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_retire", Tables.runKey(d)).toString
-      graft.Exec.deletePath(root)
+      val root = Fixtures.scratch("graft_sql_retire", d)
       graft.Exec.copyPath(retireFleetFor(s, d), root)
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_retire_m", Tables.runKey(d), "manifest").toString
+      val mdir = Fixtures.dir("graft_sql_retire_m", d) + "/manifest"
       graft.Exec.deletePath(mdir)
       graft.streaming.SnapshotManifest.pin(s, Seq(
         graft.streaming.SnapshotManifest.Pin("b0", "ann",
@@ -4569,9 +4307,7 @@ object PipelineQueries {
     // the sealed floor, after a direct compactTombstones that bypassed
     // the pins. One gate pins the whole audit lifecycle.
     "p_snapshot_audit" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_snapshot_audit", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_snapshot_audit", d)
       val payload = packedPayloadFor(s, d)
       (0 until 3).foreach { g =>
         val sel =
@@ -4612,9 +4348,7 @@ object PipelineQueries {
     // the oracle re-derives from the drift trigger's firing replay.
     "q_sql_vacuum" -> ((s, d) => {
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_vac", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_sql_vac", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/state")
       val ext = RecQueries.extensionSession(s)
       ext.sql(
@@ -4630,10 +4364,10 @@ object PipelineQueries {
       val md = bpe4ModelFor(s, d)
       graft.streaming.BpeMaintainer.mergesAsOfDf(s, md, 1L).coalesce(1)
         .write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_asof1")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_asof1")
       graft.streaming.BpeMaintainer.latestMergesDf(s, md).coalesce(1)
         .write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_head")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_head")
       val ext = RecQueries.extensionSession(s)
       ext.sql(
         s"""SELECT 'asof1' AS leg, rank, l, r, merged
@@ -4648,9 +4382,7 @@ object PipelineQueries {
     // p_retention_sweep's API path.
     "q_sql_sweep" -> ((s, d) => {
       driftRunFor(s, d)
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_sweep", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_sql_sweep", d)
       graft.Exec.copyPath(s"${curateDriftBase(d)}/state", s"$base/cur")
       graft.Exec.copyPath(qgAutoStateFor(s, d), s"$base/knn")
       graft.Exec.copyPath(bpe4ModelFor(s, d), s"$base/tok")
@@ -4679,9 +4411,7 @@ object PipelineQueries {
     // a SQL-only operator. The oracle replays curate → merge replay from
     // the PINNED artifact → packing → epoch grids, like p_pack_asof.
     "q_sql_pack" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_pack", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_sql_pack", d)
       // the curated selection as a committed curation-state generation
       curatedSelFor(s, d).coalesce(1).write
         .parquet(s"$base/cur/selection/s1")
@@ -4690,7 +4420,7 @@ object PipelineQueries {
       graft.ops.Bpe.mergesDf(s,
           graft.streaming.BpeMaintainer.mergesAsOf(s, md, 1L))
         .coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_v1_sql")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_v1_sql")
       val ext = RecQueries.extensionSession(s)
       ext.sql(
         s"""SELECT epoch, seq_id, CAST(ord AS BIGINT) AS ord, n_tok,
@@ -4704,16 +4434,14 @@ object PipelineQueries {
     // nothing else in hand. Hash-equal to the explicit-horizon path
     // (and so to the same replayed oracle).
     "q_sql_pack_manifest" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_sql_packm", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_sql_packm", d)
       curatedSelFor(s, d).coalesce(1).write
         .parquet(s"$base/cur/selection/s1")
       val md = bpe4ModelFor(s, d)
       graft.ops.Bpe.mergesDf(s,
           graft.streaming.BpeMaintainer.mergesAsOf(s, md, 1L))
         .coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_v1_sqlm")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_v1_sqlm")
       graft.streaming.SnapshotManifest.pin(s, Seq(
         graft.streaming.SnapshotManifest.Pin("sel", "curate",
           s"$base/cur", 1L),
@@ -4821,9 +4549,7 @@ object PipelineQueries {
     // fold), pairs derived from state — must equal the one-shot banded
     // result, i.e. the brute-force closed-form oracle.
     "s_image_neardup" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_imghash", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_imghash", d)
       val m = graft.ops.Multimodal.syntheticMedia(s, 200)
         .select(col("media_id"), col("payload"))
       val withDups = m.unionByName(m.where(col("media_id") < 25)
@@ -4842,9 +4568,7 @@ object PipelineQueries {
     // identical-fingerprint pair set derives from state and must equal
     // the one-shot closed-form oracle.
     "s_audio_neardup" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_audiofp", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_audiofp", d)
       val m = graft.ops.Multimodal.syntheticMedia(s, 200, kind = "audio")
         .select(col("media_id"), col("payload"))
       val withDups = m.unionByName(m.where(col("media_id") < 25)
@@ -4896,9 +4620,7 @@ object PipelineQueries {
     // persisted and the corpus token frequency under it must hash-match
     // the one-shot oracle re-applying those streamed merges.
     "s_bpe_freq" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_bpe", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_bpe", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       // 2 waves (r14): growthFactor 0 relearns per wave, so the LATEST
       // model is the full-corpus learn under any wave partition; the
@@ -4912,7 +4634,7 @@ object PipelineQueries {
       graft.streaming.BpeMaintainer.compact(s, s"$base/state")
       val merges = graft.streaming.BpeMaintainer.latestMerges(s, s"$base/model")
       graft.ops.Bpe.mergesDf(s, merges).coalesce(1).write.mode("overwrite")
-        .parquet(bpeArtifactBase(d) + "/merges_s")
+        .parquet(Fixtures.dir(BpeArtifacts, d) + "/merges_s")
       graft.ops.Bpe.tokenFreq(docs(s, d), "doc_id", "text", merges,
         topN = 30)
     }),
@@ -4922,9 +4644,7 @@ object PipelineQueries {
     // re-scan; the oracle replays both snapshots from the raw documents,
     // so the maintained counts must agree exactly.
     "s_token_drift" -> ((s, d) => {
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_stream_drift", Tables.runKey(d)).toString
-      graft.Exec.deletePath(base)
+      val base = Fixtures.scratch("graft_stream_drift", d)
       val dd = docs(s, d).select(col("doc_id"), col("text"))
       (0 until 3).foreach { g =>
         // growthFactor far past any real growth: state aggregates per

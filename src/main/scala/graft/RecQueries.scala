@@ -15,25 +15,20 @@ object RecQueries {
   def ratings(spark: SparkSession, dir: String): DataFrame =
     Tables.ratings(spark, dir).cache()
 
-  /** Where r_svd_factor_topk persists its trained factor tables — keyed by
-    * the sf dir AND the process id ([[Tables.runKey]]), so concurrent runs
-    * at different scales *or at the same scale* can't clobber each other's
-    * artifacts between the dump and the DuckDB compare (the writer and the
+  /** The [[Fixtures.dir]] where r_svd_factor_topk persists its trained
+    * factor tables — per (sf dir, process), so concurrent runs at different
+    * scales *or at the same scale* can't clobber each other's artifacts
+    * between the dump and the DuckDB compare (the writer and the
     * oracle-path substitution share one JVM, so the key always agrees). The
     * oracle SQL carries the `__SVD_FACTORS__` placeholder; [[graft.Verify]]
-    * substitutes this path when writing oracle_sql.json.
+    * substitutes this dir when writing oracle_sql.json.
     */
-  def svdFactorBase(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_svd_factors",
-      Tables.runKey(dir)).toString
+  private[graft] val SvdFactors = "graft_svd_factors"
 
   /** Where r_negatives_rej persists its collision-dropped hash draws —
-    * same contract as [[svdFactorBase]]; oracle placeholder
-    * `__NEG_DRAWS__`.
+    * same contract as [[SvdFactors]]; oracle placeholder `__NEG_DRAWS__`.
     */
-  def negDrawsBase(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_neg_draws",
-      Tables.runKey(dir)).toString
+  private[graft] val NegDraws = "graft_neg_draws"
 
   private def round6(df: DataFrame, cols: Seq[String], value: String): DataFrame =
     df.select((cols.map(col) :+ round(col(value), 6).as(value)): _*)
@@ -93,7 +88,7 @@ object RecQueries {
     // behind the persisted artifact, exactly like r_negatives_rej's draws.
     "r_svd_topk" -> ((s, d) => {
       import graft.recdb.{RecCatalog, Recommender}
-      val base = svdFactorBase(d)
+      val base = Fixtures.dir(SvdFactors, d)
       val catalog = new RecCatalog(s"$base/cat")
       Recommender.drop("svdrec", catalog) // idempotent across warmup/timed/verify
       val r = ratings(s, d)
@@ -114,9 +109,9 @@ object RecQueries {
     // irrelevant to the compare — both sides read identical factors — so
     // this isolates exactly the prediction operator that was previously
     // only metric-gated. __SVD_FACTORS__ is substituted by Verify/Bench
-    // with svdFactorBase(sfDir).
+    // with Fixtures.dir(SvdFactors, sfDir).
     "r_svd_factor_topk" -> ((s, d) => {
-      val base = svdFactorBase(d)
+      val base = Fixtures.dir(SvdFactors, d)
       val r = ratings(s, d)
       val (uf, itf) = graft.recdb.FunkSVD.train(r, c)
       uf.select(col("id"), col("features").cast("array<double>").as("features"))
@@ -144,7 +139,7 @@ object RecQueries {
     // draw-order from the identical parquet.
     "r_negatives_rej" -> ((s, d) => {
       val r = ratings(s, d)
-      val base = negDrawsBase(d)
+      val base = Fixtures.dir(NegDraws, d)
       graft.recdb.Eval.negativeDraws(r, c, trials = 64)
         .write.mode("overwrite").parquet(base)
       graft.recdb.Eval.negativeSamplesFromDraws(
@@ -220,9 +215,8 @@ object RecQueries {
     // served result hash-matches the same oracle as the direct scoring path.
     "r_recview_topk" -> ((s, d) => {
       import graft.recdb.{RecCatalog, Recommender}
-      val base = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft_recview",
-        java.lang.Integer.toHexString(d.hashCode))).toString
+      val base = Fixtures.dir("graft_recview", d)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
       val catalog = new RecCatalog(s"$base/catalog")
       Recommender.drop("rv", catalog) // idempotent across warmup/timed/verify
       val r = ratings(s, d)

@@ -57,10 +57,13 @@ object Verify {
       .filter(e => wanted(e._1))
       .map { case (k, v) =>
         k -> v
-          .replace("__SVD_FACTORS__", RecQueries.svdFactorBase(sfDir))
-          .replace("__ANN_ARTIFACTS__", PipelineQueries.annArtifactBase(sfDir))
-          .replace("__BPE_ARTIFACTS__", PipelineQueries.bpeArtifactBase(sfDir))
-          .replace("__NEG_DRAWS__", RecQueries.negDrawsBase(sfDir))
+          .replace("__SVD_FACTORS__",
+            Fixtures.dir(RecQueries.SvdFactors, sfDir))
+          .replace("__ANN_ARTIFACTS__",
+            Fixtures.dir(PipelineQueries.AnnArtifacts, sfDir))
+          .replace("__BPE_ARTIFACTS__",
+            Fixtures.dir(PipelineQueries.BpeArtifacts, sfDir))
+          .replace("__NEG_DRAWS__", Fixtures.dir(RecQueries.NegDraws, sfDir))
       })
     writeJson(s"$outDir/_errors.json", Nil)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

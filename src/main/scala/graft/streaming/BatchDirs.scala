@@ -18,17 +18,17 @@ private[streaming] object BatchDirs {
     * leaves the count to AQE, which coalesces a small batch's shuffle to
     * 1-2 partitions — and then ONE task writes every partition directory's
     * file sequentially (~15 ms/file writer open+close; measured 4.4 s vs
-    * 1.5 s for a 282-cell batch at local[32], `Profile denseingest2`). An
-    * explicit count is exempt from AQE coalescing, so write parallelism
-    * stays at the executors' while each key still hashes wholly into one
-    * task — still ≈ one file per partition value, any scale.
+    * 1.5 s for a 282-cell batch at local[32]; OPTIMIZATION_r16.md, batch
+    * 1). An explicit count is exempt from AQE coalescing, so write
+    * parallelism stays at the executors' while each key still hashes wholly
+    * into one task — still ≈ one file per partition value, any scale.
     */
   def clusterForWrite(df: DataFrame, c: String): DataFrame =
     df.repartition(
       math.max(1, df.sparkSession.sparkContext.defaultParallelism),
       org.apache.spark.sql.functions.col(c))
 
-  /** Cap the file count of a per-batch STATE write. A micro-batch's
+  /** Cap the file count of a per-batch STATE write at one. A micro-batch's
     * persisted statistic (digest partials, window digests, rep sidecars,
     * word frequencies) is small relative to the batch, but an uncoalesced
     * write emits one part-file per task — up to 32 per dir per stage at
@@ -36,16 +36,9 @@ private[streaming] object BatchDirs {
     * footer read + eventual recursive delete) dominates the actual work
     * (round 14: s_dedup_exact 1.1 s on one host, 13.6 s on another). This is
     * the coalesce discipline [[AnnIndexMaintainer]]'s sidecars already
-    * apply, behind a conf so a real cluster ingesting large micro-batches
-    * can widen it: `spark.graft.stream.statePartitions` (default 1;
-    * ≤ 0 disables the coalesce entirely).
+    * apply.
     */
-  def stateParts(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf
-      .getOption("spark.graft.stream.statePartitions")
-      .flatMap(_.trim.toIntOption).getOrElse(1)
-    if (n > 0) df.coalesce(n) else df
-  }
+  def stateParts(df: DataFrame): DataFrame = df.coalesce(1)
 
   def listDirs(indexDir: String, prefix: String): Seq[(Long, String)] =
     Option(new java.io.File(indexDir).listFiles()).toSeq.flatten
