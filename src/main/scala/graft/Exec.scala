@@ -82,20 +82,36 @@ object Exec {
     } finally it.close()
   }
 
-  /** Per-stage wall-clock attribution to stderr — `[stage] name 1.23s`.
-    * Always on: the lines ride the driver's kept log, so a gate whose
-    * cost blows up only in the driver's environment (round 14's
-    * s_curate, 10.7 s builder vs 93.5 s driver, one opaque number) is
-    * diagnosable from the driver's own run instead of needing a local
-    * reproduction. Cost when unwatched: one nanoTime pair + one stderr
-    * line per stage — noise-free against multi-second stages.
+  /** Per-stage wall-clock attribution to stderr —
+    * `[stage] name 1.23s self 0.45s`. Always on: the lines ride the
+    * driver's kept log, so a gate whose cost blows up only in the driver's
+    * environment (round 14's s_curate, 10.7 s builder vs 93.5 s driver,
+    * one opaque number) is diagnosable from the driver's own run instead
+    * of needing a local reproduction. Cost when unwatched: one nanoTime
+    * pair + one stderr line per stage — noise-free against multi-second
+    * stages.
+    *
+    * Stages nest (a fixture's build calls the fixtures it needs), so the
+    * total counts its children; `self` is the total less the stages run
+    * inside it on the same thread, and the self times of a run's lines sum
+    * to its staged time without double counting.
     */
   def stage[T](name: String)(body: => T): T = {
+    val nested = nestedNs.get
+    val outer = nested(0)
+    nested(0) = 0L
     val t0 = System.nanoTime()
-    val r = body
-    System.err.println(f"[stage] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
+    try {
+      val r = body
+      val total = System.nanoTime() - t0
+      System.err.println(
+        f"[stage] $name ${total / 1e9}%.2fs self ${(total - nested(0)) / 1e9}%.2fs")
+      r
+    } finally nested(0) = outer + (System.nanoTime() - t0)
   }
+
+  /** Time spent in stages nested in this thread's current stage, in ns. */
+  private val nestedNs = ThreadLocal.withInitial[Array[Long]](() => Array(0L))
 
   /** Most bodies one [[inParallel]] call runs at once. A few overlapping
     * Spark actions fill the executors' idle gaps; more only queue in the

@@ -171,26 +171,31 @@ object Profile {
             .groupBy("userid", "itemid").agg(max("rating").as("rating"))
             .cache()
           val nEv = ev.count()
+          // the cost model's units: join rows = Σ (events per user)², dense
+          // cells = items² × users / 2
+          val fanout = ev.groupBy("userid").count()
+            .agg(sum(col("count") * col("count"))).head().getLong(0)
+          val cells = 100.0 * 100.0 * users / 2
           def timed(strategy: String): (Double, Long) = {
             val t0 = System.nanoTime()
             val n = Similarity.itemCosine(ev, Tables.ratingCols, strategy).count()
             ((System.nanoTime() - t0) / 1e9, n)
           }
           val (tJoin, nModel) = timed("join")
-          val denseStr =
-            if (users <= Similarity.DenseDimLimit) f"${timed("dense")._1}%.1fs"
-            else "skipped(dims>DenseDimLimit)"
+          val tDense =
+            if (users <= Similarity.DenseDimLimit) Some(timed("dense")._1) else None
+          val denseStr = tDense.fold("skipped(dims>DenseDimLimit)")(t =>
+            f"$t%.1fs (${t * 1e9 / cells}%.2fns/cell, " +
+              f"join ${tJoin * 1e9 / fanout}%.1fns/row)")
           val t0 = System.nanoTime()
           val autoDf = Similarity.itemCosine(ev, Tables.ratingCols, "auto")
           autoDf.count()
           val tAuto = (System.nanoTime() - t0) / 1e9
-          // the dense path's p1 < p2 pair join is non-equi → nested-loop /
-          // cartesian in the physical plan; the sparse path is a pure
+          // the dense build runs as an array kernel, named in the plan
+          // (`MapPartitions dense_kernel[...]`); the sparse path is a pure
           // equi-join — so the executed plan is the pick's witness
           val plan = autoDf.queryExecution.executedPlan.toString
-          val picked =
-            if (plan.contains("NestedLoop") || plan.contains("Cartesian")) "dense"
-            else "join"
+          val picked = if (plan.contains("dense_kernel")) "dense" else "join"
           ev.unpersist()
           System.gc()
           val rt = Runtime.getRuntime

@@ -287,75 +287,6 @@ case class LongMatchCount(left: Expression, right: Expression)
       newRight: Expression): LongMatchCount = copy(left = newLeft, right = newRight)
 }
 
-/** Aggregate that scatters (index, value) input rows directly into a
-  * zero-filled primitive double[dims] per group — the dense-vector build
-  * without the collect_list detour. collect_list is a TypedImperativeAggregate
-  * over an ArrayBuffer of copied InternalRows; for a 10k-wide vector that is
-  * 10k row allocations + a second scatter pass (DenseFromEntries). This
-  * aggregate holds the final primitive array AS the buffer: update is a
-  * single array store, merge is an elementwise add, eval wraps the array
-  * without copying through structs. Duplicate indices sum (equivalent to the
-  * scatter for the unique-(group,index) inputs the dense strategy feeds it).
-  * Null index or value rows are skipped — mirrors collect_list dropping
-  * nulls, so left-join misses contribute nothing.
-  */
-case class DenseVectorAgg(
-    idx: Expression,
-    value: Expression,
-    dims: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Double]] {
-  require(dims >= 1, "dims must be >= 1")
-
-  override def children: Seq[Expression] = Seq(idx, value)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_dense_vec_agg"
-
-  override def createAggregationBuffer(): Array[Double] = new Array[Double](dims)
-
-  override def update(buf: Array[Double],
-      input: org.apache.spark.sql.catalyst.InternalRow): Array[Double] = {
-    val i = idx.eval(input)
-    val v = value.eval(input)
-    if (i != null && v != null) {
-      val ii = i.asInstanceOf[Int]
-      if (ii >= 0 && ii < dims) buf(ii) += v.asInstanceOf[Double]
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Double], other: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < dims) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Double]): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(dims * 8)
-    bb.asDoubleBuffer().put(buf)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val out = new Array[Double](dims)
-    java.nio.ByteBuffer.wrap(bytes).asDoubleBuffer().get(out)
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): DenseVectorAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): DenseVectorAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DenseVectorAgg =
-    copy(idx = newChildren(0), value = newChildren(1))
-}
-
 /** Codegen'd PQ encode: ARRAY<DOUBLE> vector → ARRAY<INT> of m per-subspace
   * centroid ids. The codebook rides along as a broadcast-in-plan reference
   * object (ctx.addReferenceObj), so the m·k·dsub fused multiply-adds run in
@@ -525,15 +456,6 @@ object VectorFns {
   def matchCount(a: Column, b: Column): Column =
     ColumnShim.column(LongMatchCount(
       ColumnShim.expression(a), ColumnShim.expression(b)))
-
-  /** Aggregate a group's (index, value) rows into a dense ARRAY<DOUBLE>(dims)
-    * (sum-scatter; null-skipping). The single-pass replacement for
-    * collect_list(struct(i, v)) → denseFromEntries.
-    */
-  def denseVecAgg(i: Column, v: Column, dims: Int): Column =
-    ColumnShim.column(DenseVectorAgg(
-      ColumnShim.expression(i.cast("int")),
-      ColumnShim.expression(v.cast("double")), dims).toAggregateExpression())
 
   /** Codegen'd PQ codes of an ARRAY<DOUBLE> vector (roundScale < 0 = exact). */
   def pqEncodeNative(vec: Column, codebooks: Array[Array[Array[Double]]],

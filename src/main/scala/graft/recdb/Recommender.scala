@@ -84,9 +84,9 @@ object Recommender {
         }
         0L
       case m =>
-        graft.StateCommit.writeDir(e.modelPaths.head)(
+        DenseKernels.releasing(graft.StateCommit.writeDir(e.modelPaths.head)(
           applyNeighborhood(Similarity.model(m, events, c, stats = Some(st)),
-            m, e.neighborhood).write.mode("overwrite").parquet(_))
+            m, e.neighborhood).write.mode("overwrite").parquet(_)))
         parquetRows(events.sparkSession, e.modelPaths.head)
     }
     e.copy(eventTotal = st.events,
@@ -337,10 +337,13 @@ object Recommender {
     }
   }
 
+  /** The scores of `method` over `events`, from `hit`'s persisted model or
+    * a model built on the fly; cut to each user's `topK` best when given.
+    */
   private def recommendCompute(spark: SparkSession, events: DataFrame,
       c: EventCols, method: RecMethod, hit: Option[RecEntry],
-      users: Option[DataFrame],
-      scoredUsersHint: Option[Long]): DataFrame = {
+      users: Option[DataFrame], scoredUsersHint: Option[Long],
+      topK: Option[Int] = None): DataFrame = {
     method match {
       case RecMethod.SVD =>
         val (uf, itf) = hit match {
@@ -361,7 +364,7 @@ object Recommender {
             u.select(col(c.user).as("id")).distinct()), Seq("id"), "semi")
           case None => uf
         }
-        Scoring.factorScore(scoped, itf, c)
+        Scoring.best(Scoring.factorScore(scoped, itf, c), c, topK)
       case m =>
         val model = hit match {
           case Some(e) =>
@@ -388,11 +391,11 @@ object Recommender {
         // strategy pick pure (no jobs at plan-construction/EXPLAIN time)
         val stats = hit.flatMap(_.scoreStats)
         if (RecMethod.isUserBased(m))
-          Scoring.userCF(events, model, c, users, stats = stats,
-            scoredUsersHint = scoredUsersHint)
+          Scoring.userScores(events, model, c, users, "auto", stats,
+            scoredUsersHint, topK)
         else
-          Scoring.itemCF(events, model, c, users, stats = stats,
-            scoredUsersHint = scoredUsersHint)
+          Scoring.itemScores(events, model, c, users, "auto", stats,
+            scoredUsersHint, topK)
     }
   }
 
@@ -408,31 +411,28 @@ object Recommender {
     val e = catalog.get(name).getOrElse(
       throw new IllegalArgumentException(s"unknown recommender: $name"))
     val c = EventCols(e.userCol, e.itemCol, e.ratingCol)
-    // serveFromView=false: re-materialization must COMPUTE, not read the
-    // view it is about to replace
-    val scores = recommend(spark, events, e.eventsTag, c, e.method.name,
-      Some(catalog), serveFromView = false)
-    // cluster by user on write: every user's rows land in one partition,
-    // contiguous — parquet row-group min/max stats then prune a
-    // `user = ?` point query to one file (and the in-memory cache's batch
-    // stats do the same), which is what makes [[recommendTopK]] O(k)-ish
-    // instead of a view-wide scan per query. A top-k cut is clustered by
-    // its window's user shuffle already, and its rows leave the window
-    // sorted as the write asks, so only a complete view shuffles and sorts.
-    val out = topK match {
-      case Some(k) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(c.user))
-          .orderBy(col("score").desc, col(c.item))
-        scores.withColumn("__rk", row_number().over(w))
-          .where(col("__rk") <= k).drop("__rk")
-      case None => scores.repartition(
-        math.max(1, spark.sparkContext.defaultParallelism / 2), col(c.user))
-    }
     val ver = e.viewVersion + 1
     val path = s"$viewsDir/$name.view.v$ver.parquet"
-    out.sortWithinPartitions(col(c.user), col("score").desc, col(c.item))
-      .write.mode("overwrite").parquet(path)
+    DenseKernels.releasing {
+      // re-materialization must COMPUTE, not read the view it is about to
+      // replace; it counts as a query of the recommender (R18), as a
+      // `recommend` call does
+      val hit = bumpQueryCounter(catalog, name)
+      val scores = recommendCompute(spark, events, c, e.method, hit,
+        users = None, scoredUsersHint = None, topK)
+      // cluster by user on write: every user's rows land in one partition,
+      // contiguous — parquet row-group min/max stats then prune a
+      // `user = ?` point query to one file (and the in-memory cache's
+      // batch stats do the same), which is what makes [[recommendTopK]]
+      // O(k)-ish instead of a view-wide scan per query. A top-k cut is
+      // clustered by user already (the dense kernel's user shuffle, or the
+      // window's), so only a complete view shuffles.
+      val out = if (topK.isDefined) scores
+        else scores.repartition(
+          math.max(1, spark.sparkContext.defaultParallelism / 2), col(c.user))
+      out.sortWithinPartitions(col(c.user), col("score").desc, col(c.item))
+        .write.mode("overwrite").parquet(path)
+    }
     // the previous materialization is dead the moment the catalog points at
     // the new one — but an in-flight reader that obtained its DataFrame
     // before the swap may still be draining from the old files, so only the

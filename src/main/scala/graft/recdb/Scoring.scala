@@ -2,7 +2,6 @@ package graft.recdb
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFns
 
 /** Prediction formulas — the Spark re-expression of RecDB's RecScan tuple
   * generator (execRecommend.c:302-595) plus the per-method predict functions
@@ -29,6 +28,16 @@ import graft.functions.VectorFns
   * frames) is left unhinted so AQE picks broadcast only when the runtime
   * size allows — a forced broadcast of a 1e9-row dimension would OOM the
   * driver on a real cluster.
+  *
+  * When the cost model picks the dense sweep, the bounded side (itemCF: the
+  * items × items similarity matrix; userCF: each item's raters) is
+  * collected once, broadcast once, and scored against each user's rated
+  * list by an array kernel ([[DenseKernels]]) — the reference's in-memory
+  * model walk (execRecommend.c:302-595), with the users split over tasks by
+  * one shuffle. Asked for a top-k, the kernel keeps only each user's k best,
+  * so neither the users × items rows nor a window sort over them is built;
+  * the sparse join path keeps the window, because its rows per user are
+  * not bounded.
   */
 object Scoring {
 
@@ -62,30 +71,50 @@ object Scoring {
   def itemCF(ratings: DataFrame, itemModel: DataFrame,
       c: EventCols = EventCols(), users: Option[DataFrame] = None,
       strategy: String = "auto", stats: Option[ScoreStats] = None,
-      scoredUsersHint: Option[Long] = None): DataFrame = {
+      scoredUsersHint: Option[Long] = None): DataFrame =
+    itemScores(ratings, itemModel, c, users, strategy, stats, scoredUsersHint,
+      topK = None)
+
+  /** [[itemCF]], cut to each user's `topK` best ([[best]]) when given. */
+  private[recdb] def itemScores(ratings: DataFrame, itemModel: DataFrame,
+      c: EventCols, users: Option[DataFrame], strategy: String,
+      stats: Option[ScoreStats], scoredUsersHint: Option[Long],
+      topK: Option[Int]): DataFrame = {
     val uRatings = restrict(ratings, users, c)
     if (pickDense(ratings, users, itemModel, c.item, c, strategy, stats,
         scoredUsersHint))
-      return itemCFDense(ratings, itemModel, c, users)
+      return DenseKernels.itemCF(ratings, uRatings, itemModel, c, topK)
     val sym = symmetric(itemModel, "item1", "item2")
     val scores = sym
       .join(uRatings.select(col(c.user).as("u"), col(c.item).as("j"),
         col(c.rating).as("r")), Seq("j"))
       .groupBy("u", "i")
       .agg((sum(col("s") * col("r")) / sum(abs(col("s")))).as("score"))
-    expansion(uRatings, ratings, c)
+    best(expansion(uRatings, ratings, c)
       .join(scores, Seq("u", "i"), "left")
       .select(col("u").as(c.user), col("i").as(c.item),
-        coalesce(col("score"), lit(0.0)).as("score"))
+        coalesce(col("score"), lit(0.0)).as("score")), c, topK)
   }
 
-  /** Hard ceiling on the dense sweep's broadcast payload, in vector CELLS
-    * (broadcast rows × vector width). Both dense sweeps broadcast one
-    * dims-wide vector pair per ITEM (itemCF: per-item similarity columns over
-    * the item index; userCF: per-item rating vectors over the user index), so
-    * the payload is ≈ items × dims × 8 B × 2 — bounding only the width would
-    * let an unbounded item count push the broadcast to TBs. 2²⁴ cells ≈
-    * 270 MB of broadcast vectors, comfortably inside executor memory.
+  /** `scores` cut to each user's k best, ranked by score descending, then
+    * item ascending: the order of a top-k view.
+    */
+  private[recdb] def best(scores: DataFrame, c: EventCols,
+      topK: Option[Int]): DataFrame = topK.fold(scores) { k =>
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(c.user)).orderBy(col("score").desc, col(c.item))
+    scores.withColumn("__rk", row_number().over(w)).where(col("__rk") <= k)
+      .drop("__rk")
+  }
+
+  /** Hard ceiling on the dense sweep's broadcast payload, in CELLS (items ×
+    * vector width). Both dense kernels hold one dims-wide row per ITEM
+    * (itemCF: the items × items similarity matrix; userCF: each item's
+    * raters over the user index), so the payload is ≤ items × dims cells —
+    * bounding only the width would let an unbounded item count push the
+    * broadcast to TBs. 2²⁴ cells is 134 MB as the itemCF matrix (8 B a
+    * cell) and at most 335 MB as userCF's rater rows (20 B a rated cell:
+    * slot, rating sum, event count), inside executor memory.
     */
   private val DenseBroadcastCells = 1L << 24
 
@@ -101,9 +130,10 @@ object Scoring {
     * filter must enter the estimate (and the memo key: the filtered and
     * unfiltered sweeps genuinely want different strategies).
     *
-    * Dense cost: scoredUsers × items × dims codegen cells (the BNLJ dot
-    * products), discounted by the measured cell/row cost ratio, plus
-    * |ratings| rows for the vector builds over the full events table.
+    * Dense cost: scoredUsers × items × dims cells (the kernel's dot
+    * products, bounded above by the full matrix), discounted by the
+    * measured cell/row cost ratio, plus |ratings| rows for the collect over
+    * the full events table.
     *
     * Serving-latency note: the per-filter quantities (scoredUsers, cnt) are
     * ESTIMATED from one count() on the caller's users frame — typically one
@@ -115,7 +145,7 @@ object Scoring {
     *
     * Bounds: the vector width (model key side — items for itemCF, users for
     * userCF) must fit [[Similarity.DenseDimLimit]]; the broadcast side is
-    * one vector pair per item and is bounded by
+    * one row per item and is bounded by
     * [[Similarity.DenseEntityLimit]] and [[DenseBroadcastCells]], mirroring
     * the model build's check.
     */
@@ -181,43 +211,6 @@ object Scoring {
       s"unknown strategy '$other' (auto|join|dense)")
   }
 
-  /** Dense itemCF sweep: score(u,i) = dot(rvec_u, simcol_i) /
-    * dot(mask_u, |sim|col_i) with 0 on an empty denominator — the same
-    * Σ sim·r / Σ|sim| restricted to u's rated neighbors, evaluated as two
-    * codegen'd dot products per (user, item) cell instead of a model×ratings
-    * join fan-out. The user×item cross join IS the RecScan expansion, so no
-    * extra left join is needed; items with no model edges get zero vectors
-    * and score 0 (recathon.c:4291 semantics).
-    */
-  private def itemCFDense(ratings: DataFrame, itemModel: DataFrame,
-      c: EventCols, users: Option[DataFrame]): DataFrame = {
-    val (idx, dims) = Similarity.denseIndex(ratings, c.item)
-    val uRatings = restrict(ratings, users, c)
-    val uvec = uRatings.join(broadcast(idx), col(c.item) === col("k"))
-      .groupBy(col(c.user).as("u"))
-      .agg(
-        VectorFns.denseVecAgg(col("ki"), col(c.rating), dims).as("rv"),
-        VectorFns.denseVecAgg(col("ki"), lit(1.0), dims).as("mv"))
-    val sym = symmetric(itemModel, "item1", "item2")
-    val scols = idx.select(col("k").as("i"), col("ki").as("ii"))
-      .join(sym, Seq("i"), "left")
-      .join(broadcast(idx.select(col("k").as("j"), col("ki").as("ji"))),
-        Seq("j"), "left")
-      .groupBy(col("i"))
-      .agg(
-        VectorFns.denseVecAgg(col("ji"), col("s"), dims).as("sv"),
-        VectorFns.denseVecAgg(col("ji"), abs(col("s")), dims).as("av"))
-    val den = VectorFns.dotNative(col("mv"), col("av"))
-    // broadcast the item side and keep the join type Inner (lit(true)
-    // condition) so BroadcastNestedLoopJoin stays in whole-stage codegen and
-    // the wide vectors never materialize into joined rows — only (u, i,
-    // score) comes out
-    uvec.join(broadcast(scols), lit(true))
-      .select(col("u").as(c.user), col("i").as(c.item),
-        when(den === 0d, lit(0.0))
-          .otherwise(VectorFns.dotNative(col("rv"), col("sv")) / den).as("score"))
-  }
-
   /** userCF: score(u,i) = ū + Σ_{v∈raters(i)} sim(u,v)·(r(v,i) − ū) / Σ|sim|,
     * where ū is **u's own** average — the reference's documented quirk vs the
     * standard Resnick formula (recathon.c:4349-4360, SURVEY.md §2.1 R13).
@@ -226,11 +219,19 @@ object Scoring {
   def userCF(ratings: DataFrame, userModel: DataFrame,
       c: EventCols = EventCols(), users: Option[DataFrame] = None,
       strategy: String = "auto", stats: Option[ScoreStats] = None,
-      scoredUsersHint: Option[Long] = None): DataFrame = {
+      scoredUsersHint: Option[Long] = None): DataFrame =
+    userScores(ratings, userModel, c, users, strategy, stats, scoredUsersHint,
+      topK = None)
+
+  /** [[userCF]], cut to each user's `topK` best ([[best]]) when given. */
+  private[recdb] def userScores(ratings: DataFrame, userModel: DataFrame,
+      c: EventCols, users: Option[DataFrame], strategy: String,
+      stats: Option[ScoreStats], scoredUsersHint: Option[Long],
+      topK: Option[Int]): DataFrame = {
     val uRatings = restrict(ratings, users, c)
     if (pickDense(ratings, users, userModel, c.user, c, strategy, stats,
         scoredUsersHint))
-      return userCFDense(ratings, userModel, c, users)
+      return DenseKernels.userCF(ratings, uRatings, users, userModel, c, topK)
     val uavg = uRatings.groupBy(col(c.user).as("u"))
       .agg(avg(col(c.rating)).as("ubar"))
     val sym0 = symmetric(userModel, "user1", "user2")
@@ -248,50 +249,10 @@ object Scoring {
       .agg((col("ubar") +
         sum(col("s") * (col("r") - col("ubar"))) / sum(abs(col("s")))).as("score"))
       .drop("ubar")
-    expansion(uRatings, ratings, c)
+    best(expansion(uRatings, ratings, c)
       .join(scores, Seq("u", "i"), "left")
       .select(col("u").as(c.user), col("i").as(c.item),
-        coalesce(col("score"), lit(0.0)).as("score"))
-  }
-
-  /** Dense userCF sweep: with per-item vectors over the user index
-    * (ratings rvec_i, rater mask_i) and per-user model rows (simrow_u,
-    * |sim|row_u),
-    *   score(u,i) = ū + (dot(srow_u, rvec_i) − ū·dot(srow_u, mask_i))
-    *                  / dot(|s|row_u, mask_i)
-    * which is algebraically Σ s(u,v)·(r(v,i) − ū) / Σ|s(u,v)| over raters v
-    * of i — with 0 (not ū) on an empty denominator, the reference's quirk
-    * (recathon.c:4357). Raters come from the FULL ratings table; the
-    * user-qual pre-filter shrinks only the scored-user side.
-    */
-  private def userCFDense(ratings: DataFrame, userModel: DataFrame,
-      c: EventCols, users: Option[DataFrame]): DataFrame = {
-    val (idx, dims) = Similarity.denseIndex(ratings, c.user)
-    val uRatings = restrict(ratings, users, c)
-    val ivec = ratings.join(broadcast(idx), col(c.user) === col("k"))
-      .groupBy(col(c.item).as("i"))
-      .agg(
-        VectorFns.denseVecAgg(col("ki"), col(c.rating), dims).as("rv"),
-        VectorFns.denseVecAgg(col("ki"), lit(1.0), dims).as("mv"))
-    val sym = symmetric(userModel, "user1", "user2")
-      .select(col("i").as("u"), col("j").as("v"), col("s"))
-    val srows = uRatings.select(col(c.user).as("u")).distinct()
-      .join(sym, Seq("u"), "left")
-      .join(broadcast(idx.select(col("k").as("v"), col("ki").as("vi"))),
-        Seq("v"), "left")
-      .groupBy(col("u"))
-      .agg(
-        VectorFns.denseVecAgg(col("vi"), col("s"), dims).as("sv"),
-        VectorFns.denseVecAgg(col("vi"), abs(col("s")), dims).as("av"))
-    val uavg = uRatings.groupBy(col(c.user).as("u"))
-      .agg(avg(col(c.rating)).as("ubar"))
-    val den = VectorFns.dotNative(col("av"), col("mv"))
-    val num = VectorFns.dotNative(col("sv"), col("rv")) -
-      col("ubar") * VectorFns.dotNative(col("sv"), col("mv"))
-    srows.join(uavg, Seq("u"))
-      .join(broadcast(ivec), lit(true)) // codegen'd BNLJ; see itemCFDense
-      .select(col("u").as(c.user), col("i").as(c.item),
-        when(den === 0d, lit(0.0)).otherwise(col("ubar") + num / den).as("score"))
+        coalesce(col("score"), lit(0.0)).as("score")), c, topK)
   }
 
   /** SVD / matrix-factorization: score(u,i) = dot(userF[u], itemF[i]) — no

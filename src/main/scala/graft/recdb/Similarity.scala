@@ -2,7 +2,6 @@ package graft.recdb
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFns
 
 /** Column bindings for an events (ratings) table — the reference validates the
   * three columns at parse time (recathon.c:846-865); here it is a signature.
@@ -39,6 +38,14 @@ final case class EventCols(
   * would emit quadratic pairs) callers can cap events per key with
   * [[capRatingsPerKey]] — the reference's dormant NBRHOOD knob (recathon.c:48)
   * made real.
+  *
+  * When the co-rating dimension and the entity count are bounded, the
+  * 'auto' pick takes the dense build instead: an array kernel
+  * ([[DenseKernels.pairs]]) — one aggregation collects each entity's
+  * (co-rating key, value) list to the driver, one broadcast ships them as
+  * sparse rows, and `defaultParallelism` tasks each take a strided slice of
+  * entities and emit the p1 < p2 dots with plain loops. It runs the
+  * reference's in-memory pair loop, with the entities split over tasks.
   */
 object Similarity {
 
@@ -81,15 +88,18 @@ object Similarity {
   val DenseDimLimit = 16384
   val DenseEntityLimit = 16384
 
-  /** Ceiling on the dense vector frame (entities × dims cells ≈ 8 B each):
-    * the pair join broadcasts one side of it, so 'auto' must keep it inside
-    * executor/broadcast memory — 2²⁴ cells ≈ 135 MB.
+  /** Ceiling on the dense build's cells (entities × dims): the kernel's
+    * driver-collected lists and its one broadcast hold at most this many
+    * (slot, value) cells, so 'auto' keeps them inside driver and executor
+    * memory — 2²⁴ cells ≈ 200 MB at 12 B each.
     */
   val DenseVecCells: Long = 1L << 24
 
   /** Relative cost of pushing one co-rating pair row through the sparse
     * join's shuffle + hash aggregation versus one fused multiply-add cell in
-    * the dense pair loop's whole-stage codegen. Measured on local[32] at
+    * the dense pair loop (measured against the earlier whole-stage-codegen
+    * nested-loop build; README's flipprobe lines give the array kernel's
+    * cost per cell beside it). Measured on local[32] at
     * sf0.1 (73k ratings, 1500 users × 100 items): the user models' join path
     * runs ~7s over a 5.3e7-row fan-out while the dense path runs ~1.5-2.5s
     * over 1.1e8 cells — shuffled-row cost ≈ 50× a codegen cell once both
@@ -225,26 +235,27 @@ object Similarity {
   }
 
   /** The 'auto' pick: dense when the vector width and entity count are
-    * bounded, the vectors fit the pair join's broadcast, and the dense
+    * bounded, the cells fit the kernel's broadcast, and the dense
     * pair-loop cells undercut the join rows × their relative cost.
     */
   private def denseWins(st: CorpusStats): Boolean = {
     val (dims, entities) = (st.keys, st.entities)
     dims <= DenseDimLimit && entities <= DenseEntityLimit &&
-      // the pair join broadcasts one side of the vecs frame
-      // (entities × dims cells) — cap it like the scoring sweep does
+      // the kernel collects and broadcasts up to entities × dims cells —
+      // cap them like the scoring sweep does
       entities * dims <= DenseVecCells &&
       entities * entities * dims / 2 < DenseJoinCostRatio * st.fanout
   }
 
   /** Physical strategy dispatch. "join" = sparse co-rating self-join (the
     * unbounded-scale path: cost tracks actual co-ratings, one shuffle on the
-    * co-rating key + one on the pair key). "dense" = scatter each entity's
-    * ratings into a zero-filled vector over the co-rating dimension and take
-    * pairwise codegen'd dot products — no 100M-row shuffle aggregation; valid
-    * because a cell where either side is unrated contributes 0 to the
-    * co-rated dot (for Pearson the vectors hold mean-CENTERED values, so
-    * zero-fill still equals the co-rated centered dot). "auto" picks dense
+    * co-rating key + one on the pair key). "dense" = the array kernel
+    * [[DenseKernels.pairs]]: every entity's cells over the co-rating
+    * dimension on the driver, pairwise dots in tasks — no 100M-row shuffle
+    * aggregation; valid because a cell where either side is unrated
+    * contributes 0 to the co-rated dot (for Pearson the cells hold
+    * mean-CENTERED values, so the full dot still equals the co-rated
+    * centered dot). "auto" picks dense
     * when both the dimension and the entity count are bounded (the regime
     * after hashing/bucketing items at 100 TB), sparse otherwise — from the
     * caller's `stats` without a job, else from one memoized [[corpusStats]]
@@ -276,72 +287,8 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"unknown strategy '$other' (auto|join|dense)")
     }
-    if (dense) densePairs(r, joinKey, pairKey, rating, out1, out2, pearsonMode)
+    if (dense) DenseKernels.pairs(r, joinKey, pairKey, rating, out1, out2, pearsonMode)
     else sparse(None)
-  }
-
-  /** Dense slot index over a bounded dimension, built on the driver: the
-    * dimension is ≤ [[DenseDimLimit]] or the dense path is invalid, so one
-    * collect replaces a distinct-shuffle + single-partition global window
-    * (and every branch that references the index re-running them). Returns
-    * the (key → slot) frame and the vector width. Slot order is any stable
-    * order — it is invisible to the pairwise dots.
-    */
-  private[recdb] def denseIndex(r: DataFrame, key: String): (DataFrame, Int) = {
-    import scala.jdk.CollectionConverters._
-    val keys = r.select(col(key).as("k")).distinct().collect().map(_.get(0))
-    require(keys.length <= DenseDimLimit,
-      s"dense build needs <= $DenseDimLimit distinct $key values, " +
-        s"got ${keys.length}; use strategy=join")
-    val idxRows = keys.sortBy(_.toString).zipWithIndex
-      .map { case (k, i) => org.apache.spark.sql.Row(k, i) }.toSeq.asJava
-    val idx = r.sparkSession.createDataFrame(idxRows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k", r.schema(key).dataType),
-        org.apache.spark.sql.types.StructField("ki",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
-    (idx, keys.length)
-  }
-
-  /** Bounded-dimension dense build: per-entity zero-filled vector over the
-    * co-rating index (native scatter expression), pairwise dot in whole-stage
-    * codegen. Semantics identical to the join path, including the sign
-    * filters and the Pearson degenerate-norm drop.
-    */
-  private def densePairs(r: DataFrame, joinKey: String, pairKey: String,
-      rating: String, out1: String, out2: String,
-      pearsonMode: Boolean): DataFrame = {
-    val (idx, dims) = denseIndex(r, joinKey)
-    val base =
-      if (!pearsonMode)
-        r.select(col(pairKey).as("p"), col(joinKey).as("jk"),
-          col(rating).cast("double").as("rv"))
-      else {
-        val means = r.groupBy(col(pairKey).as("mp")).agg(avg(col(rating)).as("mean"))
-        r.join(means, col(pairKey) === col("mp"))
-          .select(col(pairKey).as("p"), col(joinKey).as("jk"),
-            (col(rating) - col("mean")).cast("double").as("rv"))
-      }
-    // not persisted: the pair join reads vecs from both branches, and the
-    // branches' vector-aggregation exchanges are the same canonical plan,
-    // so Spark's exchange reuse runs the scan → index join → aggregation
-    // once and the second branch reads its shuffle output. No cache entry,
-    // and no count job, outlives the build.
-    val vecs = base.join(broadcast(idx), col("jk") === col("k"))
-      .groupBy("p")
-      .agg(VectorFns.denseVecAgg(col("ki"), col("rv"), dims).as("vec"))
-      .withColumn("nrm", sqrt(VectorFns.dotNative(col("vec"), col("vec"))))
-    val a = vecs.select(col("p").as("p1"), col("vec").as("v1"), col("nrm").as("n1"))
-    val bb = vecs.select(col("p").as("p2"), col("vec").as("v2"), col("nrm").as("n2"))
-    val dot = VectorFns.dotNative(col("v1"), col("v2"))
-    val sim =
-      if (pearsonMode) when(col("n1") * col("n2") === 0d, lit(null))
-        .otherwise(dot / (col("n1") * col("n2")))
-      else dot / (col("n1") * col("n2"))
-    val pairs = a.join(bb, col("p1") < col("p2"))
-      .select(col("p1").as(out1), col("p2").as(out2), sim.as("similarity"))
-    if (pearsonMode) pairs.where(col("similarity") =!= 0d)
-    else pairs.where(col("similarity") > 0d)
   }
 
   /** sim(a,b) = dot(a,b) / (‖a‖·‖b‖) over co-rating keys (recathon.c:1353-1367). */

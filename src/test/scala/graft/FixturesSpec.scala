@@ -49,6 +49,28 @@ class FixturesSpec extends SparkSpec {
     builds.get shouldBe 40
   }
 
+  test("a nested fixture's [stage] line: the total, and self time without " +
+      "its children") {
+    val outer = Fixtures.memo[String, String]("spec-self-outer")
+    val inner = Fixtures.memo[String, String]("spec-self-inner")
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try outer("k") { Thread.sleep(300); inner("k") { Thread.sleep(600); "leaf" } }
+    finally System.setErr(saved)
+    val line = """\[stage\] fixture (spec-self-\w+) ([\d.]+)s self ([\d.]+)s""".r
+    val got = err.toString.linesIterator.collect {
+      case line(n, total, self) => n -> (total.toDouble, self.toDouble)
+    }.toMap
+    got.keySet shouldBe Set("spec-self-outer", "spec-self-inner")
+    val ((ot, os), (it, is)) = (got("spec-self-outer"), got("spec-self-inner"))
+    is shouldBe it // a leaf's self time is its total
+    it should be >= 0.6
+    ot should be >= it + 0.3
+    os shouldBe (ot - it) +- 0.011 // each figure is rounded to 10 ms
+    os should be < it
+  }
+
   test("a build that throws leaves no entry; the next call builds again") {
     val memo = Fixtures.memo[String, String]("spec-throw")
     val builds = new AtomicInteger

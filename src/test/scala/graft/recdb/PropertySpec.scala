@@ -82,6 +82,89 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** [[randomEvents]] plus the top-k edge cases: items 97 and 98 rated
+    * alike by the same users (every user's scores for them tie exactly),
+    * and user 99 alone on item 99 (item 99 has no co-raters, so no item
+    * model edges, and every itemCF score of user 99 is 0: all its items
+    * tie, and it has fewer than k positive scores).
+    */
+  def topKEvents(seed: Int): org.apache.spark.sql.DataFrame =
+    (randomEvents(seed) ++
+      (1L to 4L).flatMap(u => Seq((u, 97L, u.toDouble), (u, 98L, u.toDouble))) :+
+      ((99L, 99L, 4.0))).toDF("userid", "itemid", "rating")
+
+  /** Each user's rows of a full sweep, ranked (score desc, item asc), cut at k. */
+  def rankedCut(full: org.apache.spark.sql.DataFrame,
+      k: Int): Map[Long, Seq[(Long, Double)]] =
+    full.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).map { case (u, rs) =>
+        u -> rs.sortBy(x => (-x._3, x._2)).take(k).map(x => (x._2, x._3))
+      }
+
+  /** `got` (rows in emitted order) equals `want`: the same (user, item)
+    * sequence per user, scores within 1e-9.
+    */
+  def sameCut(got: Seq[(Long, Long, Double)], want: Map[Long, Seq[(Long, Double)]],
+      clue: String): Unit = withClue(clue) {
+    val byUser = got.groupBy(_._1).map { case (u, rs) => u -> rs.map(x => (x._2, x._3)) }
+    byUser.keySet shouldBe want.keySet
+    want.foreach { case (u, w) =>
+      withClue(s"user $u: ") {
+        byUser(u).map(_._1) shouldBe w.map(_._1)
+        byUser(u).zip(w).foreach { case (g, x) => g._2 shouldBe x._2 +- 1e-9 }
+      }
+    }
+  }
+
+  test("top-k kernel == full sweep ranked (score desc, item asc) and cut at k") {
+    val items = 13 // 10 random + 97, 98, 99
+    for (seed <- 1 to 2) {
+      val df = topKEvents(seed)
+      for ((m, model) <- Seq(
+          "itemCos" -> Similarity.itemCosine(df, c, "join"),
+          "itemPear" -> Similarity.itemPearson(df, c, "join"),
+          "userCos" -> Similarity.userCosine(df, c, "join"),
+          "userPear" -> Similarity.userPearson(df, c, "join"))) {
+        val cached = model.cache()
+        def sweep(topK: Option[Int]) =
+          if (m.startsWith("item"))
+            Scoring.itemScores(df, cached, c, None, "dense", None, None, topK)
+          else Scoring.userScores(df, cached, c, None, "dense", None, None, topK)
+        val full = sweep(None).cache()
+        if (m == "itemCos") {
+          // the edge cases are there: a model-less item, an all-zero user
+          cached.where($"item1" === 99L || $"item2" === 99L).count() shouldBe 0L
+          full.where($"userid" === 99L && $"score" =!= 0.0).count() shouldBe 0L
+        }
+        for (k <- Seq(1, 3, items, items + 5)) {
+          val got = sweep(Some(k)).collect().toSeq
+            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          sameCut(got, rankedCut(full, k), s"$m seed $seed k $k: ")
+        }
+        full.unpersist(); cached.unpersist()
+      }
+    }
+  }
+
+  test("materializeView(topK) == the full sweep ranked and cut, every CF method") {
+    val df = topKEvents(3)
+    val base = java.nio.file.Files.createTempDirectory("graft-topk").toString
+    val cat = new RecCatalog(s"$base/catalog")
+    for (m <- Seq("itemcoscf", "itempearcf", "usercoscf", "userpearcf"); k <- Seq(2, 20)) {
+      val name = s"tk_${m}_$k"
+      Recommender.create(spark, name, df, name, c, m, cat, s"$base/models")
+      val path = Recommender.materializeView(spark, name, df, cat, s"$base/views",
+        topK = Some(k))
+      val full = Recommender.recommend(spark, df, name, c, m, Some(cat),
+        serveFromView = false)
+      // the view's rows, each user's in the order its file holds them
+      val got = spark.read.parquet(path).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      sameCut(got, rankedCut(full, k), s"$m k $k: ")
+      Recommender.drop(name, cat)
+    }
+  }
+
   test("restricted build == full build filtered to pairs touching the keys") {
     for (seed <- 1 to 3; keys <- Seq(Seq(1L), Seq(2L, 5L, 7L))) {
       val df = randomEvents(seed).toDF("userid", "itemid", "rating")

@@ -505,33 +505,27 @@ class RecommenderSpec extends SparkSpec {
     // the denser fixture takes the dense build and dense scoring, as the
     // serving benchmark's corpus does
     val r = parquetEvents(denser)
+    // CREATE: the corpus-stats aggregation (3), the build kernel's collect
+    // (2) and the model write (1); the view: the scoring kernel's collect
+    // (2), its user shuffle (1) and the write (1)
     jobsRunBy(Recommender.create(spark, "jb", r, "tbljb", c, "itemcoscf",
-      cat, models)) should be <= 12
+      cat, models)) should be <= 6
     jobsRunBy(Recommender.materializeView(spark, "jb", r, cat,
-      models + "/views", topK = Some(3))) should be <= 9
+      models + "/views", topK = Some(3))) should be <= 4
     jobsRunBy(Recommender.recommendTopK(spark, r, "tbljb", c, "itemcoscf",
       Some(cat), userId = 1L, k = 2).collect()) shouldBe 1
   }
 
-  test("dense build: both sides of the pair join share one vector aggregation") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _ => p.children.flatMap(nodes)
-    })
+  test("dense build: one pass over the events (rows read == event count)") {
     val r = parquetEvents(denser)
-    Seq(Similarity.itemCosine(r, c, "dense"),
-        Similarity.userPearson(r, c, "dense")).foreach { m =>
-      m.collect()
-      val all = nodes(m.queryExecution.executedPlan)
-      all.count {
-        case x: ShuffleExchangeExec => x.toString.contains("graft_dense_vec_agg")
-        case _ => false
-      } shouldBe 1
-      all.exists(_.isInstanceOf[ReusedExchangeExec]) shouldBe true
+    val events = r.count()
+    Seq("itemcoscf", "itempearcf", "usercoscf", "userpearcf").foreach { m =>
+      val (rows, t) = graft.Trace.run(spark.sparkContext)(
+        Similarity.model(RecMethod.parse(m), r, c, "dense").collect())
+      withClue(s"$m: ") {
+        rows.length should be > 0
+        t.rowsRead shouldBe events
+      }
     }
   }
 
