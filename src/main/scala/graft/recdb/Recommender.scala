@@ -391,11 +391,11 @@ object Recommender {
         // strategy pick pure (no jobs at plan-construction/EXPLAIN time)
         val stats = hit.flatMap(_.scoreStats)
         if (RecMethod.isUserBased(m))
-          Scoring.userScores(events, model, c, users, "auto", stats,
-            scoredUsersHint, topK)
+          Scoring.userCF(events, model, c, users, stats = stats,
+            scoredUsersHint = scoredUsersHint, topK = topK)
         else
-          Scoring.itemScores(events, model, c, users, "auto", stats,
-            scoredUsersHint, topK)
+          Scoring.itemCF(events, model, c, users, stats = stats,
+            scoredUsersHint = scoredUsersHint, topK = topK)
     }
   }
 
@@ -416,8 +416,10 @@ object Recommender {
     DenseKernels.releasing {
       // re-materialization must COMPUTE, not read the view it is about to
       // replace; it counts as a query of the recommender (R18), as a
-      // `recommend` call does
-      val hit = bumpQueryCounter(catalog, name)
+      // `recommend` call does; a recommender dropped since the lookup above
+      // has no model to score with
+      val hit = bumpQueryCounter(catalog, name).orElse(
+        throw new IllegalArgumentException(s"unknown recommender: $name"))
       val scores = recommendCompute(spark, events, c, e.method, hit,
         users = None, scoredUsersHint = None, topK)
       // cluster by user on write: every user's rows land in one partition,

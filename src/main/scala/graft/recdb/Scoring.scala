@@ -67,19 +67,13 @@ object Scoring {
 
   /** itemCF: score(u,i) = Σ_{j∈rated(u)} sim(i,j)·r(u,j) / Σ|sim|
     * (recathon.c:4235-4295). Item with no rated neighbors → 0 (recathon.c:4291).
+    * With `topK`, each user's k best ([[best]]).
     */
   def itemCF(ratings: DataFrame, itemModel: DataFrame,
       c: EventCols = EventCols(), users: Option[DataFrame] = None,
       strategy: String = "auto", stats: Option[ScoreStats] = None,
-      scoredUsersHint: Option[Long] = None): DataFrame =
-    itemScores(ratings, itemModel, c, users, strategy, stats, scoredUsersHint,
-      topK = None)
-
-  /** [[itemCF]], cut to each user's `topK` best ([[best]]) when given. */
-  private[recdb] def itemScores(ratings: DataFrame, itemModel: DataFrame,
-      c: EventCols, users: Option[DataFrame], strategy: String,
-      stats: Option[ScoreStats], scoredUsersHint: Option[Long],
-      topK: Option[Int]): DataFrame = {
+      scoredUsersHint: Option[Long] = None,
+      topK: Option[Int] = None): DataFrame = {
     val uRatings = restrict(ratings, users, c)
     if (pickDense(ratings, users, itemModel, c.item, c, strategy, stats,
         scoredUsersHint))
@@ -112,9 +106,13 @@ object Scoring {
     * (itemCF: the items × items similarity matrix; userCF: each item's
     * raters over the user index), so the payload is ≤ items × dims cells —
     * bounding only the width would let an unbounded item count push the
-    * broadcast to TBs. 2²⁴ cells is 134 MB as the itemCF matrix (8 B a
-    * cell) and at most 335 MB as userCF's rater rows (20 B a rated cell:
-    * slot, rating sum, event count), inside executor memory.
+    * broadcast to TBs. A task holds 2²⁴ cells as 134 MB of itemCF matrix
+    * (8 B a cell) or at most 335 MB of userCF rater rows (20 B a rated
+    * cell: slot, rating sum, event count). The driver holds more at its
+    * peak, the collected bytes or the serialized broadcast copy beside the
+    * blocks (measured on incompressible random values): ≈ 32 B a rated
+    * cell for userCF, ≈ 540 MB at the cap; for itemCF the matrix twice
+    * plus the model's edges at 12 B each, ≈ 20 B a matrix cell.
     */
   private val DenseBroadcastCells = 1L << 24
 
@@ -214,20 +212,14 @@ object Scoring {
   /** userCF: score(u,i) = ū + Σ_{v∈raters(i)} sim(u,v)·(r(v,i) − ū) / Σ|sim|,
     * where ū is **u's own** average — the reference's documented quirk vs the
     * standard Resnick formula (recathon.c:4349-4360, SURVEY.md §2.1 R13).
-    * No similar raters → 0.0, not ū (recathon.c:4357).
+    * No similar raters → 0.0, not ū (recathon.c:4357). With `topK`, each
+    * user's k best ([[best]]).
     */
   def userCF(ratings: DataFrame, userModel: DataFrame,
       c: EventCols = EventCols(), users: Option[DataFrame] = None,
       strategy: String = "auto", stats: Option[ScoreStats] = None,
-      scoredUsersHint: Option[Long] = None): DataFrame =
-    userScores(ratings, userModel, c, users, strategy, stats, scoredUsersHint,
-      topK = None)
-
-  /** [[userCF]], cut to each user's `topK` best ([[best]]) when given. */
-  private[recdb] def userScores(ratings: DataFrame, userModel: DataFrame,
-      c: EventCols, users: Option[DataFrame], strategy: String,
-      stats: Option[ScoreStats], scoredUsersHint: Option[Long],
-      topK: Option[Int]): DataFrame = {
+      scoredUsersHint: Option[Long] = None,
+      topK: Option[Int] = None): DataFrame = {
     val uRatings = restrict(ratings, users, c)
     if (pickDense(ratings, users, userModel, c.user, c, strategy, stats,
         scoredUsersHint))

@@ -91,7 +91,11 @@ object Similarity {
   /** Ceiling on the dense build's cells (entities × dims): the kernel's
     * driver-collected lists and its one broadcast hold at most this many
     * (slot, value) cells, so 'auto' keeps them inside driver and executor
-    * memory — 2²⁴ cells ≈ 200 MB at 12 B each.
+    * memory. The driver's peak is ≈ 24 B a cell — the collected bytes
+    * beside the decoded 12 B cells, then the cells beside their serialized
+    * broadcast copy (measured on incompressible random values; integer
+    * ratings compress to ≈ 17 B) — so ≈ 400 MB at 2²⁴ cells; a task holds
+    * the 12 B cells.
     */
   val DenseVecCells: Long = 1L << 24
 

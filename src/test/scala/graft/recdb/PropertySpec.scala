@@ -128,8 +128,8 @@ class PropertySpec extends SparkSpec {
         val cached = model.cache()
         def sweep(topK: Option[Int]) =
           if (m.startsWith("item"))
-            Scoring.itemScores(df, cached, c, None, "dense", None, None, topK)
-          else Scoring.userScores(df, cached, c, None, "dense", None, None, topK)
+            Scoring.itemCF(df, cached, c, strategy = "dense", topK = topK)
+          else Scoring.userCF(df, cached, c, strategy = "dense", topK = topK)
         val full = sweep(None).cache()
         if (m == "itemCos") {
           // the edge cases are there: a model-less item, an all-zero user

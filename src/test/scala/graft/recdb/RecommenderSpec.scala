@@ -529,6 +529,28 @@ class RecommenderSpec extends SparkSpec {
     }
   }
 
+  test("identical on-the-fly queries share one cached dense-built model and its strategy picks") {
+    Similarity.clearStrategyCache()
+    val r = parquetEvents(denser)
+    def query() = graft.Trace.run(spark.sparkContext)(
+      rows(Recommender.recommend(spark, r, "tblfly", c, "itemcoscf")))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (first, t1) = query()
+    val cached = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    cached.size shouldBe 1
+    val memos = (Similarity.strategyMemo.size, Similarity.statsMemo.size)
+    val (second, t2) = query()
+    second shouldBe first
+    // the second query's model is the first one's cache entry, and the
+    // scoring pick is answered by the memo: no stats jobs, no new entry
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before) shouldBe cached
+    (Similarity.strategyMemo.size, Similarity.statsMemo.size) shouldBe memos
+    t2.jobs should be < t1.jobs
+    Similarity.model(RecMethod.ItemCosCF, r, c).queryExecution.analyzed.toString should
+      include("dense_kernel")
+    cached.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+  }
+
   test("CREATE of a dense-built model leaves no cached frame behind") {
     val (cat, models) = freshDirs()
     val before = spark.sparkContext.getPersistentRDDs.keySet
